@@ -6989,15 +6989,6 @@ def _drain_handle_batch(name, pdf):
     return pdf
 
 
-# State/chunking shuffle partition count for the full-topology drains
-# (pipeline_topology_drain, l5_spans) — r15, r14 verdict item 2: the
-# drain anti-scaled (0.76 at 8-vs-32 cores) because the default 32
-# state partitions pay per-partition store init/commit for a ~20-key
-# (batcher, batch_key) space. 8 is the restart family's convention;
-# module-level so scripts/ab_qtime.py can A/B it (--values 8,32).
-_TOPO_DRAIN_STATE_PARTITIONS = 8
-
-
 def q_pipeline_topology_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE STREAMING ROUTER ON THE ORACLE GATE: a full Broadway
     topology — file-stream source → transformer → handle_message
@@ -7104,16 +7095,14 @@ def q_pipeline_topology_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_dir=d("ckpt"),
         handle_batch=_drain_handle_batch,
         handle_failed=lambda pdf: pdf,  # identity, exercises the hook path
-        # r15 (r14 verdict item 2 — this drain anti-scaled 0.76 at
-        # 8-vs-32 cores): pin the state/chunking shuffle partitions to
-        # the restart family's convention instead of the default 32.
-        # The distinct (batcher, batch_key) space is ~20 keys, so 32
-        # state partitions paid per-partition store init/commit for
-        # mostly-empty shards, growing with concurrent task count.
-        # Results are partition-count invariant: chunk assignment is a
-        # window ordered by event_id within (batcher, batch_key) and
-        # every summary value is a count or decimal-exact sum.
-        state_partitions=_TOPO_DRAIN_STATE_PARTITIONS,
+        # Run the router's chunk windows and handle_batch pass at the
+        # restart family's 8 partitions instead of the default 32: the
+        # distinct (batcher, batch_key) space is ~20 keys, and each
+        # Python-UDF task pays a fixed worker cost. Results are
+        # partition-count invariant: chunk assignment is a window
+        # ordered by event_id within (batcher, batch_key) and every
+        # summary value is a count or decimal-exact sum.
+        state_partitions=8,
     )
     q = Pipeline(cfg, src).start(spark, trigger="availableNow")
     try:
@@ -7286,11 +7275,12 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pinned_state_partitions(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions around a streaming-query start
-    (the query captures the conf then; restore after). Stateful gate
-    drains carry a per-partition state-store init/commit cost PER
-    micro-batch that dwarfs the data at gate scale — measured on the
-    r6 restart joins: 32→8 partitions took s17 18.6→4.3 s and s16
+    """Pin spark.sql.shuffle.partitions around a raw writeStream query
+    start (the query captures the conf then; restore after). Pipeline
+    queries take the width from TopologyConfig.state_partitions instead.
+    Stateful gate drains carry a per-partition state-store init/commit
+    cost PER micro-batch that dwarfs the data at gate scale — measured
+    on the r6 restart joins: 32→8 partitions took s17 18.6→4.3 s and s16
     11.6→4.7 s at sf0.1. At 100 TB the same knob sizes state shards
     to the cluster (state_partitions in TopologyConfig); 8 matches the
     gate's tiny key space, the convention s9/s10/s15/s18 already use."""
@@ -8128,12 +8118,12 @@ def q_f2_rate_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by="event_id",
         ack_log=SinkConfig(path=f"{base}/ack"),
         checkpoint_dir=f"{base}/ckpt",
+        state_partitions=8,
     )
     n_expected = len(records)
-    with _pinned_state_partitions(spark):
-        q = Pipeline(cfg, src).start(
-            spark, trigger="processingTime", processing_time="100 milliseconds"
-        )
+    q = Pipeline(cfg, src).start(
+        spark, trigger="processingTime", processing_time="100 milliseconds"
+    )
     try:
         # Progress-based wait (r10): numInputRows summed over committed
         # micro-batches == rows admitted AND durably processed (a
@@ -8246,11 +8236,11 @@ def q_f4_rate_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by="event_id",
         ack_log=SinkConfig(path=f"{base}/ack"),
         checkpoint_dir=f"{base}/ckpt",
+        state_partitions=8,
     )
-    with _pinned_state_partitions(spark):
-        q = Pipeline(cfg, src).start(
-            spark, trigger="processingTime", processing_time="100 milliseconds"
-        )
+    q = Pipeline(cfg, src).start(
+        spark, trigger="processingTime", processing_time="100 milliseconds"
+    )
     try:
         # Progress-based waits (r10, replaces the parquet re-count
         # polling that launched a Spark job per 0.5 s poll): a
@@ -9021,11 +9011,11 @@ def q_l5_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         handle_failed=lambda pdf: pdf,
         checkpoint_dir=os.path.join(base, "ckpt"),
         telemetry=rec,
-        # r15: same state-partition pin as pipeline_topology_drain —
-        # ~20 distinct (batcher, batch_key) values; spans are emitted
-        # per micro-batch on the driver, never per partition, so the
-        # span counts (the query result) are partition-count invariant.
-        state_partitions=_TOPO_DRAIN_STATE_PARTITIONS,
+        # Same width as pipeline_topology_drain — ~20 distinct
+        # (batcher, batch_key) values; spans are emitted per micro-batch
+        # on the driver, never per partition, so the span counts (the
+        # query result) are partition-count invariant.
+        state_partitions=8,
     )
     Pipeline(cfg, src).run_to_completion(spark, timeout_s=240)
 
@@ -9420,16 +9410,16 @@ def q_s14_restart_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_dir=d("ckpt"),
         handle_batch=_drain_handle_batch,
         handle_failed=lambda pdf: pdf,
+        # Both phases run at 8 shuffle partitions: the router's chunking
+        # windows shuffle per batcher per micro-batch, and at gate scale
+        # 32-task overhead dominates (measured 13.7 -> 8.7 s warm).
+        state_partitions=8,
     )
     # Phase 1: run at a 1 s cadence (one file per trigger), kill after
     # the first committed batch — mid-stream, files outstanding.
-    # Both phases pin 8 shuffle partitions: the router's chunking
-    # windows shuffle per batcher per micro-batch, and at gate scale
-    # 32-task overhead dominates (measured 13.7 -> 8.7 s warm).
-    with _pinned_state_partitions(spark):
-        q = Pipeline(cfg, src).start(
-            spark, trigger="processingTime", processing_time=_RESTART_KILL_TRIGGER
-        )
+    q = Pipeline(cfg, src).start(
+        spark, trigger="processingTime", processing_time=_RESTART_KILL_TRIGGER
+    )
     _kill_mid_drain(q)
     # Phase 2: resume from the checkpoint and drain what remains —
     # WITHOUT the 1-file-per-trigger cadence (r12 verdict item 5).
@@ -9439,8 +9429,7 @@ def q_s14_restart_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resume batch is oracle-identical by construction and saves the
     # per-batch state-store/commit floor on m-2 batches.
     src_resume = FileStreamSource("events", watch, schema)
-    with _pinned_state_partitions(spark):
-        q2 = Pipeline(cfg, src_resume).start(spark, trigger="availableNow")
+    q2 = Pipeline(cfg, src_resume).start(spark, trigger="availableNow")
     try:
         if not q2.awaitTermination(600):
             raise RuntimeError("s14 resume did not complete in 600s")
@@ -9927,17 +9916,16 @@ def q_f3_restart_spool(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_by="event_id",
         ack_log=SinkConfig(path=f"{base}/ack", idempotent=True),
         checkpoint_dir=f"{base}/ckpt",
+        state_partitions=8,
     )
     n_expected = len(records)
-    with _pinned_state_partitions(spark):
-        q = Pipeline(cfg, src).start(
-            spark, trigger="processingTime", processing_time=_RESTART_KILL_TRIGGER
-        )
+    q = Pipeline(cfg, src).start(
+        spark, trigger="processingTime", processing_time=_RESTART_KILL_TRIGGER
+    )
     _kill_mid_drain(q)
-    with _pinned_state_partitions(spark):
-        q2 = Pipeline(cfg, src).start(
-            spark, trigger="processingTime", processing_time="200 milliseconds"
-        )
+    q2 = Pipeline(cfg, src).start(
+        spark, trigger="processingTime", processing_time="200 milliseconds"
+    )
     try:
         _await_acks(
             spark, q2, f"{base}/ack", n_expected, label="f3 resume"

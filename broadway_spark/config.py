@@ -210,12 +210,14 @@ class TopologyConfig:
     # Broadway span catalogue (broadway.ex:651-887). None = no span
     # accounting (zero overhead).
     telemetry: Any | None = None
-    # Shuffle/state-store partition count for stateful queries. Unlike
-    # joins/aggs, stateful operators can't rely on AQE: the state store
-    # shards by the shuffle partitioning fixed at first run. Size it to
-    # the expected distinct (batcher, batch_key) cardinality / executor
-    # count; a vanilla session's 200 is pathological for small key
-    # spaces.
+    # Width of every shuffle in the pipeline's query, on both start
+    # paths (Pipeline.start/run_to_completion and start_stateful): the
+    # router's chunk windows and handle_batch pass, and the stateful
+    # batcher's state-store shards. The checkpoint records it at the
+    # first start, so a restart keeps the recorded value. Size it to the
+    # executor cores and the distinct (batcher, batch_key) cardinality:
+    # each Python-UDF task pays a fixed worker cost, and a vanilla
+    # session's 200 is pathological for small key spaces.
     state_partitions: int = 32
     # Column giving the deterministic intra-key processing order (the
     # arrival-order stand-in; Broadway relies on mailbox order,
@@ -230,6 +232,13 @@ class TopologyConfig:
             "invalid value for :name option: expected non-empty string",
         )
         self.processors.validate()
+        _require(
+            isinstance(self.state_partitions, int)
+            and not isinstance(self.state_partitions, bool)
+            and self.state_partitions > 0,
+            "invalid value for :state_partitions option: expected "
+            "positive integer",
+        )
         for bname, b in self.batchers.items():
             _require(
                 isinstance(bname, str) and bname != "",

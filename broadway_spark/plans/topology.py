@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from broadway_spark import message as M
 from broadway_spark.config import ConfigError, TopologyConfig
@@ -162,12 +162,41 @@ class Pipeline:
                 {"config": self.topology()},
             )
 
+    def _start_query(
+        self, spark: SparkSession, writer: DataStreamWriter
+    ) -> StreamingQuery:
+        """Start ``writer`` with ``spark.sql.shuffle.partitions`` pinned
+        to ``state_partitions``, then restore the session value.
+
+        The query clones the session conf when it starts, and its
+        checkpoint records the width at the first batch. Every shuffle
+        in the query runs at that width: the router's chunk windows and
+        ``handle_batch`` pass read it from ``batch_df.sparkSession``,
+        and the stateful batcher shards its state store by it.
+        """
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)  # effective value
+        spark.conf.set(key, str(self.config.state_partitions))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
     def start(
         self,
         spark: SparkSession,
         trigger: str = "availableNow",
         processing_time: str | None = None,
     ) -> StreamingQuery:
+        """Run the stateless router: one streaming query whose
+        foreachBatch chunks, runs ``handle_batch``/``handle_failed``,
+        and writes the sinks, DLQ and ack log per micro-batch.
+
+        Every shuffle in the query runs at ``state_partitions``
+        partitions. A fresh checkpoint records that width at its first
+        batch; a restart from an existing checkpoint keeps the recorded
+        width whatever the config says now.
+        """
         cfg = self.config
         if cfg.checkpoint_dir is None:
             raise ConfigError("checkpoint_dir is required to start a pipeline")
@@ -182,7 +211,7 @@ class Pipeline:
             writer = writer.trigger(processingTime=processing_time or "0 seconds")
         else:
             raise ConfigError(f"unknown trigger {trigger!r}")
-        return writer.queryName(cfg.name).start()
+        return self._start_query(spark, writer.queryName(cfg.name))
 
     def start_stateful(
         self,
@@ -392,20 +421,13 @@ class Pipeline:
             finally:
                 batch_df.unpersist()
 
-        # Pin the state-store partition count for this query: the query
-        # captures the conf at start; restore the session value after.
-        prev = spark.conf.get("spark.sql.shuffle.partitions")  # effective value
-        spark.conf.set("spark.sql.shuffle.partitions", cfg.state_partitions)
-        try:
-            return (
-                batched.writeStream.foreachBatch(sink_writer)
-                .option("checkpointLocation", cfg.checkpoint_dir)
-                .trigger(processingTime=processing_time)
-                .queryName(f"{cfg.name}-stateful")
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return self._start_query(
+            spark,
+            batched.writeStream.foreachBatch(sink_writer)
+            .option("checkpointLocation", cfg.checkpoint_dir)
+            .trigger(processingTime=processing_time)
+            .queryName(f"{cfg.name}-stateful"),
+        )
 
     def run_to_completion(self, spark: SparkSession, timeout_s: int = 300) -> None:
         """Drain everything currently available, then stop — the

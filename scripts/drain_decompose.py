@@ -70,9 +70,6 @@ def main() -> None:
 
     entry._stage_event_files = stage_patched
 
-    orig_start = sq.DataStreamWriter.start if hasattr(
-        sq, "DataStreamWriter"
-    ) else None
     import pyspark.sql.streaming.readwriter as srw
 
     orig_ws_start = srw.DataStreamWriter.start

@@ -25,6 +25,13 @@ def test_processor_concurrency_positive():
         ).validate()
 
 
+@pytest.mark.parametrize("bad", [0, -2, "8", 2.0, None, True])
+def test_state_partitions_positive_int(bad):
+    # a bad width used to reach spark.conf.set only at query start
+    with pytest.raises(ConfigError, match=":state_partitions"):
+        TopologyConfig(name="p", state_partitions=bad).validate()
+
+
 def test_batch_size_positive():
     with pytest.raises(ConfigError, match=":batch_size"):
         TopologyConfig(
