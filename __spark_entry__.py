@@ -8446,7 +8446,7 @@ def q_s9_stateful_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_partitions=8,
     )
     q = Pipeline(cfg, src).start_stateful(
-        spark, processing_time="250 milliseconds", impl="v1"
+        spark, processing_time="250 milliseconds"
     )
     # Drain protocol: every input row acks exactly once (full chunks
     # immediately, remainders via their key timers) — poll the ack log
@@ -9564,7 +9564,7 @@ def q_s15_restart_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Phase 1: kill after the first committed batch (state store holds
     # per-key remainders; later files unread).
     q = Pipeline(cfg, src).start_stateful(
-        spark, processing_time=_RESTART_KILL_TRIGGER, impl="v1"
+        spark, processing_time=_RESTART_KILL_TRIGGER
     )
     _kill_mid_drain(q)
     # Phase 2: resume from the checkpoint; the restored buffers absorb
@@ -9577,7 +9577,7 @@ def q_s15_restart_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # commit round.
     src_resume = FileStreamSource("events", watch, schema)
     q2 = Pipeline(cfg, src_resume).start_stateful(
-        spark, processing_time="250 milliseconds", impl="v1"
+        spark, processing_time="250 milliseconds"
     )
     try:
         _await_acks(spark, q2, d("ack"), expected, label="s15 resume")
@@ -10051,15 +10051,6 @@ def q_s18_restart_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TRI_TOPK = 10  # ranked vertices reported by graph_triangles
 
-# Whether _co_order_triangles materializes its pp/deg auxiliary tables
-# (the r14 §4 change). Module-level so scripts/ab_qtime.py can flip it
-# for interleaved same-window A/Bs; the shipped value is the measured
-# winner (OPTIMIZATION_r15.md). The edge table `e` stays materialized
-# unconditionally — it feeds the wedge join twice plus the closure
-# join and was a win before r14.
-_TRI_AUX_BARRIERS = True
-
-
 def _co_order_triangles(spark: SparkSession, sf_dir: str):
     """Shared graph prefix for the triangle-family queries: the
     parts-co-ordered edge set (canonical u < v, MATERIALIZED once —
@@ -10074,15 +10065,14 @@ def _co_order_triangles(spark: SparkSession, sf_dir: str):
     # otherwise re-scans lineitem + re-runs the distinct); deg feeds
     # the orientation join twice here plus two more consumers in
     # q_graph_edge_strength's Jaccard denominators — each would re-run
-    # the 2|E|-row union + aggregate from the edge cache. r15: the
-    # module toggle exists only for interleaved same-window A/Bs
-    # (scripts/ab_qtime.py); the shipped value reflects the measured
-    # winner (OPTIMIZATION_r15.md).
+    # the 2|E|-row union + aggregate from the edge cache. Both won a
+    # same-window A/B against recomputing (OPTIMIZATION_r15.md §2).
+    # The edge table `e` feeds the wedge join twice plus the closure
+    # join.
     pp = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     ).distinct()
-    if _TRI_AUX_BARRIERS:
-        pp = materialize(pp, "tri_pp")
+    pp = materialize(pp, "tri_pp")
     e = materialize(
         pp.alias("a")
         .join(
@@ -10100,8 +10090,7 @@ def _co_order_triangles(spark: SparkSession, sf_dir: str):
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    if _TRI_AUX_BARRIERS:
-        deg = materialize(deg, "tri_deg")
+    deg = materialize(deg, "tri_deg")
     ed = (
         e.join(deg.select(F.col("x").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("x").alias("v"), F.col("d").alias("dv")), "v")

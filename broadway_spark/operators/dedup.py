@@ -1013,24 +1013,13 @@ def _clusters_label_prop(
     )
 
 
-# Default for jaccard_pairs_prefix_filter(materialize_base=None):
-# opt-IN (r15, r14 verdict item 1) — the blanket r14 barrier lost for
-# callers whose tokens column is a stored column or cheap projection
-# (pipeline_curation_funnel −1.6 s with it off, same-window interleaved
-# A/B) and only pays when the tokens subtree is expensive to recompute
-# (dedup_char_ngram's gram explode + md5: +2.2 s with it off).
-# Module-level so a measurement harness can flip it for interleaved
-# same-window A/Bs without editing call sites (scripts/ab_qtime.py).
-MATERIALIZE_BASE_DEFAULT = False
-
-
 def jaccard_pairs_prefix_filter(
     docs: DataFrame,
     id_col: str,
     tokens_col: str,
     threshold: float,
     block_cols: list[str] | None = None,
-    materialize_base: bool | None = None,
+    materialize_base: bool = False,
 ) -> DataFrame:
     """EXACT token-set Jaccard pairs ≥ threshold via prefix filtering
     (the AllPairs/PPJoin candidate bound — Bayardo et al., WWW'07),
@@ -1078,8 +1067,6 @@ def jaccard_pairs_prefix_filter(
     # stored column or a cheap projection, the persist+count pass
     # costs more than the recompute it saves (measured r15 — see
     # OPTIMIZATION_r15.md), so callers opt in per site.
-    if materialize_base is None:
-        materialize_base = MATERIALIZE_BASE_DEFAULT
     if materialize_base:
         base = materialize(base, "ppjoin_base")
 

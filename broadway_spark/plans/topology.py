@@ -27,7 +27,8 @@ from broadway_spark.operators.partitioning import (
     partition_by_label,
     resolve_partition_expr,
 )
-from broadway_spark.streaming.router import build_router
+from broadway_spark.streaming.router import _write, _write_acks, build_router
+from broadway_spark.streaming.stateful_batcher import stateful_batch_stream
 
 
 def all_running(spark: SparkSession) -> list[str]:
@@ -217,22 +218,15 @@ class Pipeline:
         self,
         spark: SparkSession,
         processing_time: str = "500 milliseconds",
-        impl: str = "v1",
     ) -> StreamingQuery:
         """Run with the *stateful* batcher: cross-micro-batch buffers +
-        per-key timeout timers (``streaming/stateful_batcher.py``) — the
-        faithful B2/B3 semantics. Requires integer batch sizes.
-
-        ``impl='v1'`` uses ``applyInPandasWithState``; ``impl='tws'``
-        uses Spark 4's ``transformWithStateInPandas`` (typed composite
-        state + named timers, ``streaming/stateful_batcher_v2.py``) —
-        identical output contract. ``impl='auto'`` picks ``tws`` when
-        the environment can run it (PySpark's transformWithState state
-        protocol needs the protobuf package) and otherwise falls back
-        to ``v1`` with a loud warning — same semantics either way.
+        per-key timeout timers (``streaming/stateful_batcher.py``,
+        ``applyInPandasWithState``) — the faithful B2/B3 semantics.
+        Requires integer batch sizes.
 
         The stateful stage does the chunking; foreachBatch only fans
-        chunks out to sinks and appends the ack log.
+        chunks out to sinks and DLQ, then appends the ack log and calls
+        the ack executor exactly as the stateless router does.
         """
         cfg = self.config
         if cfg.checkpoint_dir is None:
@@ -244,53 +238,6 @@ class Pipeline:
                     f"stateful batching requires integer batch_size "
                     f"(batcher {name!r})"
                 )
-        from broadway_spark.streaming.router import _write
-
-        if impl == "auto":
-            from broadway_spark.streaming.stateful_batcher_v2 import (
-                tws_available,
-            )
-
-            if tws_available():
-                impl = "tws"
-            else:
-                import warnings
-
-                warnings.warn(
-                    "stateful batcher impl='auto': transformWithState "
-                    "unavailable (no protobuf in this environment); "
-                    "falling back to the applyInPandasWithState v1 "
-                    "implementation (identical output contract)",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                impl = "v1"
-        if impl == "tws":
-            from broadway_spark.streaming.stateful_batcher_v2 import (
-                stateful_batch_stream_v2 as stateful_batch_stream,
-                tws_available,
-            )
-
-            if not tws_available():
-                raise ConfigError(
-                    "impl='tws' needs the protobuf package (PySpark's "
-                    "transformWithState state-server protocol); this "
-                    "environment lacks it — use impl='v1'"
-                )
-            # transformWithState requires the RocksDB state store (typed
-            # column-family state); the default HDFS-backed provider
-            # crashes the TWS driver worker at schema validation.
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        elif impl == "v1":
-            from broadway_spark.streaming.stateful_batcher import (
-                stateful_batch_stream,
-            )
-        else:
-            raise ConfigError(f"unknown stateful batcher impl {impl!r}")
 
         stream = self.build_stream(spark)
         batched = stateful_batch_stream(
@@ -384,11 +331,8 @@ class Pipeline:
                         ackable,
                         F.when(F.col("status_ok"), "ok").otherwise("failed"),
                     )
-                    exec_acks = acks
                     if cfg.ack_executor is not None and has_policy:
-                        # executor-only retry signals (never logged):
-                        # per-message-ack brokers fast-track redelivery
-                        exec_acks = acks.unionByName(
+                        acks = acks.unionByName(
                             _ack_select(
                                 batch_df.filter(
                                     ~F.col("status_ok")
@@ -397,27 +341,7 @@ class Pipeline:
                                 F.lit("retry"),
                             )
                         )
-                    if cfg.ack_executor is not None:
-                        exec_acks = exec_acks.persist()
-                    try:
-                        if cfg.ack_log is not None:
-                            logged = (
-                                exec_acks.filter(F.col("outcome") != "retry")
-                                if cfg.ack_executor is not None
-                                else acks
-                            )
-                            _write(
-                                logged, cfg.ack_log.path,
-                                cfg.ack_log.format, batch_id,
-                                cfg.ack_log.idempotent,
-                            )
-                        if cfg.ack_executor is not None:
-                            # A1 connector bulk ack (acknowledger.ex:
-                            # 63-85) — e.g. SQS per-message deletes.
-                            cfg.ack_executor(exec_acks, batch_id)
-                    finally:
-                        if cfg.ack_executor is not None:
-                            exec_acks.unpersist()
+                    _write_acks(cfg, acks, batch_id)
             finally:
                 batch_df.unpersist()
 

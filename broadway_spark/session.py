@@ -17,6 +17,57 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 
+# Well-known locations where a pure-Python ``google.protobuf`` runtime
+# ships with other system tooling. Probed only when the package is not
+# installed normally: we add the directory to sys.path (and PYTHONPATH
+# so Spark's Python workers inherit it) rather than copying any code.
+_PROTOBUF_FALLBACK_PATHS = (
+    "/usr/lib/google-cloud-sdk/platform/google_appengine",
+)
+
+
+def enable_tws_compat() -> str | None:
+    """Make ``google.protobuf`` importable if at all possible.
+
+    Returns the fallback path used, or None (either protobuf already
+    imports, or no fallback exists). When a fallback runtime is one
+    minor version behind PySpark's generated code, protobuf's own
+    escape hatch (``TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK``) is
+    set — the wire format is unchanged across a minor release, and
+    this is loudly recorded here rather than silently monkey-patched.
+
+    Must run before the SparkSession (JVM) starts so executor Python
+    workers inherit PYTHONPATH; ``builder`` calls it. The
+    transformWithState operators (``streaming/stateful_dedup.py``,
+    ``quality_gate.py``, ``stream_anti_join.py``) need it.
+    """
+    try:
+        from google.protobuf import descriptor  # noqa: F401
+
+        return None
+    except ImportError:
+        pass
+    import sys
+
+    for p in _PROTOBUF_FALLBACK_PATHS:
+        if os.path.isdir(os.path.join(p, "google", "protobuf")):
+            if p not in sys.path:
+                sys.path.insert(0, p)
+            try:
+                from google.protobuf import descriptor  # noqa: F401
+            except ImportError:
+                sys.path.remove(p)
+                continue
+            os.environ["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
+            existing = os.environ.get("PYTHONPATH", "")
+            if p not in existing.split(os.pathsep):
+                os.environ["PYTHONPATH"] = (
+                    p + (os.pathsep + existing if existing else "")
+                )
+            return p
+    return None
+
+
 def builder(app_name: str = "broadway-spark", cpus: str | int | None = None):
     """Return a SparkSession.Builder with the engine's standard config.
 
@@ -34,8 +85,6 @@ def builder(app_name: str = "broadway-spark", cpus: str | int | None = None):
     # transformWithState needs google.protobuf in every Python worker;
     # if it's only available via a system fallback path this must land
     # in PYTHONPATH before the JVM starts (workers inherit it).
-    from broadway_spark.streaming.stateful_batcher_v2 import enable_tws_compat
-
     enable_tws_compat()
     b = (
         SparkSession.builder.appName(app_name)

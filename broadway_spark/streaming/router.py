@@ -90,6 +90,43 @@ def _ack_rows(
     )
 
 
+def _write_acks(config: TopologyConfig, acks: DataFrame, batch_id: int) -> None:
+    """Append ``acks`` to the ack log and hand them to the ack executor.
+
+    ``acks`` carries ``outcome='retry'`` rows only when an executor is
+    set: they are executor-only signals (per-message-ack brokers
+    fast-track redelivery), never acks, so the log leaves them out.
+    Both start paths end each micro-batch here; each builds ``acks`` in
+    ``ACK_LOG_SCHEMA`` from its own row layout.
+    """
+    executor = config.ack_executor
+    if executor is not None:
+        # two consumers (log + executor): one compute
+        acks = acks.persist()
+    try:
+        if config.ack_log is not None:
+            logged = (
+                acks.filter(F.col("outcome") != "retry")
+                if executor is not None
+                else acks
+            )
+            _write(
+                logged,
+                config.ack_log.path,
+                config.ack_log.format,
+                batch_id,
+                config.ack_log.idempotent,
+            )
+        if executor is not None:
+            # A1 bulk ack: the connector's one-call-per-source hook
+            # (acknowledger.ex:63-85) — e.g. SQS deletes, fanned out
+            # executor-side by the connector.
+            executor(acks, batch_id)
+    finally:
+        if executor is not None:
+            acks.unpersist()
+
+
 def _make_batch_hook(batcher_name: str, hook, order_col: str):
     """Wrap the user's handle_batch for applyInPandas (single-arg),
     presenting rows in processing order (Broadway delivers batches in
@@ -404,31 +441,9 @@ def build_router(
                 acks = ack_parts[0]
                 for p in ack_parts[1:]:
                     acks = acks.unionByName(p)
-                if config.ack_executor is not None:
-                    if retry_acks is not None:
-                        acks = acks.unionByName(retry_acks)
-                    # two consumers (log + executor): one compute
-                    acks = acks.persist()
-                    hook_cache.append(acks)
-                if config.ack_log is not None:
-                    # retry rows are executor-only signals, not acks
-                    logged = (
-                        acks.filter(F.col("outcome") != "retry")
-                        if config.ack_executor is not None
-                        else acks
-                    )
-                    _write(
-                        logged,
-                        config.ack_log.path,
-                        config.ack_log.format,
-                        batch_id,
-                        config.ack_log.idempotent,
-                    )
-                if config.ack_executor is not None:
-                    # A1 bulk ack: the connector's one-call-per-source
-                    # hook (acknowledger.ex:63-85) — e.g. SQS deletes,
-                    # fanned out executor-side by the connector.
-                    config.ack_executor(acks, batch_id)
+                if config.ack_executor is not None and retry_acks is not None:
+                    acks = acks.unionByName(retry_acks)
+                _write_acks(config, acks, batch_id)
         finally:
             for cached in hook_cache:
                 cached.unpersist()

@@ -9,7 +9,7 @@ reps, labeled jobs).
 
 Usage:
   python scripts/ab_qtime.py \
-      --toggle broadway_spark.operators.dedup:MATERIALIZE_BASE_DEFAULT \
+      --toggle pkg.module:ATTR \
       [--sf DIR] [--reps N] q1 q2 ...
 
 A = toggle True, B = toggle False. Prints per-query medians and all

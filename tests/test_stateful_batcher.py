@@ -4,9 +4,9 @@ timers (reference ``batcher_stage.ex`` semantics; SURVEY §2.4 B1-B4).
 
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
+from broadway_spark import message as M
 from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources import SpoolSource
@@ -165,129 +165,71 @@ def test_timestamp_payload_survives_state_roundtrip(spark, tmp_dirs):
     assert {r[0] for r in ack.select("trigger").distinct().collect()} == {"timeout"}
 
 
-def _tws_available():
-    from broadway_spark.streaming.stateful_batcher_v2 import tws_available
+def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):
+    """A1/A4 on start_stateful: the ack executor receives the
+    on_failure=retry rows as outcome='retry' and the ack log never
+    does; ok and terminal-failed rows reach both. Starting the query
+    leaves the session's state-store provider as it was."""
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    provider_before = spark.conf.get(provider_key)
 
-    return tws_available()
-
-
-@pytest.mark.skipif(
-    not _tws_available(),
-    reason="transformWithState needs protobuf (absent in this container)",
-)
-def test_tws_cross_batch_assembly_and_timeout(spark, tmp_dirs):
-    """Same contract as the v1 test, on the transformWithStateInPandas
-    implementation (typed ListState buffer + named per-key timers):
-    40-rows-per-trigger input with batch_size 50 must produce two
-    size-50 chunks assembled across micro-batches plus a 30-row
-    timer-flushed remainder."""
-    src = SpoolSource(
-        name="spool",
-        path=tmp_dirs["spool"],
-        schema_ddl=EVENTS_DDL,
-        ack_data_column="event_id",
-        allowed_per_trigger=40,
-    )
-    src.push_messages(make_events(130), "000.jsonl")
-    cfg = TopologyConfig(
-        name="stateful_tws",
-        order_by="event_id",
-        batchers={"default": BatcherConfig(batch_size=50, batch_timeout_ms=2000)},
-        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
-        ack_log=SinkConfig(path=tmp_dirs["ack"]),
-        checkpoint_dir=tmp_dirs["ckpt"],
-    )
-    q = Pipeline(cfg, src).start_stateful(
-        spark, processing_time="300 milliseconds", impl="tws"
-    )
-    try:
-        assert _wait_for_acks(spark, tmp_dirs["ack"], 130), "drain incomplete"
-    finally:
-        q.stop()
-
-    ack = spark.read.parquet(tmp_dirs["ack"])
-    assert ack.count() == 130
-    assert ack.select("ack_data").distinct().count() == 130
-
-    groups = {
-        (r["trigger"], r["batch_size"]): r["n"]
-        for r in ack.groupBy("trigger", "batch_size")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert groups.get(("size", 50)) == 100
-    assert groups.get(("timeout", 30)) == 30
-
-
-def test_auto_impl_falls_back_loudly(spark, tmp_dirs):
-    """impl='auto' must pick transformWithState when the environment
-    supports it and otherwise fall back to the v1 path with a visible
-    RuntimeWarning — never a crash, never a silent downgrade."""
-    import warnings
-
-    src = SpoolSource(
-        name="spool",
-        path=tmp_dirs["spool"],
-        schema_ddl=EVENTS_DDL,
-        ack_data_column="event_id",
-    )
-    src.push_messages(make_events(20), "000.jsonl")
-    cfg = TopologyConfig(
-        name="auto_impl",
-        order_by="event_id",
-        batchers={"default": BatcherConfig(batch_size=10, batch_timeout_ms=1000)},
-        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
-        ack_log=SinkConfig(path=tmp_dirs["ack"]),
-        checkpoint_dir=tmp_dirs["ckpt"],
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        q = Pipeline(cfg, src).start_stateful(
-            spark, processing_time="300 milliseconds", impl="auto"
+    def handle_message(df):
+        fail = F.col("event_type") == "error"
+        df = df.withColumn(
+            "status",
+            F.when(fail, M.failed_status(F.lit("boom"), "proc")).otherwise(
+                F.col("status")
+            ),
         )
-    try:
-        if not _tws_available():
-            assert any(
-                issubclass(w.category, RuntimeWarning)
-                and "falling back" in str(w.message)
-                for w in caught
-            ), "fallback must warn"
-        else:
-            assert not caught
-        assert _wait_for_acks(spark, tmp_dirs["ack"], 20, timeout_s=90)
-    finally:
-        q.stop()
-    ack = spark.read.parquet(tmp_dirs["ack"])
-    assert ack.count() == 20
+        return M.configure_ack(
+            df, M.ACK_RETRY_ON_FAILURE, when=fail & (F.col("user_id") % 2 == 0)
+        )
 
+    recorded = []
 
-def test_tws_gate_raises_clear_error_when_unavailable(
-    spark, tmp_dirs, monkeypatch
-):
-    """When the environment can't run transformWithState, impl='tws'
-    must fail fast with a ConfigError, not crash mid-stream.
+    def record(acks, batch_id):
+        recorded.extend(
+            (int(r["ack_data"]), r["outcome"])
+            for r in acks.select("ack_data", "outcome").collect()
+        )
 
-    Unavailability is *simulated* (monkeypatched probe) so this test
-    runs everywhere, regardless of whether a protobuf runtime happens
-    to exist — the environment-dependent skip was the suite's only
-    skip (r3 verdict item 6)."""
-    from broadway_spark.config import ConfigError
-    from broadway_spark.streaming import stateful_batcher_v2
-
-    monkeypatch.setattr(stateful_batcher_v2, "tws_available", lambda: False)
     src = SpoolSource(
         name="spool",
         path=tmp_dirs["spool"],
         schema_ddl=EVENTS_DDL,
         ack_data_column="event_id",
     )
+    events = make_events(40)
+    src.push_messages(events, "000.jsonl")
     cfg = TopologyConfig(
-        name="tws_gate",
+        name="stateful-executor",
         order_by="event_id",
-        batchers={"default": BatcherConfig(batch_size=10, batch_timeout_ms=1000)},
+        handle_message=handle_message,
+        batchers={"default": BatcherConfig(batch_size=8, batch_timeout_ms=1000)},
         sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
         ack_log=SinkConfig(path=tmp_dirs["ack"]),
+        ack_executor=record,
         checkpoint_dir=tmp_dirs["ckpt"],
     )
-    with pytest.raises(ConfigError, match="protobuf"):
-        Pipeline(cfg, src).start_stateful(spark, impl="tws")
+    errors = [e for e in events if e["event_type"] == "error"]
+    retry_ids = {e["event_id"] for e in errors if e["user_id"] % 2 == 0}
+    assert retry_ids and len(retry_ids) < len(errors)
+    q = Pipeline(cfg, src).start_stateful(spark, processing_time="300 milliseconds")
+    try:
+        assert spark.conf.get(provider_key) == provider_before
+        assert _wait_for_acks(spark, tmp_dirs["ack"], 40 - len(retry_ids))
+        time.sleep(2)  # settle: no further acks may appear
+    finally:
+        q.stop()
+
+    ack = spark.read.parquet(tmp_dirs["ack"])
+    logged = {(int(r[0]), r[1]) for r in ack.select("ack_data", "outcome").collect()}
+    want = {
+        (e["event_id"], "failed" if e["event_type"] == "error" else "ok")
+        for e in events
+        if e["event_id"] not in retry_ids
+    }
+    assert ack.count() == len(want)
+    assert logged == want
+    assert sorted(recorded) == sorted(want | {(i, "retry") for i in retry_ids})
+    assert spark.conf.get(provider_key) == provider_before
