@@ -27,6 +27,12 @@ with their native ack styles: Kafka → offset commit; SQS →
 delete-as-ack with visibility timeout; Google Pub/Sub → ack-deadline
 lease with renewal; RabbitMQ → channel delivery_tag with
 nack/requeue/DLX and prefetch flow control.
+
+The three claim connectors (SQS, Pub/Sub, RabbitMQ) share one stream
+reader, DataSource shape, ack-executor shell and broker-double state
+store (``claims.py``); each supplies only its receive step and its
+outcome → broker-call mapping, as a Broadway connector supplies only
+its producer and ``ack/3``.
 """
 
 from broadway_spark.sources.file_stream import FileStreamSource

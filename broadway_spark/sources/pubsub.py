@@ -18,43 +18,41 @@ Pub/Sub (this module)     ack_id before          ack-deadline expiry;
                           deadline; renewable    nack = deadline→0
 ========================  =====================  =========================
 
-Structure mirrors ``sources/sqs.py`` (the shapes are ~80% shared; the
-lease is the difference):
+The claim protocol is the shared one (``sources/claims.py``); the
+lease is the difference:
 
 - **pull**: the driver leases up to ``max_per_trigger`` messages per
-  trigger in ``latestOffset`` — **handles only** (id, ack_id,
-  delivery_attempt, publish_time); payloads are fetched in ``read()``
-  on the executors.
-- **lease renewal**: every trigger, the driver renews the lease of all
-  still-uncommitted deliveries it holds (the renewal-daemon analogue,
-  driver-side because that's where the claim inventory lives). A
-  micro-batch that outlives the ack deadline therefore does NOT get its
-  messages redelivered out from under it.
+  trigger in ``latestOffset`` — handles only (id, ack_id,
+  delivery_attempt, publish_time).
+- **lease renewal**: every trigger, before pulling, ``latestOffset``
+  renews the lease of all still-uncommitted deliveries the driver holds
+  (driver-side, because that is where the claim inventory lives; there
+  is no separate renewal thread). A micro-batch that outlives the ack
+  deadline therefore does NOT get its messages redelivered out from
+  under it.
 - **ack = acknowledge(ack_id)**: ``make_ack_executor()`` issues batched
-  acknowledges from ``foreachPartition`` — executor-side, no driver
-  collect. Failed-but-acked messages are acknowledged too (Broadway's
-  default ack-on-failure); rows with ack_policy='retry' are **nack'd**
-  (deadline→0) for immediate redelivery.
-- **restart**: reader seq persists broker-side and fast-forwards past
-  the checkpointed offset, as in the SQS reader (see its docstring for
-  the burned-receive-round failure mode this avoids). Un-acked leases
-  from the dead reader expire on their own and redeliver.
+  acknowledges from ``foreachPartition``. Failed-but-acked messages are
+  acknowledged too (Broadway's default ack-on-failure); rows with
+  ack_policy='retry' are **nack'd** (deadline→0) for immediate
+  redelivery.
+- **restart**: un-acked leases from the dead reader expire on their own
+  and redeliver.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql import SparkSession
+
+from broadway_spark.sources.claims import (
+    ClaimDataSource,
+    ClaimSource,
+    ClaimStreamReader,
+    claim_ack_executor,
 )
-from pyspark.sql.types import StructType
+from broadway_spark.sources.pubsub_fake import FakePubSubSubscription
 
 PUBSUB_FORMAT = "broadway_pubsub"
 
@@ -65,128 +63,30 @@ PUBSUB_META_DDL = (
 )
 
 
-class _PubSubPartition(InputPartition):
-    """Carries deliveries — (id, ack_id, delivery_attempt,
-    publish_time) — never payloads; ``read()`` fetches bodies on the
-    executor."""
+class _PubSubStreamReader(ClaimStreamReader):
+    broker = FakePubSubSubscription
+    meta_ddl = PUBSUB_META_DDL
+    claim_keys = ("id", "ack_id", "delivery_attempt", "publish_time")
 
-    def __init__(self, claims: list[tuple]):
-        self.claims = claims
-
-
-class _PubSubStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.path = options["path"]
-        self.max_per_trigger = int(options.get("max_per_trigger", 1000))
+    def __init__(self, schema, options: dict):
+        super().__init__(schema, options)
         self.ack_deadline_s = float(options.get("ack_deadline_s", 30.0))
-        self.num_partitions = int(options.get("num_partitions", 4))
-        self.fields = [f.name for f in schema.fields]
-        self.coercers = []
-        for f in schema.fields:
-            t = f.dataType.simpleString()
-            if t.startswith("timestamp"):
-                self.coercers.append(
-                    lambda v: datetime.fromisoformat(v) if isinstance(v, str) else v
-                )
-            elif t == "date":
-                self.coercers.append(
-                    lambda v: date.fromisoformat(v) if isinstance(v, str) else v
-                )
-            else:
-                self.coercers.append(None)
-        # seq -> list of (id, ack_id, delivery_attempt, publish_time)
-        self._stash: dict[int, list[tuple]] = {}
-        self._seq = 0
 
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def latestOffset(self) -> dict:
-        from broadway_spark.sources.pubsub_fake import FakePubSubSubscription
-
-        sub = FakePubSubSubscription(self.path)
-        # Restart fast-forward (see sources/sqs.py for the rationale).
-        self._seq = max(self._seq, sub.load_reader_seq())
+    def _receive(self, sub: FakePubSubSubscription) -> list[dict]:
         # Lease renewal: everything still stashed is in flight —
         # committed seqs were dropped in commit(), so renewing the rest
         # keeps long micro-batches from losing their leases mid-work.
         inflight = [c[1] for claims in self._stash.values() for c in claims]
         if inflight:
             sub.modify_ack_deadline(inflight, self.ack_deadline_s)
-        claims = sub.pull(
+        return sub.pull(
             self.max_per_trigger, self.ack_deadline_s, with_bodies=False
         )
-        if claims:
-            self._seq += 1
-            sub.store_reader_seq(self._seq)
-            self._stash[self._seq] = [
-                (m["id"], m["ack_id"], m["delivery_attempt"], m["publish_time"])
-                for m in claims
-            ]
-        return {"seq": self._seq}
-
-    def partitions(self, start: dict, end: dict):
-        claims: list[tuple] = []
-        for seq in range(start["seq"] + 1, end["seq"] + 1):
-            # A replayed range on a fresh reader has no stash: return
-            # nothing — the un-acked leases of the dead reader expire
-            # and the broker redelivers (at-least-once).
-            claims.extend(self._stash.get(seq, []))
-        if not claims:
-            return [_PubSubPartition([])]
-        n = max(1, min(self.num_partitions, len(claims)))
-        step = (len(claims) + n - 1) // n
-        return [
-            _PubSubPartition(claims[i : i + step])
-            for i in range(0, len(claims), step)
-        ]
-
-    def read(self, partition: _PubSubPartition):
-        # Executor-side payload fetch: the driver shipped only handles.
-        if not partition.claims:
-            return
-        from broadway_spark.sources.pubsub_fake import FakePubSubSubscription
-
-        bodies = FakePubSubSubscription(self.path).fetch_bodies(
-            [c[0] for c in partition.claims]
-        )
-        for mid, ack_id, attempt, pub_time in partition.claims:
-            body = bodies.get(mid, {})
-            out = []
-            for name, co in zip(self.fields, self.coercers):
-                if name == "ps_message_id":
-                    out.append(mid)
-                elif name == "ps_ack_id":
-                    out.append(ack_id)
-                elif name == "ps_delivery_attempt":
-                    out.append(attempt)
-                elif name == "ps_publish_time":
-                    out.append(pub_time)
-                else:
-                    v = body.get(name)
-                    out.append(co(v) if co and v is not None else v)
-            yield tuple(out)
-
-    def commit(self, end: dict) -> None:
-        # Source progress only — the acknowledge (the real ack) is the
-        # ack executor's job. Committed stashes stop being renewed.
-        for seq in [s for s in self._stash if s <= end["seq"]]:
-            del self._stash[seq]
-
-    def stop(self) -> None:
-        pass
 
 
-class PubSubDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return PUBSUB_FORMAT
-
-    def schema(self) -> str:
-        return self.options["schema_ddl"] + ", " + PUBSUB_META_DDL
-
-    def streamReader(self, schema: StructType) -> _PubSubStreamReader:
-        return _PubSubStreamReader(schema, dict(self.options))
+class PubSubDataSource(ClaimDataSource):
+    format_name = PUBSUB_FORMAT
+    stream_reader_cls = _PubSubStreamReader
 
 
 def register_pubsub_source(spark: SparkSession) -> None:
@@ -194,7 +94,7 @@ def register_pubsub_source(spark: SparkSession) -> None:
 
 
 @dataclass
-class PubSubSource:
+class PubSubSource(ClaimSource):
     """Pipeline-facing handle. ``ack_data`` is the ack_id, so the ack
     executor acknowledges exactly the delivery it processed (stale
     ack_ids from superseded deliveries are no-ops, as in Pub/Sub).
@@ -216,22 +116,11 @@ class PubSubSource:
     num_partitions: int = 4
     on_failure: str = "ack"
 
-    def read_stream(self, spark: SparkSession) -> DataFrame:
-        register_pubsub_source(spark)
-        return (
-            spark.readStream.format(PUBSUB_FORMAT)
-            .option("path", self.path)
-            .option("schema_ddl", self.schema_ddl)
-            .option("max_per_trigger", self.max_per_trigger)
-            .option("ack_deadline_s", self.ack_deadline_s)
-            .option("num_partitions", self.num_partitions)
-            .load()
-        )
+    data_source = PubSubDataSource
+    stream_options = ("max_per_trigger", "ack_deadline_s", "num_partitions")
 
     def make_ack_executor(self):
-        """The A1 bulk-ack hook (``acknowledger.ex:63-85`` — one ack
-        call per {acknowledger, ack_ref} group), batched per executor
-        partition:
+        """The bulk-ack hook for TopologyConfig.ack_executor:
 
         - outcome ok → acknowledge
         - outcome failed → per ``on_failure``: acknowledge / nack / noop
@@ -239,54 +128,29 @@ class PubSubSource:
           redelivery instead of waiting out the ack deadline
         """
         path = self.path
-        prefix = self.name + "#"
         on_failure = self.on_failure
         if on_failure not in ("ack", "nack", "noop"):
             raise ValueError(f"on_failure must be ack|nack|noop, got {on_failure!r}")
 
-        def ack_executor(acks: DataFrame, batch_id: int) -> None:
-            rows = acks.filter(F.col("ack_ref").startswith(prefix)).select(
-                "ack_data", "outcome"
-            )
+        def settle(pending):
+            ack_ids, nacks = [], []
+            for ack_id, outcome in pending:
+                if outcome == "retry" or (
+                    outcome == "failed" and on_failure == "nack"
+                ):
+                    nacks.append(ack_id)
+                elif outcome != "failed" or on_failure == "ack":
+                    ack_ids.append(ack_id)
+                # failed + noop: let the lease expire
+            sub = FakePubSubSubscription(path)
+            sub.acknowledge(ack_ids)
+            sub.modify_ack_deadline(nacks, 0)
 
-            def per_partition(it):
-                from broadway_spark.sources.pubsub_fake import (
-                    FakePubSubSubscription,
-                )
-
-                ack_ids, nacks = [], []
-                for r in it:
-                    if not r["ack_data"]:
-                        continue
-                    if r["outcome"] == "retry":
-                        nacks.append(r["ack_data"])
-                    elif r["outcome"] == "failed" and on_failure != "ack":
-                        if on_failure == "nack":
-                            nacks.append(r["ack_data"])
-                        # noop: let the lease expire
-                    else:
-                        ack_ids.append(r["ack_data"])
-                if ack_ids or nacks:
-                    sub = FakePubSubSubscription(path)
-                    if ack_ids:
-                        sub.acknowledge(ack_ids)
-                    if nacks:
-                        sub.modify_ack_deadline(nacks, 0)
-
-            rows.foreachPartition(per_partition)
-
-        return ack_executor
+        return claim_ack_executor(self.name, settle)
 
     # -- test/ops conveniences ---------------------------------------
 
     def publish_messages(self, records: list[dict]) -> list[int]:
-        from broadway_spark.sources.pubsub_fake import FakePubSubSubscription
-
-        return FakePubSubSubscription(self.path).publish(
+        return self._broker().publish(
             [json.loads(json.dumps(r)) for r in records]
         )
-
-    def counts(self) -> dict:
-        from broadway_spark.sources.pubsub_fake import FakePubSubSubscription
-
-        return FakePubSubSubscription(self.path).counts()

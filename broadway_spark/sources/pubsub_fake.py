@@ -17,9 +17,9 @@ commit (Kafka/spool) and delete-as-ack with visibility timeout (SQS):
   when a dead-letter policy is attached).
 
 No GCP in this environment, so this double implements exactly those
-subscription semantics on a locked JSON state file — it is the
-*broker*; the Spark-facing connector is ``sources/pubsub.py``.
-Multi-process safe via the same O_EXCL spin lock as the SQS double.
+subscription semantics on a locked JSON state file (the shared
+``claims.BrokerDouble``) — it is the *broker*; the Spark-facing
+connector is ``sources/pubsub.py``.
 
 Ack-id semantics mirror Pub/Sub: each delivery issues a fresh ack_id;
 acks or deadline modifications with a stale ack_id (from a superseded
@@ -28,82 +28,28 @@ delivery) are ignored.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
+from broadway_spark.sources.claims import BrokerDouble
 
-class FakePubSubSubscription:
+
+class FakePubSubSubscription(BrokerDouble):
     STATE = "subscription.json"
     LOCK = "_subscription.lock"
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    # -- locking ------------------------------------------------------
-
-    def _acquire(self, timeout_s: float = 30.0) -> None:
-        lock = os.path.join(self.path, self.LOCK)
-        deadline = time.time() + timeout_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                return
-            except FileExistsError:
-                if time.time() > deadline:
-                    raise TimeoutError(f"subscription lock stuck: {lock}")
-                time.sleep(0.01)
-
-    def _release(self) -> None:
-        try:
-            os.remove(os.path.join(self.path, self.LOCK))
-        except FileNotFoundError:
-            pass
-
-    def _load(self) -> dict:
-        try:
-            with open(os.path.join(self.path, self.STATE)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"messages": [], "next_id": 0}
-
-    def _save(self, state: dict) -> None:
-        tmp = os.path.join(self.path, self.STATE + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, os.path.join(self.path, self.STATE))
 
     # -- publisher side -----------------------------------------------
 
     def publish(self, bodies: list[dict]) -> list[int]:
         """Publish messages to the topic; they become pullable on the
         subscription immediately. Returns message ids."""
-        now = time.time()
-        self._acquire()
-        try:
-            st = self._load()
-            ids = []
-            for body in bodies:
-                mid = st["next_id"]
-                st["next_id"] = mid + 1
-                st["messages"].append(
-                    {
-                        "id": mid,
-                        "body": body,
-                        "publish_time": now,
-                        "lease_until": 0.0,
-                        "delivery_attempt": 0,
-                        "ack_id": None,
-                        "acked": False,
-                    }
-                )
-                ids.append(mid)
-            self._save(st)
-            return ids
-        finally:
-            self._release()
+        return self._enqueue(
+            bodies,
+            publish_time=time.time(),
+            lease_until=0.0,
+            delivery_attempt=0,
+            ack_id=None,
+            acked=False,
+        )
 
     # -- subscriber side ----------------------------------------------
 
@@ -121,9 +67,7 @@ class FakePubSubSubscription:
         scale-safe driver path; executors fetch via ``fetch_bodies``.
         """
         now = time.time()
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             out = []
             for m in st["messages"]:
                 if len(out) >= max_n:
@@ -145,17 +89,6 @@ class FakePubSubSubscription:
             if out:
                 self._save(st)
             return out
-        finally:
-            self._release()
-
-    def fetch_bodies(self, ids: list[int]) -> dict[int, dict]:
-        """Fetch payloads by message id (executor-side companion to a
-        ``with_bodies=False`` pull). Lockless: the state file is
-        replaced atomically and bodies are immutable (messages are
-        flagged acked, never removed)."""
-        want = set(ids)
-        st = self._load()
-        return {m["id"]: dict(m["body"]) for m in st["messages"] if m["id"] in want}
 
     def acknowledge(self, ack_ids: list[str]) -> int:
         """Ack by *current* ack_id (stale ids from superseded
@@ -163,9 +96,7 @@ class FakePubSubSubscription:
         want = {a for a in ack_ids if a}
         if not want:
             return 0
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             n = 0
             for m in st["messages"]:
                 if not m["acked"] and m["ack_id"] in want:
@@ -174,8 +105,6 @@ class FakePubSubSubscription:
             if n:
                 self._save(st)
             return n
-        finally:
-            self._release()
 
     def modify_ack_deadline(self, ack_ids: list[str], seconds: float) -> int:
         """``modifyAckDeadline``: extend (lease renewal) or zero (nack,
@@ -192,9 +121,7 @@ class FakePubSubSubscription:
         if not want:
             return 0
         now = time.time()
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             n = 0
             for m in st["messages"]:
                 if not m["acked"] and m["ack_id"] in want:
@@ -205,22 +132,6 @@ class FakePubSubSubscription:
             if n:
                 self._save(st)
             return n
-        finally:
-            self._release()
-
-    # -- reader progress ----------------------------------------------
-
-    def load_reader_seq(self) -> int:
-        return int(self._load().get("reader_seq", 0))
-
-    def store_reader_seq(self, seq: int) -> None:
-        self._acquire()
-        try:
-            st = self._load()
-            st["reader_seq"] = max(int(st.get("reader_seq", 0)), int(seq))
-            self._save(st)
-        finally:
-            self._release()
 
     # -- observability ------------------------------------------------
 

@@ -27,35 +27,39 @@ What is structurally different here:
   reference connector's documented flow-control stance (the
   ":prefetch_count" tuning section of the guide).
 - **Crash redelivery is channel death**: the reader (re)opens its
-  channel on construction, which requeues any unacked deliveries a
+  channel on its first trigger, which requeues any unacked deliveries a
   dead predecessor held — no timeout to wait out.
 - **Terminal failure routing is a broker feature**: ``on_failure:
   'reject'`` nacks without requeue, landing the message in the
   broker's dead-letter store (the DLX pattern) rather than an
   engine-side sink.
 
-Driver/executor split mirrors the other connectors: the driver stashes
-claims only (id, delivery_tag, redelivered); payloads are fetched in
-``read()`` on the executors; the bulk-ack executor settles tags from
-``foreachPartition``. Per executor partition the acks are issued as one
-cumulative ``basic.ack(multiple=True)`` for the contiguous tag prefix
-plus singles for the rest — the family's native bulk-ack shape.
+The driver/executor split is the shared claim protocol
+(``sources/claims.py``): the driver stashes claims only (id,
+delivery_tag, redelivered); payloads are fetched in ``read()`` on the
+executors; the bulk-ack executor settles tags from ``foreachPartition``.
+Per executor partition the acks are issued as one cumulative
+``basic.ack(multiple=True)`` for the contiguous tag prefix plus singles
+for the rest — the family's native bulk-ack shape. ``stop()`` closes the
+reader's channel, so a stopped pipeline's unsettled deliveries requeue
+at once for whichever channel consumes next.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql import SparkSession
+
+from broadway_spark.sources.claims import (
+    ClaimDataSource,
+    ClaimSource,
+    ClaimStreamReader,
+    _parse_pos_int,
+    claim_ack_executor,
 )
-from pyspark.sql.types import StructType
+from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
 
 RABBIT_FORMAT = "broadway_rabbit"
 
@@ -65,127 +69,42 @@ RABBIT_META_DDL = (
 )
 
 
-class _RabbitPartition(InputPartition):
-    """Carries (id, delivery_tag, redelivered) claims — never payloads."""
+class _RabbitStreamReader(ClaimStreamReader):
+    broker = FakeRabbitQueue
+    meta_ddl = RABBIT_META_DDL
+    claim_keys = ("id", "delivery_tag", "redelivered")
 
-    def __init__(self, claims: list[tuple]):
-        self.claims = claims
-
-
-class _RabbitStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.path = options["path"]
+    def __init__(self, schema, options: dict):
+        super().__init__(schema, options)
         self.channel_id = options.get("channel_id", "bw-consumer")
-        self.max_per_trigger = int(options.get("max_per_trigger", 1000))
-        self.prefetch_count = int(options.get("prefetch_count", 50))
-        self.num_partitions = int(options.get("num_partitions", 4))
-        self.fields = [f.name for f in schema.fields]
-        self.coercers = []
-        for f in schema.fields:
-            t = f.dataType.simpleString()
-            if t.startswith("timestamp"):
-                self.coercers.append(
-                    lambda v: datetime.fromisoformat(v) if isinstance(v, str) else v
-                )
-            elif t == "date":
-                self.coercers.append(
-                    lambda v: date.fromisoformat(v) if isinstance(v, str) else v
-                )
-            else:
-                self.coercers.append(None)
-        # seq -> list of (id, delivery_tag, redelivered)
-        self._stash: dict[int, list[tuple]] = {}
-        self._seq = 0
+        # AMQP reads prefetch_count=0 as "unlimited"; the double would
+        # read it as a window of 0 and never deliver — reject it.
+        self.prefetch_count = _parse_pos_int(
+            options.get("prefetch_count", 50), "prefetch_count"
+        )
         self._channel_open = False
 
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def _ensure_channel(self, q) -> None:
+    def _receive(self, q: FakeRabbitQueue) -> list[dict]:
         if not self._channel_open:
             # (Re)opening requeues a dead predecessor's unacked
             # deliveries — Rabbit's crash-redelivery semantics.
             q.open_channel(self.channel_id, self.prefetch_count)
             self._channel_open = True
-
-    def latestOffset(self) -> dict:
-        from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
-
-        q = FakeRabbitQueue(self.path)
-        self._ensure_channel(q)
-        # Restart fast-forward (see sources/sqs.py for the rationale).
-        self._seq = max(self._seq, q.load_reader_seq())
-        claims = q.deliver(
+        return q.deliver(
             self.channel_id, self.max_per_trigger, with_bodies=False
         )
-        if claims:
-            self._seq += 1
-            q.store_reader_seq(self._seq)
-            self._stash[self._seq] = [
-                (m["id"], m["delivery_tag"], m["redelivered"]) for m in claims
-            ]
-        return {"seq": self._seq}
-
-    def partitions(self, start: dict, end: dict):
-        claims: list[tuple] = []
-        for seq in range(start["seq"] + 1, end["seq"] + 1):
-            # A replayed range on a fresh reader has no stash: return
-            # nothing — re-opening the channel already requeued the
-            # dead reader's unacked deliveries (at-least-once).
-            claims.extend(self._stash.get(seq, []))
-        if not claims:
-            return [_RabbitPartition([])]
-        n = max(1, min(self.num_partitions, len(claims)))
-        step = (len(claims) + n - 1) // n
-        return [
-            _RabbitPartition(claims[i : i + step])
-            for i in range(0, len(claims), step)
-        ]
-
-    def read(self, partition: _RabbitPartition):
-        # Executor-side payload fetch: the driver shipped only claims.
-        if not partition.claims:
-            return
-        from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
-
-        bodies = FakeRabbitQueue(self.path).fetch_bodies(
-            [c[0] for c in partition.claims]
-        )
-        for mid, tag, redelivered in partition.claims:
-            body = bodies.get(mid, {})
-            out = []
-            for name, co in zip(self.fields, self.coercers):
-                if name == "rmq_message_id":
-                    out.append(mid)
-                elif name == "rmq_delivery_tag":
-                    out.append(tag)
-                elif name == "rmq_redelivered":
-                    out.append(redelivered)
-                else:
-                    v = body.get(name)
-                    out.append(co(v) if co and v is not None else v)
-            yield tuple(out)
-
-    def commit(self, end: dict) -> None:
-        # Source progress only — basic.ack (the real ack) is the ack
-        # executor's job.
-        for seq in [s for s in self._stash if s <= end["seq"]]:
-            del self._stash[seq]
 
     def stop(self) -> None:
-        pass
+        # Closing the channel requeues its unacked deliveries, so a
+        # restart under a different channel_id still receives them.
+        if self._channel_open:
+            FakeRabbitQueue(self.path).close_channel(self.channel_id)
+            self._channel_open = False
 
 
-class RabbitDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return RABBIT_FORMAT
-
-    def schema(self) -> str:
-        return self.options["schema_ddl"] + ", " + RABBIT_META_DDL
-
-    def streamReader(self, schema: StructType) -> _RabbitStreamReader:
-        return _RabbitStreamReader(schema, dict(self.options))
+class RabbitDataSource(ClaimDataSource):
+    format_name = RABBIT_FORMAT
+    stream_reader_cls = _RabbitStreamReader
 
 
 def register_rabbit_source(spark: SparkSession) -> None:
@@ -193,7 +112,7 @@ def register_rabbit_source(spark: SparkSession) -> None:
 
 
 @dataclass
-class RabbitSource:
+class RabbitSource(ClaimSource):
     """Pipeline-facing handle. ``ack_data`` is the delivery_tag (as a
     string), settled against the reader's channel by the ack executor.
 
@@ -216,21 +135,16 @@ class RabbitSource:
     num_partitions: int = 4
     on_failure: str = "reject"
 
-    def read_stream(self, spark: SparkSession) -> DataFrame:
-        register_rabbit_source(spark)
-        return (
-            spark.readStream.format(RABBIT_FORMAT)
-            .option("path", self.path)
-            .option("schema_ddl", self.schema_ddl)
-            .option("channel_id", self.channel_id)
-            .option("max_per_trigger", self.max_per_trigger)
-            .option("prefetch_count", self.prefetch_count)
-            .option("num_partitions", self.num_partitions)
-            .load()
-        )
+    data_source = RabbitDataSource
+    stream_options = (
+        "channel_id",
+        "max_per_trigger",
+        "prefetch_count",
+        "num_partitions",
+    )
 
     def make_ack_executor(self):
-        """The A1 bulk-ack hook, batched per executor partition:
+        """The bulk-ack hook, batched per executor partition:
 
         - outcome ok → basic.ack; the partition's contiguous prefix of
           outstanding tags is settled with ONE cumulative
@@ -242,7 +156,6 @@ class RabbitSource:
           with the redelivered flag set)
         """
         path = self.path
-        prefix = self.name + "#"
         channel_id = self.channel_id
         on_failure = self.on_failure
         if on_failure not in ("ack", "reject", "reject_and_requeue"):
@@ -251,79 +164,50 @@ class RabbitSource:
                 f"got {on_failure!r}"
             )
 
-        def ack_executor(acks: DataFrame, batch_id: int) -> None:
-            rows = acks.filter(F.col("ack_ref").startswith(prefix)).select(
-                "ack_data", "outcome"
-            )
-
-            def per_partition(it):
-                from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
-
-                ack_tags, requeues, rejects = [], [], []
-                for r in it:
-                    if not r["ack_data"]:
-                        continue
-                    tag = int(r["ack_data"])
-                    if r["outcome"] == "retry":
-                        requeues.append(tag)
-                    elif r["outcome"] == "failed":
-                        if on_failure == "ack":
-                            ack_tags.append(tag)
-                        elif on_failure == "reject":
-                            rejects.append(tag)
-                        else:
-                            requeues.append(tag)
-                    else:
+        def settle(pending):
+            ack_tags, requeues, rejects = [], [], []
+            for ack_data, outcome in pending:
+                tag = int(ack_data)
+                if outcome == "retry":
+                    requeues.append(tag)
+                elif outcome == "failed":
+                    if on_failure == "ack":
                         ack_tags.append(tag)
-                if not (ack_tags or requeues or rejects):
-                    return
-                q = FakeRabbitQueue(path)
-                if ack_tags:
-                    # Cumulative-ack optimization: tags below the
-                    # smallest tag this partition does NOT own may not
-                    # be settled wholesale, so only a prefix that is
-                    # contiguous WITHIN this partition's set is safe to
-                    # collapse when it starts at the partition minimum.
-                    # Everything else acks individually.
-                    ack_tags.sort()
-                    run_end = 0
-                    while (
-                        run_end + 1 < len(ack_tags)
-                        and ack_tags[run_end + 1] == ack_tags[run_end] + 1
-                    ):
-                        run_end += 1
-                    # A cumulative ack settles ALL tags <= N on the
-                    # channel, including other partitions' — only safe
-                    # when this partition provably owns the full range,
-                    # i.e. its run starts at tag 1. Otherwise singles.
-                    if ack_tags[0] == 1 and run_end > 0:
-                        q.basic_ack(
-                            channel_id, ack_tags[run_end], multiple=True
-                        )
-                        rest = ack_tags[run_end + 1 :]
+                    elif on_failure == "reject":
+                        rejects.append(tag)
                     else:
-                        rest = ack_tags
-                    for t in rest:
-                        q.basic_ack(channel_id, t)
-                for t in requeues:
-                    q.basic_nack(channel_id, t, requeue=True)
-                for t in rejects:
-                    q.basic_nack(channel_id, t, requeue=False)
+                        requeues.append(tag)
+                else:
+                    ack_tags.append(tag)
+            q = FakeRabbitQueue(path)
+            if ack_tags:
+                # A cumulative ack settles ALL tags <= N on the channel,
+                # including other partitions' — only safe when this
+                # partition provably owns the full range, i.e. its
+                # contiguous run starts at tag 1. Everything else acks
+                # individually.
+                ack_tags.sort()
+                run_end = 0
+                while (
+                    run_end + 1 < len(ack_tags)
+                    and ack_tags[run_end + 1] == ack_tags[run_end] + 1
+                ):
+                    run_end += 1
+                if ack_tags[0] == 1 and run_end > 0:
+                    q.basic_ack(channel_id, ack_tags[run_end], multiple=True)
+                    ack_tags = ack_tags[run_end + 1 :]
+                for t in ack_tags:
+                    q.basic_ack(channel_id, t)
+            for t in requeues:
+                q.basic_nack(channel_id, t, requeue=True)
+            for t in rejects:
+                q.basic_nack(channel_id, t, requeue=False)
 
-            rows.foreachPartition(per_partition)
-
-        return ack_executor
+        return claim_ack_executor(self.name, settle)
 
     # -- test/ops conveniences ---------------------------------------
 
     def publish_messages(self, records: list[dict]) -> list[int]:
-        from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
-
-        return FakeRabbitQueue(self.path).publish(
+        return self._broker().publish(
             [json.loads(json.dumps(r)) for r in records]
         )
-
-    def counts(self) -> dict:
-        from broadway_spark.sources.rabbit_fake import FakeRabbitQueue
-
-        return FakeRabbitQueue(self.path).counts()

@@ -24,85 +24,31 @@ leases:
   unacked delivery it held — Rabbit's built-in crash redelivery.
 
 No broker in this environment, so this double implements exactly those
-semantics on a locked JSON state file; the Spark-facing connector is
-``sources/rabbit.py``. Locking mirrors the SQS/PubSub doubles.
+semantics on a locked JSON state file (the shared
+``claims.BrokerDouble``); the Spark-facing connector is
+``sources/rabbit.py``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
+from broadway_spark.sources.claims import BrokerDouble
 
 
-class FakeRabbitQueue:
+class FakeRabbitQueue(BrokerDouble):
     STATE = "rabbit.json"
     LOCK = "_rabbit.lock"
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    # -- locking ------------------------------------------------------
-
-    def _acquire(self, timeout_s: float = 30.0) -> None:
-        lock = os.path.join(self.path, self.LOCK)
-        deadline = time.time() + timeout_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                return
-            except FileExistsError:
-                if time.time() > deadline:
-                    raise TimeoutError(f"rabbit lock stuck: {lock}")
-                time.sleep(0.01)
-
-    def _release(self) -> None:
-        try:
-            os.remove(os.path.join(self.path, self.LOCK))
-        except FileNotFoundError:
-            pass
-
-    def _load(self) -> dict:
-        try:
-            with open(os.path.join(self.path, self.STATE)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"messages": [], "next_id": 0, "channels": {}}
-
-    def _save(self, state: dict) -> None:
-        tmp = os.path.join(self.path, self.STATE + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, os.path.join(self.path, self.STATE))
+    EMPTY = {"messages": [], "next_id": 0, "channels": {}}
 
     # -- publisher side -----------------------------------------------
 
     def publish(self, bodies: list[dict]) -> list[int]:
-        self._acquire()
-        try:
-            st = self._load()
-            ids = []
-            for body in bodies:
-                mid = st["next_id"]
-                st["next_id"] = mid + 1
-                st["messages"].append(
-                    {
-                        "id": mid,
-                        "body": body,
-                        # ready | unacked | acked | dead
-                        "state": "ready",
-                        "redelivered": False,
-                        "channel": None,
-                        "delivery_tag": None,
-                    }
-                )
-                ids.append(mid)
-            self._save(st)
-            return ids
-        finally:
-            self._release()
+        return self._enqueue(
+            bodies,
+            state="ready",  # ready | unacked | acked | dead
+            redelivered=False,
+            channel=None,
+            delivery_tag=None,
+        )
 
     # -- channel lifecycle --------------------------------------------
 
@@ -111,9 +57,7 @@ class FakeRabbitQueue:
         prefetch. Reopening an existing channel id first closes it —
         requeueing its unacked deliveries, exactly what a dropped
         connection does."""
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             if channel_id in st["channels"]:
                 self._requeue_channel(st, channel_id)
             st["channels"][channel_id] = {
@@ -122,22 +66,16 @@ class FakeRabbitQueue:
                 "unacked": {},  # delivery_tag (str) -> message id
             }
             self._save(st)
-        finally:
-            self._release()
 
     def close_channel(self, channel_id: str) -> int:
         """Close the channel; every unacked delivery requeues
         (``redelivered`` will be set on next delivery). Returns the
         number requeued."""
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             n = self._requeue_channel(st, channel_id)
             st["channels"].pop(channel_id, None)
             self._save(st)
             return n
-        finally:
-            self._release()
 
     @staticmethod
     def _requeue_channel(st: dict, channel_id: str) -> int:
@@ -166,9 +104,7 @@ class FakeRabbitQueue:
         channel sitting on ``prefetch_count`` unacked deliveries
         receives nothing until it acks (the documented back-pressure
         contract)."""
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             ch = st["channels"].get(channel_id)
             if ch is None:
                 raise ValueError(f"channel not open: {channel_id}")
@@ -196,15 +132,6 @@ class FakeRabbitQueue:
             if out:
                 self._save(st)
             return out
-        finally:
-            self._release()
-
-    def fetch_bodies(self, ids: list[int]) -> dict[int, dict]:
-        """Executor-side payload fetch for claims-only deliveries.
-        Lockless: atomic state replace + immutable bodies."""
-        want = set(ids)
-        st = self._load()
-        return {m["id"]: dict(m["body"]) for m in st["messages"] if m["id"] in want}
 
     def basic_ack(
         self, channel_id: str, delivery_tag: int, multiple: bool = False
@@ -230,9 +157,7 @@ class FakeRabbitQueue:
     def _settle(
         self, channel_id: str, delivery_tag: int, multiple: bool, target: str
     ) -> int:
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             ch = st["channels"].get(channel_id)
             if ch is None:
                 return 0
@@ -255,22 +180,6 @@ class FakeRabbitQueue:
             if n:
                 self._save(st)
             return n
-        finally:
-            self._release()
-
-    # -- reader progress ----------------------------------------------
-
-    def load_reader_seq(self) -> int:
-        return int(self._load().get("reader_seq", 0))
-
-    def store_reader_seq(self, seq: int) -> None:
-        self._acquire()
-        try:
-            st = self._load()
-            st["reader_seq"] = max(int(st.get("reader_seq", 0)), int(seq))
-            self._save(st)
-        finally:
-            self._release()
 
     # -- observability ------------------------------------------------
 

@@ -27,7 +27,6 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from datetime import date, datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import PySparkNotImplementedError
@@ -39,6 +38,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
+
+from broadway_spark.sources.claims import _parse_pos_int, field_coercers
 
 SPOOL_FORMAT = "broadway_spool"
 COMMIT_JOURNAL = "_commits.jsonl"
@@ -55,20 +56,6 @@ def _data_files(path: str) -> list[str]:
     except FileNotFoundError:
         return []
     return [os.path.join(path, f) for f in names]
-
-
-def _parse_pos_int(raw, name: str) -> int | None:
-    """Option parser mirroring the reference's ``pos_integer`` checks
-    (``options.ex``): absent/None means "not set"; anything present
-    must be a strictly positive integer — 0 is rejected loudly rather
-    than silently meaning "unlimited" (the reference treats
-    ``allowed_messages: 0`` as a config error, not infinity)."""
-    if raw is None or raw == "":
-        return None
-    v = int(raw)
-    if v <= 0:
-        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
-    return v
 
 
 def _snapshot_files(path: str) -> list[tuple[str, int]]:
@@ -182,21 +169,7 @@ class _SpoolStreamReader(DataSourceStreamReader):
                 self._arrow_schema = to_arrow_schema(schema)
             except Exception:  # noqa: BLE001 - fall back to row path
                 self._arrow_schema = None
-        # JSON carries timestamps/dates as strings; the data source API
-        # wants real datetime objects — build per-field coercers once.
-        self.coercers = []
-        for f in schema.fields:
-            t = f.dataType.simpleString()
-            if t.startswith("timestamp"):
-                self.coercers.append(
-                    lambda v: datetime.fromisoformat(v) if isinstance(v, str) else v
-                )
-            elif t == "date":
-                self.coercers.append(
-                    lambda v: date.fromisoformat(v) if isinstance(v, str) else v
-                )
-            else:
-                self.coercers.append(None)
+        self.coercers = field_coercers(schema)
         self._counts = _RowCountCache()
 
     def initialOffset(self) -> dict:

@@ -6,57 +6,38 @@ Broadway's flagship connector is broadway_sqs
 acknowledgement is a per-message **delete** and redelivery comes from
 the broker's visibility timeout, not from offset replay. That is a
 fundamentally different ack style from Kafka/spool (offset commit +
-checkpoint), so the engine carries it as its own connector:
+checkpoint), so the engine carries it as its own connector on the
+shared claim protocol (``sources/claims.py``):
 
 - **receive**: the driver claims up to ``max_per_trigger`` visible
-  messages per trigger in ``latestOffset`` (admission is global and
-  exact, like the spool's — the demand knob of ``producer_stage.ex``).
-  The driver claims **handles only** (id, receipt, delivery_count);
-  message payloads are fetched in ``read()`` on the executors, so the
-  driver never becomes a payload funnel at scale.
-- **ack = delete**: ``make_ack_executor()`` returns the router's A1
-  bulk-ack hook (``acknowledger.ex:63-85`` — one ack call per source
-  handle): it filters this source's ack rows and issues batched deletes
-  from ``foreachPartition`` — executor-side, no driver collect, exactly
-  how a 1000-executor cluster would fan SQS ``DeleteMessageBatch``
-  calls.
+  messages per trigger — handles only (id, receipt, delivery_count);
+  each claimed message goes invisible for ``visibility_timeout_s``.
+- **ack = delete**: ``make_ack_executor()`` issues batched deletes from
+  ``foreachPartition``, exactly how a 1000-executor cluster would fan
+  SQS ``DeleteMessageBatch`` calls.
 - **redelivery**: rows held back from the ack (ack_policy='retry', or a
   crash before the delete ran) simply reappear after the visibility
   timeout with a higher ``sqs_delivery_count`` — at-least-once comes
-  from the broker, not the checkpoint. A replayed micro-batch after a
-  restart therefore reads as EMPTY from the stash (documented
-  connector contract; the broker redelivers anything undeleted).
+  from the broker, not the checkpoint.
 
 At scale the single-driver ``receive`` is the admission point, matching
-the reference's single-node rate-limit stance (``broadway.ex:55-59``);
-the receive itself is cheap (message *claims* only — tuples of
-(id, receipt, delivery_count)), and payload reads fan out per input
-partition on the executors.
-
-Restart safety: the reader's trigger seq is persisted broker-side
-(``reader_seq``) and fast-forwarded past the checkpointed offset on
-restart. Without that, a fresh reader's first claim would land in a
-seq range below the checkpoint: the planned batch reads nothing,
-``commit`` discards the stash, and that whole receive round is burned —
-the messages only reappear after the full visibility timeout, with an
-inflated delivery_count (which against real SQS counts toward a
-redrive/DLQ policy).
+the reference's single-node rate-limit stance (``broadway.ex:55-59``).
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
-from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql import SparkSession
+
+from broadway_spark.sources.claims import (
+    ClaimDataSource,
+    ClaimSource,
+    ClaimStreamReader,
+    claim_ack_executor,
 )
-from pyspark.sql.types import StructType
+from broadway_spark.sources.sqs_fake import FakeSQSQueue
 
 SQS_FORMAT = "broadway_sqs"
 
@@ -66,126 +47,26 @@ SQS_META_DDL = (
 )
 
 
-class _SQSPartition(InputPartition):
-    """Carries message *claims* — (id, receipt, delivery_count) — never
-    payloads; ``read()`` fetches bodies broker-side on the executor."""
+class _SQSStreamReader(ClaimStreamReader):
+    broker = FakeSQSQueue
+    meta_ddl = SQS_META_DDL
+    claim_keys = ("id", "receipt", "delivery_count")
 
-    def __init__(self, claims: list[tuple]):
-        self.claims = claims
-
-
-class _SQSStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.path = options["path"]
-        self.max_per_trigger = int(options.get("max_per_trigger", 1000))
+    def __init__(self, schema, options: dict):
+        super().__init__(schema, options)
         self.visibility_timeout_s = float(
             options.get("visibility_timeout_s", 30.0)
         )
-        self.num_partitions = int(options.get("num_partitions", 4))
-        self.fields = [f.name for f in schema.fields]
-        self.meta_names = {"sqs_message_id", "sqs_receipt", "sqs_delivery_count"}
-        self.coercers = []
-        for f in schema.fields:
-            t = f.dataType.simpleString()
-            if t.startswith("timestamp"):
-                self.coercers.append(
-                    lambda v: datetime.fromisoformat(v) if isinstance(v, str) else v
-                )
-            elif t == "date":
-                self.coercers.append(
-                    lambda v: date.fromisoformat(v) if isinstance(v, str) else v
-                )
-            else:
-                self.coercers.append(None)
-        # seq -> list of (id, receipt, delivery_count) claims
-        self._stash: dict[int, list[tuple]] = {}
-        self._seq = 0
 
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def latestOffset(self) -> dict:
-        from broadway_spark.sources.sqs_fake import FakeSQSQueue
-
-        q = FakeSQSQueue(self.path)
-        # Restart fast-forward: a fresh reader starts at _seq=0 while
-        # the checkpoint may hold seq=N. Claiming below N would put the
-        # claims in a range the planned batch (N -> latest) never reads,
-        # silently burning a receive round. reader_seq persists the high
-        # water mark broker-side.
-        self._seq = max(self._seq, q.load_reader_seq())
-        claims = q.receive(
+    def _receive(self, q: FakeSQSQueue) -> list[dict]:
+        return q.receive(
             self.max_per_trigger, self.visibility_timeout_s, with_bodies=False
         )
-        if claims:
-            self._seq += 1
-            q.store_reader_seq(self._seq)
-            self._stash[self._seq] = [
-                (m["id"], m["receipt"], m["delivery_count"]) for m in claims
-            ]
-        return {"seq": self._seq}
-
-    def partitions(self, start: dict, end: dict):
-        claims: list[tuple] = []
-        for seq in range(start["seq"] + 1, end["seq"] + 1):
-            # A replayed range on a fresh reader has no stash: return
-            # nothing — the undeleted messages redeliver via the
-            # broker's visibility timeout (at-least-once).
-            claims.extend(self._stash.get(seq, []))
-        if not claims:
-            return [_SQSPartition([])]
-        n = max(1, min(self.num_partitions, len(claims)))
-        step = (len(claims) + n - 1) // n
-        return [
-            _SQSPartition(claims[i : i + step])
-            for i in range(0, len(claims), step)
-        ]
-
-    def read(self, partition: _SQSPartition):
-        # Executor-side payload fetch: the driver shipped only claims.
-        if not partition.claims:
-            return
-        from broadway_spark.sources.sqs_fake import FakeSQSQueue
-
-        bodies = FakeSQSQueue(self.path).fetch_bodies(
-            [c[0] for c in partition.claims]
-        )
-        for mid, receipt, delivery_count in partition.claims:
-            body = bodies.get(mid, {})
-            out = []
-            for name, co in zip(self.fields, self.coercers):
-                if name == "sqs_message_id":
-                    out.append(mid)
-                elif name == "sqs_receipt":
-                    out.append(receipt)
-                elif name == "sqs_delivery_count":
-                    out.append(delivery_count)
-                else:
-                    v = body.get(name)
-                    out.append(co(v) if co and v is not None else v)
-            yield tuple(out)
-
-    def commit(self, end: dict) -> None:
-        # Source progress only — the per-message delete (the real ack)
-        # is the ack executor's job. Drop stashes the engine has
-        # durably committed.
-        for seq in [s for s in self._stash if s <= end["seq"]]:
-            del self._stash[seq]
-
-    def stop(self) -> None:
-        pass
 
 
-class SQSDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return SQS_FORMAT
-
-    def schema(self) -> str:
-        return self.options["schema_ddl"] + ", " + SQS_META_DDL
-
-    def streamReader(self, schema: StructType) -> _SQSStreamReader:
-        return _SQSStreamReader(schema, dict(self.options))
+class SQSDataSource(ClaimDataSource):
+    format_name = SQS_FORMAT
+    stream_reader_cls = _SQSStreamReader
 
 
 def register_sqs_source(spark: SparkSession) -> None:
@@ -193,7 +74,7 @@ def register_sqs_source(spark: SparkSession) -> None:
 
 
 @dataclass
-class SQSSource:
+class SQSSource(ClaimSource):
     """Pipeline-facing handle. ``ack_data`` is the receipt handle, so
     the ack executor can delete exactly the delivery it processed
     (stale receipts from superseded deliveries are no-ops, as in SQS).
@@ -207,22 +88,11 @@ class SQSSource:
     visibility_timeout_s: float = 30.0
     num_partitions: int = 4
 
-    def read_stream(self, spark: SparkSession) -> DataFrame:
-        register_sqs_source(spark)
-        return (
-            spark.readStream.format(SQS_FORMAT)
-            .option("path", self.path)
-            .option("schema_ddl", self.schema_ddl)
-            .option("max_per_trigger", self.max_per_trigger)
-            .option("visibility_timeout_s", self.visibility_timeout_s)
-            .option("num_partitions", self.num_partitions)
-            .load()
-        )
+    data_source = SQSDataSource
+    stream_options = ("max_per_trigger", "visibility_timeout_s", "num_partitions")
 
     def make_ack_executor(self):
-        """The A1 bulk-ack hook for TopologyConfig.ack_executor
-        (``acknowledger.ex:63-85`` — one ack call per
-        {acknowledger, ack_ref} group), batched per executor partition:
+        """The bulk-ack hook for TopologyConfig.ack_executor:
 
         - outcome ok/failed → delete (failed-but-acked messages are
           deleted too, Broadway's default ack-on-failure)
@@ -231,45 +101,19 @@ class SQSSource:
           (the broadway_sqs on_failure-without-delete pattern)
         """
         path = self.path
-        prefix = self.name + "#"
 
-        def ack_executor(acks: DataFrame, batch_id: int) -> None:
-            rows = acks.filter(F.col("ack_ref").startswith(prefix)).select(
-                "ack_data", "outcome"
-            )
+        def settle(pending):
+            q = FakeSQSQueue(path)
+            q.delete_batch([r for r, outcome in pending if outcome != "retry"])
+            for receipt, outcome in pending:
+                if outcome == "retry":
+                    q.change_visibility(receipt, 0)
 
-            def per_partition(it):
-                from broadway_spark.sources.sqs_fake import FakeSQSQueue
-
-                deletes, retries = [], []
-                for r in it:
-                    if not r["ack_data"]:
-                        continue
-                    if r["outcome"] == "retry":
-                        retries.append(r["ack_data"])
-                    else:
-                        deletes.append(r["ack_data"])
-                if deletes or retries:
-                    q = FakeSQSQueue(path)
-                    if deletes:
-                        q.delete_batch(deletes)
-                    for receipt in retries:
-                        q.change_visibility(receipt, 0)
-
-            rows.foreachPartition(per_partition)
-
-        return ack_executor
+        return claim_ack_executor(self.name, settle)
 
     # -- test/ops conveniences ---------------------------------------
 
     def send_messages(self, records: list[dict]) -> list[int]:
-        from broadway_spark.sources.sqs_fake import FakeSQSQueue
-
-        return FakeSQSQueue(self.path).send_batch(
+        return self._broker().send_batch(
             [json.loads(json.dumps(r)) for r in records]
         )
-
-    def counts(self) -> dict:
-        from broadway_spark.sources.sqs_fake import FakeSQSQueue
-
-        return FakeSQSQueue(self.path).counts()

@@ -8,11 +8,10 @@ deleted in time (the reference's documented retry story: "no built-in
 retries — redelivery is the producer's job", ``lib/broadway.ex:332-338``).
 
 No AWS in this environment, so this double implements exactly those
-queue semantics on a locked JSON state file. It is the *broker*; the
-Spark-facing connector is ``sources/sqs.py``. Multi-process safe (Spark
-executor tasks call ``delete_batch`` concurrently) via an O_EXCL spin
-lock — fine for a single-host test broker; a real deployment points the
-same connector surface at SQS itself.
+queue semantics on a locked JSON state file (the shared
+``claims.BrokerDouble``). It is the *broker*; the Spark-facing
+connector is ``sources/sqs.py``. A real deployment points the same
+connector surface at SQS itself.
 
 Receipt-handle semantics mirror SQS: each delivery issues a fresh
 receipt; deletes with a stale receipt (from a superseded delivery) are
@@ -21,79 +20,22 @@ ignored.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
+from broadway_spark.sources.claims import BrokerDouble
 
-class FakeSQSQueue:
+
+class FakeSQSQueue(BrokerDouble):
     STATE = "queue.json"
     LOCK = "_queue.lock"
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    # -- locking ------------------------------------------------------
-
-    def _acquire(self, timeout_s: float = 30.0) -> None:
-        lock = os.path.join(self.path, self.LOCK)
-        deadline = time.time() + timeout_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                return
-            except FileExistsError:
-                if time.time() > deadline:
-                    raise TimeoutError(f"queue lock stuck: {lock}")
-                time.sleep(0.01)
-
-    def _release(self) -> None:
-        try:
-            os.remove(os.path.join(self.path, self.LOCK))
-        except FileNotFoundError:
-            pass
-
-    def _load(self) -> dict:
-        try:
-            with open(os.path.join(self.path, self.STATE)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {"messages": [], "next_id": 0}
-
-    def _save(self, state: dict) -> None:
-        tmp = os.path.join(self.path, self.STATE + ".tmp")
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, os.path.join(self.path, self.STATE))
 
     # -- producer side --------------------------------------------------
 
     def send_batch(self, bodies: list[dict]) -> list[int]:
         """Enqueue messages; returns their ids."""
-        self._acquire()
-        try:
-            st = self._load()
-            ids = []
-            for body in bodies:
-                mid = st["next_id"]
-                st["next_id"] = mid + 1
-                st["messages"].append(
-                    {
-                        "id": mid,
-                        "body": body,
-                        "visible_at": 0.0,
-                        "delivery_count": 0,
-                        "receipt": None,
-                        "deleted": False,
-                    }
-                )
-                ids.append(mid)
-            self._save(st)
-            return ids
-        finally:
-            self._release()
+        return self._enqueue(
+            bodies, visible_at=0.0, delivery_count=0, receipt=None, deleted=False
+        )
 
     # -- consumer side --------------------------------------------------
 
@@ -112,9 +54,7 @@ class FakeSQSQueue:
         fetched later on executors via ``fetch_bodies``.
         """
         now = time.time()
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             out = []
             for m in st["messages"]:
                 if len(out) >= max_n:
@@ -135,36 +75,6 @@ class FakeSQSQueue:
             if out:
                 self._save(st)
             return out
-        finally:
-            self._release()
-
-    def fetch_bodies(self, ids: list[int]) -> dict[int, dict]:
-        """Fetch message payloads by id (executor-side companion to a
-        ``with_bodies=False`` claim). Lockless: the state file is
-        replaced atomically, and a claimed message's body is immutable
-        (entries are flagged deleted, never removed), so a plain read
-        is consistent."""
-        want = set(ids)
-        st = self._load()
-        return {m["id"]: dict(m["body"]) for m in st["messages"] if m["id"] in want}
-
-    # -- reader progress ------------------------------------------------
-
-    def load_reader_seq(self) -> int:
-        """Last trigger seq any reader of this queue has emitted
-        (persisted broker-side so a restarted reader resumes past the
-        checkpointed offset instead of re-claiming into a seq range the
-        planned batch will never read)."""
-        return int(self._load().get("reader_seq", 0))
-
-    def store_reader_seq(self, seq: int) -> None:
-        self._acquire()
-        try:
-            st = self._load()
-            st["reader_seq"] = max(int(st.get("reader_seq", 0)), int(seq))
-            self._save(st)
-        finally:
-            self._release()
 
     def delete_batch(self, receipts: list[str]) -> int:
         """Ack: delete messages by *current* receipt (stale receipts are
@@ -172,9 +82,7 @@ class FakeSQSQueue:
         want = set(receipts)
         if not want:
             return 0
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             n = 0
             for m in st["messages"]:
                 if not m["deleted"] and m["receipt"] in want:
@@ -183,22 +91,16 @@ class FakeSQSQueue:
             if n:
                 self._save(st)
             return n
-        finally:
-            self._release()
 
     def change_visibility(self, receipt: str, timeout_s: float) -> bool:
         """SQS ChangeMessageVisibility — e.g. 0 for immediate retry."""
-        self._acquire()
-        try:
-            st = self._load()
+        with self._locked() as st:
             for m in st["messages"]:
                 if not m["deleted"] and m["receipt"] == receipt:
                     m["visible_at"] = time.time() + timeout_s
                     self._save(st)
                     return True
             return False
-        finally:
-            self._release()
 
     def counts(self) -> dict:
         now = time.time()

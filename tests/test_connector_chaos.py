@@ -1,8 +1,11 @@
-"""Kill-mid-batch restart chaos for the two round-4 connector
+"""Kill-mid-batch restart chaos for the three claim-based connector
 families — at-least-once proven per family, not just happy path
 (round-4 verdict item 9, mirroring tests/test_flow_control.py's
 no-dup/no-loss restart check):
 
+- SQS: the dead reader's claims become VISIBLE again once the
+  visibility timeout runs out, and the broker redelivers them with a
+  bumped delivery count (guides/examples/amazon-sqs.md).
 - Pub/Sub: the dead reader's un-acked LEASES EXPIRE on their own and
   the broker redelivers to the restarted pipeline (ack-deadline
   semantics, guides/examples/google-cloud-pubsub.md).
@@ -28,6 +31,7 @@ from broadway_spark.config import SinkConfig, TopologyConfig
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources.pubsub import PubSubSource
 from broadway_spark.sources.rabbit import RabbitSource
+from broadway_spark.sources.sqs import SQSSource
 
 BODY_DDL = "event_id long, event_type string, value double"
 
@@ -79,7 +83,7 @@ def _crash_on_second_batch(src):
     return bomb
 
 
-def _run_phase1_crash(spark, dirs, src, name):
+def _run_phase1_crash(spark, dirs, src, name, settled_key="acked"):
     q = Pipeline(
         _cfg(name, dirs, src, ack_executor=_crash_on_second_batch(src)), src
     ).start(spark, trigger="processingTime", processing_time="200 milliseconds")
@@ -92,16 +96,18 @@ def _run_phase1_crash(spark, dirs, src, name):
             q.stop()
             q.awaitTermination(60)
     mid = src.counts()
-    assert 0 < mid["acked"] < N, f"crash window missed: {mid}"
+    assert 0 < mid[settled_key] < N, f"crash window missed: {mid}"
 
 
-def _run_phase2_drain(spark, dirs, src, name, timeout_s=120):
+def _run_phase2_drain(
+    spark, dirs, src, name, timeout_s=120, settled_key="acked"
+):
     q = Pipeline(_cfg(name, dirs, src), src).start(
         spark, trigger="processingTime", processing_time="200 milliseconds"
     )
     try:
         assert _wait(
-            lambda: src.counts()["acked"] >= N, timeout_s
+            lambda: src.counts()[settled_key] >= N, timeout_s
         ), f"broker state: {src.counts()}"
     finally:
         q.stop()
@@ -119,6 +125,40 @@ def _assert_no_loss(spark, dirs, src, acked_key="acked"):
     dup = out.count() - len(ids)
     # dups are legal (at-least-once) but bounded by one replayed batch
     assert dup <= N, f"runaway duplication: {dup}"
+
+
+def test_sqs_kill_mid_stream_visibility_expiry_redelivers(
+    spark, tmp_dirs, tmp_path
+):
+    src = SQSSource(
+        name="sqs-chaos",
+        path=str(tmp_path / "q"),
+        schema_ddl=BODY_DDL,
+        max_per_trigger=15,
+        visibility_timeout_s=2.0,  # short: dead-reader claims reappear fast
+    )
+    src.send_messages(_events(N))
+
+    # Phase 1: the crash leaves batch 1's claims received-but-undeleted.
+    _run_phase1_crash(
+        spark, tmp_dirs, src, "sqs-chaos", settled_key="deleted"
+    )
+
+    # The dead reader's claims must turn visible on their own.
+    time.sleep(2.5)
+    assert src.counts()["inflight"] == 0
+
+    # Phase 2: fresh Pipeline, same checkpoint + queue.
+    _run_phase2_drain(
+        spark, tmp_dirs, src, "sqs-chaos", settled_key="deleted"
+    )
+    _assert_no_loss(spark, tmp_dirs, src, acked_key="deleted")
+
+    # redelivery actually happened: some sink row carries count >= 2
+    out = spark.read.parquet(tmp_dirs["sink"])
+    assert (
+        out.filter(F.col("sqs_delivery_count") >= 2).count() > 0
+    ), "kill-restart produced no redeliveries — test lost its teeth"
 
 
 def test_pubsub_kill_mid_stream_lease_expiry_redelivers(
