@@ -8876,20 +8876,14 @@ def q_ds7_channel_exclusive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_l4_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4 INTROSPECTION ON THE ORACLE GATE: Broadway.topology/1 parity
     (broadway.ex:1184-1276) — a representative pipeline's compiled
-    topology (producer / processor / batcher layers with effective
-    settings, including the rate limiter, a tuple budget batch_size,
-    and carried-down partition_by) flattened to rows and hash-checked
-    against a literal twin. Every setting is config-pinned (no
-    machine-dependent defaults), so the surface is deterministic; the
-    pipeline is never started (introspection is a pure function of the
-    config, as in the reference)."""
-    from broadway_spark.config import (
-        BatcherConfig,
-        ProcessorConfig,
-        RateLimit,
-        SinkConfig,
-        TopologyConfig,
-    )
+    topology (producer / processor / batcher layers with the settings
+    the start paths run, including the processor shuffle's
+    partition_by and width and a tuple budget batch_size) flattened to
+    rows and hash-checked against a literal twin. Every setting is
+    config-pinned (no machine-dependent defaults), so the surface is
+    deterministic; the pipeline is never started (introspection is a
+    pure function of the config, as in the reference)."""
+    from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
     from broadway_spark.plans import Pipeline
     from broadway_spark.sources import FileStreamSource
 
@@ -8898,18 +8892,11 @@ def q_l4_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = TopologyConfig(
         name="l4-fixed",
-        processors=ProcessorConfig(
-            concurrency=8, max_demand=10, partition_by="user_id"
-        ),
-        rate_limit=RateLimit(allowed_messages=500, interval_ms=1000),
+        partition_by="user_id",
+        state_partitions=8,
         order_by="event_id",
         batchers={
-            "billing": BatcherConfig(
-                batch_size=16,
-                batch_timeout_ms=250,
-                concurrency=2,
-                partition_by="user_id",
-            ),
+            "billing": BatcherConfig(batch_size=16, batch_timeout_ms=250),
             "default": BatcherConfig(
                 batch_size=("w_cents", 20000.0), batch_timeout_ms=500
             ),
@@ -8923,28 +8910,16 @@ def q_l4_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     topo = Pipeline(cfg, src).topology()
     rows = []
     p = topo["producers"][0]
-    rl = p["rate_limit"]
     rows.append(("producer", p["name"], "kind", p["kind"]))
-    rows.append(
-        (
-            "producer",
-            p["name"],
-            "rate_limit",
-            f"{rl['allowed_messages']}/{rl['interval_ms']}ms",
-        )
-    )
     pr = topo["processors"][0]
-    rows.append(("processor", "-", "concurrency", str(pr["concurrency"])))
-    rows.append(("processor", "-", "max_demand", str(pr["max_demand"])))
     rows.append(("processor", "-", "partition_by", str(pr["partition_by"])))
+    rows.append(
+        ("processor", "-", "state_partitions", str(pr["state_partitions"]))
+    )
     for b in topo["batchers"]:
         rows.append(("batcher", b["name"], "batch_size", str(b["batch_size"])))
         rows.append(
             ("batcher", b["name"], "batch_timeout_ms", str(b["batch_timeout_ms"]))
-        )
-        rows.append(("batcher", b["name"], "concurrency", str(b["concurrency"])))
-        rows.append(
-            ("batcher", b["name"], "partition_by", str(b["partition_by"]))
         )
         rows.append(("batcher", b["name"], "sink", str(b["sink"])))
     return spark.createDataFrame(
@@ -17775,20 +17750,14 @@ def oracle_sql() -> dict[str, str]:
     sql["l4_topology"] = """
             SELECT 'producer' AS layer, 'events' AS name,
                    'kind' AS setting, 'FileStreamSource' AS value
-            UNION ALL SELECT 'producer','events','rate_limit','500/1000ms'
-            UNION ALL SELECT 'processor','-','concurrency','8'
-            UNION ALL SELECT 'processor','-','max_demand','10'
             UNION ALL SELECT 'processor','-','partition_by','user_id'
+            UNION ALL SELECT 'processor','-','state_partitions','8'
             UNION ALL SELECT 'batcher','billing','batch_size','16'
             UNION ALL SELECT 'batcher','billing','batch_timeout_ms','250'
-            UNION ALL SELECT 'batcher','billing','concurrency','2'
-            UNION ALL SELECT 'batcher','billing','partition_by','user_id'
             UNION ALL SELECT 'batcher','billing','sink','sink_billing'
             UNION ALL SELECT 'batcher','default','batch_size',
                              '(''w_cents'', 20000.0)'
             UNION ALL SELECT 'batcher','default','batch_timeout_ms','500'
-            UNION ALL SELECT 'batcher','default','concurrency','1'
-            UNION ALL SELECT 'batcher','default','partition_by','None'
             UNION ALL SELECT 'batcher','default','sink','sink_default'"""
     # l5: the 12 always-emitted span counts are structural constants of
     # a one-micro-batch drain; the metadata rows recompute from events.

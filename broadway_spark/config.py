@@ -8,12 +8,14 @@ Replicates the semantics of the reference's NimbleOptions schema
 - batch_size > 0, or a budget splitter (the ``{init_acc, fun}`` form,
   ``options.ex:233-264``, expressed here as a (weight_column, budget)
   pair)
-- rate limiting: allowed_messages per interval_ms (``options.ex:98-128``)
-- partition_by carried down to processors and batchers unless they
-  define their own (``broadway.ex:1154-1182``)
-- defaults: processor concurrency = 2× cores (``topology.ex:178-182``),
-  batch_size 100 (``options.ex:237``), batch_timeout 1000 ms
-  (``options.ex:276-283``), max_demand 10 (``options.ex:175``)
+- one ``partition_by`` for the processor shuffle (``options.ex:306-316``)
+- defaults: batch_size 100 (``options.ex:237``), batch_timeout 1000 ms
+  (``options.ex:276-283``)
+
+Only settings that a start path reads live here. Rate limiting is the
+source's admission (``allowed_per_trigger`` in ``latestOffset`` plus
+the trigger interval); ``max_demand`` is Arrow batch sizing; processor
+and batcher concurrency is the ``state_partitions`` shuffle width.
 
 Errors raise ``ConfigError`` with NimbleOptions-style messages so tests
 can assert on them the way the reference suite does
@@ -22,7 +24,6 @@ can assert on them the way the reference suite does
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -39,59 +40,6 @@ def _require(cond: bool, msg: str) -> None:
         raise ConfigError(msg)
 
 
-def _default_concurrency() -> int:
-    return (os.cpu_count() or 4) * 2  # topology.ex:178-182
-
-
-@dataclass
-class RateLimit:
-    """≤ allowed_messages admitted per interval_ms, globally.
-
-    (reference ``options.ex:98-128``, ``rate_limiter.ex:44-106``)
-    """
-
-    allowed_messages: int
-    interval_ms: int
-
-    def validate(self) -> None:
-        _require(
-            isinstance(self.allowed_messages, int) and self.allowed_messages > 0,
-            ":allowed_messages is required and must be a positive integer",
-        )
-        _require(
-            isinstance(self.interval_ms, int) and self.interval_ms > 0,
-            ":interval is required and must be a positive integer",
-        )
-
-
-@dataclass
-class ProcessorConfig:
-    """The single processor layer (``options.ex:153-199``)."""
-
-    concurrency: int = field(default_factory=_default_concurrency)
-    max_demand: int = 10  # options.ex:175 — maps to Arrow batch size
-    # options.ex:306-316 — column form (name or Column) or function
-    # form (callable DataFrame -> Column, the arbitrary-function parity)
-    partition_by: str | Column | Callable | None = None
-
-    def validate(self) -> None:
-        _require(
-            isinstance(self.concurrency, int) and self.concurrency > 0,
-            "invalid value for :concurrency option: expected positive integer",
-        )
-        _require(
-            isinstance(self.max_demand, int) and self.max_demand > 0,
-            "invalid value for :max_demand option: expected positive integer",
-        )
-        _require(
-            self.partition_by is None
-            or isinstance(self.partition_by, (str, Column))
-            or callable(self.partition_by),
-            "invalid value for :partition_by option: expected a column "
-            "name, Column, or function (options.ex:306-316)",
-        )
-
-
 @dataclass
 class BatcherConfig:
     """One named batcher (``options.ex:200-290``).
@@ -102,9 +50,10 @@ class BatcherConfig:
     """
 
     batch_size: int | tuple[str, float] = 100  # options.ex:237
-    batch_timeout_ms: int = 1000  # options.ex:276-283
-    concurrency: int = 1  # options.ex:221-232
-    partition_by: str | Column | Callable | None = None
+    # options.ex:276-283. Only start_stateful reads it (per-key timers);
+    # start() closes partial chunks at the micro-batch boundary as
+    # trigger='timeout'.
+    batch_timeout_ms: int = 1000
 
     def validate(self, name: str) -> None:
         bs = self.batch_size
@@ -124,11 +73,6 @@ class BatcherConfig:
         _require(
             isinstance(self.batch_timeout_ms, int) and self.batch_timeout_ms > 0,
             f"invalid value for :batch_timeout option in batcher {name!r}: "
-            f"expected positive integer",
-        )
-        _require(
-            isinstance(self.concurrency, int) and self.concurrency > 0,
-            f"invalid value for :concurrency option in batcher {name!r}: "
             f"expected positive integer",
         )
 
@@ -185,12 +129,14 @@ class TopologyConfig:
     """
 
     name: str
-    processors: ProcessorConfig = field(default_factory=ProcessorConfig)
     batchers: dict[str, BatcherConfig] = field(default_factory=dict)
     sinks: dict[str, SinkConfig] = field(default_factory=dict)
     dlq: SinkConfig | None = None
     ack_log: SinkConfig | None = None
-    rate_limit: RateLimit | None = None
+    # options.ex:306-316: hash-shuffle the processed rows on this key
+    # (at state_partitions width) so equal keys co-locate and per-key
+    # order survives parallelism. Column form (name or Column) or
+    # function form (callable DataFrame -> Column).
     partition_by: str | Column | Callable | None = None
     checkpoint_dir: str | None = None
     transformer: Callable[[DataFrame], DataFrame] | None = None
@@ -231,7 +177,13 @@ class TopologyConfig:
             isinstance(self.name, str) and self.name != "",
             "invalid value for :name option: expected non-empty string",
         )
-        self.processors.validate()
+        _require(
+            self.partition_by is None
+            or isinstance(self.partition_by, (str, Column))
+            or callable(self.partition_by),
+            "invalid value for :partition_by option: expected a column "
+            "name, Column, or function (options.ex:306-316)",
+        )
         _require(
             isinstance(self.state_partitions, int)
             and not isinstance(self.state_partitions, bool)
@@ -261,8 +213,6 @@ class TopologyConfig:
             self.dlq.validate("dlq")
         if self.ack_log is not None:
             self.ack_log.validate("ack_log")
-        if self.rate_limit is not None:
-            self.rate_limit.validate()
         _require(
             self.route_by is None or bool(self.batchers),
             ":route_by requires at least one batcher "
@@ -282,12 +232,4 @@ class TopologyConfig:
             "'default' is required (every message routes to :default, "
             "broadway.ex batcher-existence check)",
         )
-        # Carry-over (broadway.ex:1154-1182): top-level partition_by
-        # cascades to layers that don't define their own.
-        if self.partition_by is not None:
-            if self.processors.partition_by is None:
-                self.processors.partition_by = self.partition_by
-            for b in self.batchers.values():
-                if b.partition_by is None:
-                    b.partition_by = self.partition_by
         return self

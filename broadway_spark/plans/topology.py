@@ -93,46 +93,27 @@ class Pipeline:
             )
         if cfg.batch_key_by is not None:
             df = df.withColumn("batch_key", cfg.batch_key_by.cast("string"))
-        if cfg.processors.partition_by is not None:
-            # partition_by contract (options.ex:306-316): co-locate equal
-            # keys so per-key order survives parallelism. Hash-shuffle on
-            # the key into `concurrency` partitions. Accepts the column
-            # form (name/Column) or function form (DataFrame -> Column).
-            df = df.repartition(
-                cfg.processors.concurrency,
-                resolve_partition_expr(cfg.processors.partition_by, df),
-            )
+        if cfg.partition_by is not None:
+            # No count: the shuffle runs at the query's width,
+            # state_partitions, which _start_query pins.
+            df = df.repartition(resolve_partition_expr(cfg.partition_by, df))
         return df
 
     # -- introspection (L4: Broadway.topology/1, broadway.ex:1184-1276)
 
     def topology(self) -> dict:
         """Describe the compiled topology — producer, processor, and
-        batcher layers with their effective settings."""
+        batcher layers with the settings the start paths run."""
         cfg = self.config
         return {
             "name": cfg.name,
             "producers": [
-                {
-                    "name": self.source.name,
-                    "kind": type(self.source).__name__,
-                    "rate_limit": (
-                        {
-                            "allowed_messages": cfg.rate_limit.allowed_messages,
-                            "interval_ms": cfg.rate_limit.interval_ms,
-                        }
-                        if cfg.rate_limit
-                        else None
-                    ),
-                }
+                {"name": self.source.name, "kind": type(self.source).__name__}
             ],
             "processors": [
                 {
-                    "concurrency": cfg.processors.concurrency,
-                    "max_demand": cfg.processors.max_demand,
-                    "partition_by": partition_by_label(
-                        cfg.processors.partition_by
-                    ),
+                    "partition_by": partition_by_label(cfg.partition_by),
+                    "state_partitions": cfg.state_partitions,
                 }
             ],
             "batchers": [
@@ -140,8 +121,6 @@ class Pipeline:
                     "name": n,
                     "batch_size": b.batch_size,
                     "batch_timeout_ms": b.batch_timeout_ms,
-                    "concurrency": b.concurrency,
-                    "partition_by": partition_by_label(b.partition_by),
                     "sink": cfg.sinks[n].path if n in cfg.sinks else None,
                 }
                 for n, b in cfg.batchers.items()
@@ -222,7 +201,8 @@ class Pipeline:
         """Run with the *stateful* batcher: cross-micro-batch buffers +
         per-key timeout timers (``streaming/stateful_batcher.py``,
         ``applyInPandasWithState``) — the faithful B2/B3 semantics.
-        Requires integer batch sizes.
+        Requires integer batch sizes, and no ``handle_batch`` or
+        ``handle_failed`` hook: this path does not call them.
 
         The stateful stage does the chunking; foreachBatch only fans
         chunks out to sinks and DLQ, then appends the ack log and calls
@@ -237,6 +217,12 @@ class Pipeline:
                 raise ConfigError(
                     f"stateful batching requires integer batch_size "
                     f"(batcher {name!r})"
+                )
+        for hook in ("handle_batch", "handle_failed"):
+            if getattr(cfg, hook) is not None:
+                raise ConfigError(
+                    f"stateful batching does not call {hook}; unset it or "
+                    f"use start()"
                 )
 
         stream = self.build_stream(spark)

@@ -11,12 +11,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from broadway_spark.config import (
-    BatcherConfig,
-    RateLimit,
-    SinkConfig,
-    TopologyConfig,
-)
+from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources import SpoolSource
 
@@ -55,9 +50,7 @@ def test_rate_limit_per_trigger(spark, tmp_dirs):
     completely."""
     k = 25
     src = _source(tmp_dirs, n=100, allowed=k)
-    pipe = Pipeline(
-        _basic_config(tmp_dirs, rate_limit=RateLimit(k, 100)), src
-    )
+    pipe = Pipeline(_basic_config(tmp_dirs), src)
     q = pipe.start(spark, trigger="processingTime", processing_time="0 seconds")
     try:
         deadline = time.time() + 120
@@ -177,9 +170,7 @@ def test_rate_limit_interval_gap_contract(spark, tmp_dirs):
 
     k, interval_ms = 20, 500
     src = _source(tmp_dirs, n=120, allowed=k)
-    pipe = Pipeline(
-        _basic_config(tmp_dirs, rate_limit=RateLimit(k, interval_ms)), src
-    )
+    pipe = Pipeline(_basic_config(tmp_dirs), src)
     q = pipe.start(
         spark, trigger="processingTime", processing_time=f"{interval_ms} milliseconds"
     )

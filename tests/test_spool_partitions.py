@@ -103,6 +103,7 @@ def test_function_form_partition_by_preserves_key_order(spark, tmp_dirs, tmp_pat
         name="fn-partition",
         order_by="event_id",
         partition_by=lambda df: F.pmod(F.col("user_id"), F.lit(3)),
+        state_partitions=8,
         batch_key_by=F.col("user_id"),
         handle_batch=handle_batch,
         batchers={"default": BatcherConfig(batch_size=25)},
@@ -157,6 +158,7 @@ def test_per_key_order_preserved_under_parallel_reads(spark, tmp_dirs, tmp_path)
         name="s4-order",
         order_by="event_id",
         partition_by="user_id",
+        state_partitions=8,
         batch_key_by=F.col("user_id"),
         handle_batch=handle_batch,
         batchers={"default": BatcherConfig(batch_size=25)},

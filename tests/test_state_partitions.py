@@ -4,6 +4,7 @@ pipeline's query on both start paths, and results do not depend on it.
 
 import json
 import os
+import re
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -165,3 +166,18 @@ def test_results_do_not_depend_on_width(spark, tmp_path):
     for k in ("billing", "default", "dlq"):
         assert narrow[k] == wide[k], k
     assert len(narrow["dlq"][1]) == 90
+
+
+def test_partition_by_shuffle_runs_at_state_partitions(spark, tmp_dirs):
+    """The processor shuffle a partition_by key adds runs at the query's
+    width, state_partitions, not at a core-count default."""
+    q = Pipeline(
+        _consumer_config(tmp_dirs, partition_by="user_id"), _spool(tmp_dirs)
+    ).start(spark)
+    try:
+        assert q.awaitTermination(120), "drain incomplete"
+    finally:
+        q.stop()
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    shuffles = re.findall(r"hashpartitioning\(user_id#\d+L?, (\d+)\)", plan)
+    assert shuffles and set(shuffles) == {"3"}, plan

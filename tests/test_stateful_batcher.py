@@ -4,10 +4,16 @@ timers (reference ``batcher_stage.ex`` semantics; SURVEY §2.4 B1-B4).
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from broadway_spark import message as M
-from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
+from broadway_spark.config import (
+    BatcherConfig,
+    ConfigError,
+    SinkConfig,
+    TopologyConfig,
+)
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources import SpoolSource
 
@@ -233,3 +239,27 @@ def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):
     assert logged == want
     assert sorted(recorded) == sorted(want | {(i, "retry") for i in retry_ids})
     assert spark.conf.get(provider_key) == provider_before
+
+
+@pytest.mark.parametrize("hook", ["handle_batch", "handle_failed"])
+def test_start_stateful_rejects_hooks_it_does_not_call(spark, tmp_dirs, hook):
+    """start_stateful's sink writer never calls handle_batch or
+    handle_failed, so setting either is a config error, not a silent
+    no-op."""
+    fn = (lambda name, pdf: pdf) if hook == "handle_batch" else (lambda pdf: pdf)
+    cfg = TopologyConfig(
+        name="stateful-hooks",
+        batchers={"default": BatcherConfig(batch_size=5)},
+        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
+        checkpoint_dir=tmp_dirs["ckpt"],
+        **{hook: fn},
+    )
+    src = SpoolSource(
+        name="spool",
+        path=tmp_dirs["spool"],
+        schema_ddl=EVENTS_DDL,
+        ack_data_column="event_id",
+    )
+    with pytest.raises(ConfigError, match=hook):
+        Pipeline(cfg, src).start_stateful(spark)
+    assert "stateful-hooks-stateful" not in {q.name for q in spark.streams.active}
