@@ -8930,7 +8930,7 @@ def q_l4_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_l5_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 TELEMETRY ON THE ORACLE GATE: one availableNow drain of the
     events file through a two-batcher topology with handle_failed,
-    recorded by SpanRecorder — then the span catalogue's per-event
+    recorded by observe.Recorder — then the span catalogue's per-event
     counts plus the load-bearing metadata (processor message/failed
     counts, batcher routed totals) hash-checked against a DuckDB twin
     that recomputes the metadata from events.parquet. One input file =
@@ -8949,7 +8949,7 @@ def q_l5_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from broadway_spark.plans import Pipeline
     from broadway_spark.sources import FileStreamSource
-    from broadway_spark.streaming.spans import SpanRecorder
+    from broadway_spark.observe import Recorder
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
@@ -8964,7 +8964,7 @@ def q_l5_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             options={"pathGlobFilter": "events.parquet"},
         )
     base = tempfile.mkdtemp(prefix="bw_l5_")
-    rec = SpanRecorder()
+    rec = Recorder()
     cfg = TopologyConfig(
         name=f"l5_spans_{_uuid.uuid4().hex[:8]}",
         transformer=lambda df: df.drop("ts"),
@@ -8996,7 +8996,7 @@ def q_l5_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = [
         ("span", ev, len(rec.events(ev)))
-        for ev in SpanRecorder.CATALOGUE
+        for ev in Recorder.CATALOGUE
         if ev != "handle_failed:exception"
     ]
     rows.append(

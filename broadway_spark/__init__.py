@@ -19,7 +19,9 @@ as an idiomatic Apache Spark engine:
 - ``broadway_spark.sources``    — file-stream and custom Python data
   sources with admission control (rate limiting).
 - ``broadway_spark.streaming``  — foreachBatch router, bulk ack
-  executor, dead-letter sinks, telemetry listener.
+  executor, dead-letter sinks.
+- ``broadway_spark.observe``    — telemetry: one recorder for the
+  reference's span events and the queries' progress.
 
 Everything is expressed DataFrame-first so Catalyst can optimize
 (predicate pushdown, column pruning, broadcast joins, AQE); Python

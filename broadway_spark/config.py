@@ -30,6 +30,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 
+from broadway_spark.observe import Recorder
+
 
 class ConfigError(ValueError):
     """Invalid topology configuration (NimbleOptions-style)."""
@@ -152,10 +154,11 @@ class TopologyConfig:
     # e.g. SQSSource.make_ack_executor(). None = checkpoint-only acks
     # (Kafka/spool offset commit).
     ack_executor: Callable[[DataFrame, int], None] | None = None
-    # L5: a streaming.spans.SpanRecorder collecting the 13-event
-    # Broadway span catalogue (broadway.ex:651-887). None = no span
-    # accounting (zero overhead).
-    telemetry: Any | None = None
+    # L5: a broadway_spark.observe.Recorder collecting the 13-event
+    # Broadway span catalogue (broadway.ex:651-887); registered with
+    # spark.streams.addListener it also records query progress into the
+    # same event stream. None = no span accounting (zero overhead).
+    telemetry: Recorder | None = None
     # Width of every shuffle in the pipeline's query, on both start
     # paths (Pipeline.start/run_to_completion and start_stateful): the
     # router's chunk windows and handle_batch pass, and the stateful

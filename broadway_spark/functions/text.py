@@ -33,10 +33,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.lower(c), " ")
 
 
-def tokens_sql(expr: str) -> str:
-    return f"string_split(lower({expr}), ' ')"
-
-
 def word_shingles(col_name: str, k: int = 3) -> Column:
     """Distinct k-word shingles of a text column. array<string>.
 
@@ -229,22 +225,6 @@ def quality_score(col_name: str) -> Column:
     alpha_c = F.when(n_chars > 0, n_alpha / n_chars).otherwise(F.lit(0.0))
     stop_c = F.least(F.lit(4.0) * n_stop / F.greatest(n_tok, F.lit(1.0)), F.lit(1.0))
     return F.round((length_c + alpha_c + stop_c) / F.lit(3.0), 6)
-
-
-def quality_score_sql(expr: str) -> str:
-    en_markers = ", ".join(f"'{m}'" for m in LANG_MARKERS["en"])
-    n_tok = f"CAST(len(string_split(lower({expr}), ' ')) AS DOUBLE)"
-    no_ws = f"regexp_replace({expr}, '\\s+', '', 'g')"
-    n_chars = f"CAST(length({no_ws}) AS DOUBLE)"
-    n_alpha = f"CAST(length(regexp_replace({no_ws}, '[^A-Za-z]', '', 'g')) AS DOUBLE)"
-    n_stop = (
-        f"CAST(len(list_filter(string_split(lower({expr}), ' '), "
-        f"x -> x IN ({en_markers}))) AS DOUBLE)"
-    )
-    length_c = f"least({n_tok} / 64.0, 1.0)"
-    alpha_c = f"(CASE WHEN {n_chars} > 0 THEN {n_alpha} / {n_chars} ELSE 0.0 END)"
-    stop_c = f"least(4.0 * {n_stop} / greatest({n_tok}, 1.0), 1.0)"
-    return f"round(({length_c} + {alpha_c} + {stop_c}) / 3.0, 6)"
 
 
 def quality_ppm(col_name: str) -> Column:

@@ -31,16 +31,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-ENVELOPE_COLS = (
-    "metadata",
-    "batcher",
-    "batch_key",
-    "batch_mode",
-    "status",
-    "ack",
-    "ack_policy",
-)
-
 # ack_policy values (A3/A4 in SURVEY §2.5):
 #   'late'    — default: ack at the terminal stage (at-least-once)
 #   'early'   — Message.ack_immediately/1 (message.ex:172-201): ack as
@@ -198,8 +188,3 @@ def put_batch_mode(
         "batch_mode",
         F.when(cond, F.lit(mode)).otherwise(F.col("batch_mode")),
     )
-
-
-def payload_columns(df: DataFrame) -> list[str]:
-    """The non-envelope (payload) columns of an enveloped DataFrame."""
-    return [c for c in df.columns if c not in ENVELOPE_COLS]

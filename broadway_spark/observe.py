@@ -1,7 +1,8 @@
-"""Span telemetry — the full 13-event catalogue of the reference
-(``lib/broadway.ex:651-887``), re-expressed for micro-batch execution.
+"""Telemetry — one recorder for the reference's 13 :telemetry span
+events (``lib/broadway.ex:651-887``) and Structured Streaming's
+per-trigger query progress.
 
-Event names mirror the reference's `[:broadway, ...]` atoms:
+Span event names mirror the reference's `[:broadway, ...]` atoms:
 
     topology:init                      (broadway.ex:656-662)
     processor:start / stop             (:664-700)
@@ -25,10 +26,19 @@ Start events carry ``system_time`` (epoch seconds); stop/exception
 events carry ``duration`` (seconds since the matching start) — the
 :telemetry.span/3 convention.
 
-The recorder is driver-side and in-memory (optionally JSONL-mirrored).
-Span accounting adds at most two small aggregate jobs per micro-batch
-on the already-persisted batch DataFrame, and nothing at all when no
-recorder is configured.
+Registered with ``spark.streams.addListener``, the same recorder also
+emits ``query:start``, ``query:progress`` and ``query:stop``, each with
+the query name in its metadata. ``query:progress`` carries the
+micro-batch's ``batch_id``, input row count, phase durations and
+``DataFrame.observe`` metrics (see ``observed``), so it joins with the
+router's spans on ``batch_id``.
+
+The recorder keeps its events in memory in the process that starts
+the queries, optionally mirrored to one JSONL file (one line per
+event). Span accounting adds one counting aggregate per micro-batch
+on the already-persisted batch DataFrame (plus a three-row reason
+sample when rows failed), and nothing at all when no recorder is
+configured.
 """
 
 from __future__ import annotations
@@ -36,8 +46,23 @@ from __future__ import annotations
 import json
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryListener
+
+
+def observed(df: DataFrame, name: str) -> DataFrame:
+    """Attach engine-standard observed metrics to a stage boundary:
+    message count + failure count (the start/stop span payload of
+    processor_stage telemetry)."""
+    return df.observe(
+        name,
+        F.count(F.lit(1)).alias("messages"),
+        F.sum(F.when(~F.col("status.ok"), 1).otherwise(0)).alias("failed"),
+    )
 
 
 @dataclass
@@ -47,9 +72,10 @@ class Span:
     metadata: dict = field(default_factory=dict)
 
 
-class SpanRecorder:
-    """Collects Broadway-taxonomy spans; thread-safe (foreachBatch may
-    run concurrently with listener callbacks)."""
+class Recorder(StreamingQueryListener):
+    """Collects Broadway-taxonomy spans and query lifecycle events;
+    thread-safe (foreachBatch runs concurrently with listener
+    callbacks)."""
 
     CATALOGUE = (
         "topology:init",
@@ -71,9 +97,12 @@ class SpanRecorder:
         self.spans: list[Span] = []
         self._lock = threading.Lock()
         self._jsonl_path = jsonl_path
+        self._queries: dict[str, tuple[str, float]] = {}  # id → (name, t0)
 
     def emit(self, event: str, measurement: dict, metadata: dict) -> None:
-        sp = Span(event, measurement, metadata)
+        # Copies: a caller that keeps mutating its dicts (span() yields
+        # its metadata) must not rewrite a record already emitted.
+        sp = Span(event, dict(measurement), dict(metadata))
         with self._lock:
             self.spans.append(sp)
             if self._jsonl_path:
@@ -82,8 +111,8 @@ class SpanRecorder:
                         json.dumps(
                             {
                                 "event": event,
-                                **measurement,
-                                "metadata": metadata,
+                                **sp.measurement,
+                                "metadata": sp.metadata,
                             },
                             default=str,
                         )
@@ -107,6 +136,42 @@ class SpanRecorder:
             raise
         self.emit(name + ":stop", {"duration": time.monotonic() - t0}, metadata)
 
+    # -- StreamingQueryListener callbacks ------------------------------
+
+    def onQueryStarted(self, event) -> None:
+        name = event.name or str(event.id)
+        with self._lock:
+            self._queries[str(event.id)] = (name, time.monotonic())
+        self.emit("query:start", {"system_time": time.time()}, {"query": name})
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        self.emit(
+            "query:progress",
+            {
+                "num_input_rows": p.numInputRows,
+                "duration_ms": dict(p.durationMs or {}),
+            },
+            {
+                "query": p.name or str(p.id),
+                "batch_id": p.batchId,
+                "observed": {
+                    k: v.asDict() for k, v in (p.observedMetrics or {}).items()
+                },
+            },
+        )
+
+    def onQueryTerminated(self, event) -> None:
+        with self._lock:
+            name, t0 = self._queries.pop(
+                str(event.id), (str(event.id), time.monotonic())
+            )
+        self.emit(
+            "query:stop",
+            {"duration": time.monotonic() - t0},
+            {"query": name, "exception": event.exception},
+        )
+
     # -- queries (test/ops surface) -----------------------------------
 
     def events(self, event: str | None = None) -> list[Span]:
@@ -118,3 +183,9 @@ class SpanRecorder:
     def kinds(self) -> set[str]:
         with self._lock:
             return {s.event for s in self.spans}
+
+
+def span(rec: Recorder | None, name: str, **metadata):
+    """``rec.span(name, **metadata)``, or a context that only yields
+    ``metadata`` when telemetry is off (``rec`` is None)."""
+    return nullcontext(metadata) if rec is None else rec.span(name, **metadata)

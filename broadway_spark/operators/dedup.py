@@ -306,20 +306,6 @@ def _signature_from_shingles(shingled: DataFrame, num_hashes: int) -> DataFrame:
     return hashed.groupBy("__id").agg(*aggs)
 
 
-def band_values(sig_col: Column | str, num_hashes: int, bands: int) -> Column:
-    """LSH band keys: array<string>, one joined-value string per band."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
-    rows_per_band = num_hashes // bands
-    vals = []
-    for b in range(bands):
-        elems = [
-            F.element_at(sig, b * rows_per_band + j + 1).cast("string")
-            for j in range(rows_per_band)
-        ]
-        vals.append(F.concat_ws("-", F.lit(str(b)), *elems))
-    return F.array(*vals)
-
-
 def _banded_keys(shingled: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(__id, __band) band-bucket keys from a shingle table — the ONE
     place the banding scheme lives. Both the symmetric pair generator

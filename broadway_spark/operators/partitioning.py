@@ -16,7 +16,7 @@
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -85,8 +85,3 @@ def route_by(
             routed.isin(list(valid_batchers)), routed
         ).otherwise(F.lit("invalid"))
     return df.withColumn(BATCHER_COL, routed)
-
-
-def routed_counts(df: DataFrame, extra_keys: Mapping[str, Column] | None = None) -> DataFrame:
-    """Per-route row counts — the observable contract of routing."""
-    return df.groupBy(BATCHER_COL).count()

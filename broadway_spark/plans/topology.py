@@ -17,12 +17,15 @@ the ack-log sink replaces ``CallerAcknowledger`` messages.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from broadway_spark import message as M
 from broadway_spark.config import ConfigError, TopologyConfig
+from broadway_spark.observe import span
 from broadway_spark.operators.partitioning import (
     partition_by_label,
     resolve_partition_expr,
@@ -134,11 +137,9 @@ class Pipeline:
         the pipeline topology is initialized, config in metadata."""
         rec = self.config.telemetry
         if rec is not None:
-            import time as _time
-
             rec.emit(
                 "topology:init",
-                {"system_time": _time.time()},
+                {"system_time": time.time()},
                 {"config": self.topology()},
             )
 
@@ -236,8 +237,6 @@ class Pipeline:
         )
 
         def sink_writer(batch_df: DataFrame, batch_id: int) -> None:
-            from contextlib import nullcontext
-
             rec = cfg.telemetry
             batch_df = batch_df.persist()
             try:
@@ -250,20 +249,22 @@ class Pipeline:
                     with rec.span(
                         "processor", topology_name=cfg.name, batch_id=batch_id
                     ) as meta:
-                        meta["messages"] = batch_df.count()
-                        meta["failed"] = failed.count()
-                for name, sink in cfg.sinks.items():
-                    span_bp = (
-                        rec.span(
-                            "batch_processor",
-                            topology_name=cfg.name,
-                            batcher_key=name,
-                            batch_id=batch_id,
+                        meta.update(
+                            batch_df.agg(
+                                F.count(F.lit(1)).alias("messages"),
+                                F.count_if(~F.col("status_ok")).alias("failed"),
+                            )
+                            .first()
+                            .asDict()
                         )
-                        if rec is not None
-                        else nullcontext()
-                    )
-                    with span_bp:
+                for name, sink in cfg.sinks.items():
+                    with span(
+                        rec,
+                        "batch_processor",
+                        topology_name=cfg.name,
+                        batcher_key=name,
+                        batch_id=batch_id,
+                    ):
                         _write(
                             ok.filter(F.col("batcher") == name).drop(
                                 "chunk_seq", "trigger", "batch_size"

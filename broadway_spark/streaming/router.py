@@ -30,14 +30,13 @@ driver.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
-from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from broadway_spark.config import TopologyConfig
+from broadway_spark.observe import span
 from broadway_spark.operators.batching import (
     apply_per_batch_streamed,
     chunk_by_budget,
@@ -146,42 +145,67 @@ def _make_batch_hook(batcher_name: str, hook, order_col: str):
     return per_batch
 
 
+def _chunk(sub: DataFrame, batch_size, order_col: str) -> DataFrame:
+    """Chunk one batcher's ok rows per batch_key by size or weight
+    budget, annotated with each chunk's ``batch_size_`` and the
+    ``trigger_`` label its acks carry."""
+    if isinstance(batch_size, tuple):
+        weight_col, budget = batch_size
+        chunked = chunk_by_budget(sub, ["batch_key"], order_col, weight_col, budget)
+        size_lit = None
+    else:
+        chunked = chunk_by_size(sub, ["batch_key"], order_col, batch_size)
+        size_lit = batch_size
+    w = Window.partitionBy("batch_key", "chunk_id")
+    chunked = chunked.withColumn(
+        "batch_size_", F.count(F.lit(1)).over(w).cast("int")
+    )
+    trigger = (
+        F.when(F.col("batch_mode") == "flush", F.lit("flush"))
+        .when(
+            F.lit(size_lit is not None)
+            & (F.col("batch_size_") == F.lit(size_lit or -1)),
+            F.lit("size"),
+        )
+        .otherwise(F.lit("timeout"))
+    )
+    return chunked.withColumn("trigger_", trigger)
+
+
 def build_router(
     config: TopologyConfig,
 ) -> Callable[[DataFrame, int], None]:
     """Compile the topology's back half into a foreachBatch function."""
 
     def router(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        rec = getattr(config, "telemetry", None)
+        rec = config.telemetry
         batch_df = batch_df.persist()
         # Span accounting (L5, broadway.ex:651-887): the processor half
         # executes inside the first materialization of the persisted
-        # batch, so the counting aggregate below IS the processor span
-        # body. Aggregated per-message spans + exception variant follow
-        # (see streaming/spans.py for the vectorization contract).
-        n_ok = n_failed = 0
+        # batch, so the one counting aggregate below IS the processor
+        # span body; it also yields the per-batcher routed counts.
+        # Aggregated per-message spans + exception variant follow (see
+        # broadway_spark/observe.py for the vectorization contract).
+        n_failed = 0
+        per_batcher: dict[str, int] = {}
         if rec is not None:
             with rec.span(
                 "processor", topology_name=config.name, batch_id=batch_id
             ) as meta:
-                counts = {
-                    r["ok"]: r["n"]
-                    for r in batch_df.groupBy(
-                        F.col("status.ok").alias("ok")
-                    )
+                counts = (
+                    batch_df.groupBy(F.col("status.ok").alias("ok"), "batcher")
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
-                }
-                n_ok = counts.get(True, 0)
-                n_failed = counts.get(False, 0)
-                meta["messages"] = n_ok + n_failed
+                )
+                n_failed = sum(r["n"] for r in counts if r["ok"] is False)
+                per_batcher = {r["batcher"]: r["n"] for r in counts if r["ok"]}
+                meta["messages"] = n_failed + sum(per_batcher.values())
                 meta["failed"] = n_failed
             with rec.span(
                 "processor:message",
                 topology_name=config.name,
                 batch_id=batch_id,
-                messages=n_ok + n_failed,
+                messages=meta["messages"],
             ):
                 pass
             if n_failed:
@@ -225,18 +249,14 @@ def build_router(
                 )
 
             # --- failed branch: handle_failed hook → DLQ → ack failed
-            span_failed = (
-                rec.span(
+            if config.handle_failed is not None:
+                with span(
+                    rec,
                     "handle_failed",
                     topology_name=config.name,
                     batch_id=batch_id,
                     messages=n_failed,
-                )
-                if rec is not None and config.handle_failed is not None
-                else nullcontext()
-            )
-            with span_failed:
-                if config.handle_failed is not None:
+                ):
                     hook_failed = config.handle_failed
                     failed_schema = failed.schema
 
@@ -274,26 +294,26 @@ def build_router(
                         # materialize inside the span so its duration
                         # covers the hook's actual execution
                         failed.count()
-                if config.dlq is not None:
-                    # Tag each DLQ row with its disposition so consumers
-                    # can tell transient retry failures (the source will
-                    # redeliver; the row may later succeed) from
-                    # terminal ones. Without the tag, DLQ counts
-                    # overstate permanent failures.
-                    disposition = (
-                        F.when(
-                            F.col("ack_policy") == "retry", F.lit("retry")
-                        ).otherwise(F.lit("terminal"))
-                        if has_policy
-                        else F.lit("terminal")
-                    )
-                    _write(
-                        failed.withColumn("dlq_disposition", disposition),
-                        config.dlq.path,
-                        config.dlq.format,
-                        batch_id,
-                        config.dlq.idempotent,
-                    )
+            if config.dlq is not None:
+                # Tag each DLQ row with its disposition so consumers
+                # can tell transient retry failures (the source will
+                # redeliver; the row may later succeed) from
+                # terminal ones. Without the tag, DLQ counts
+                # overstate permanent failures.
+                disposition = (
+                    F.when(
+                        F.col("ack_policy") == "retry", F.lit("retry")
+                    ).otherwise(F.lit("terminal"))
+                    if has_policy
+                    else F.lit("terminal")
+                )
+                _write(
+                    failed.withColumn("dlq_disposition", disposition),
+                    config.dlq.path,
+                    config.dlq.format,
+                    batch_id,
+                    config.dlq.idempotent,
+                )
             # A4: failed rows with on_failure=retry flow through
             # handle_failed and the DLQ like any failure (the reference
             # runs handle_failed for every failed message,
@@ -325,97 +345,49 @@ def build_router(
                 ack_parts.append(_ack_rows(late_ok, batch_id, "ok"))
             else:
                 order_col = config.order_by
-                per_batcher: dict[str, int] = {}
-                if rec is not None:
-                    per_batcher = {
-                        r["batcher"]: r["n"]
-                        for r in ok.groupBy("batcher")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    }
                 for name, bcfg in config.batchers.items():
-                    sub = ok.filter(F.col("batcher") == name)
-                    if rec is not None:
-                        rec.emit(
-                            "batcher:start",
-                            {"system_time": time.time()},
-                            {
-                                "topology_name": config.name,
-                                "batcher_key": name,
-                                "batch_id": batch_id,
-                                "messages": per_batcher.get(name, 0),
-                            },
+                    # batcher stage = grouping/annotation; batch_processor
+                    # = the sink write, where handle_batch executes.
+                    with span(
+                        rec,
+                        "batcher",
+                        topology_name=config.name,
+                        batcher_key=name,
+                        batch_id=batch_id,
+                        messages=per_batcher.get(name, 0),
+                    ):
+                        chunked = _chunk(
+                            ok.filter(F.col("batcher") == name),
+                            bcfg.batch_size,
+                            order_col,
                         )
-                    _t0 = time.monotonic()
-                    if isinstance(bcfg.batch_size, tuple):
-                        weight_col, budget = bcfg.batch_size
-                        chunked = chunk_by_budget(
-                            sub, ["batch_key"], order_col, weight_col, budget
-                        )
-                        size_lit = None
-                    else:
-                        chunked = chunk_by_size(
-                            sub, ["batch_key"], order_col, bcfg.batch_size
-                        )
-                        size_lit = bcfg.batch_size
-                    w = Window.partitionBy("batch_key", "chunk_id")
-                    chunked = chunked.withColumn(
-                        "batch_size_", F.count(F.lit(1)).over(w).cast("int")
-                    )
-                    trigger = (
-                        F.when(F.col("batch_mode") == "flush", F.lit("flush"))
-                        .when(
-                            F.lit(size_lit is not None)
-                            & (F.col("batch_size_") == F.lit(size_lit or -1)),
-                            F.lit("size"),
-                        )
-                        .otherwise(F.lit("timeout"))
-                    )
-                    chunked = chunked.withColumn("trigger_", trigger)
-
-                    if config.handle_batch is not None:
-                        per_batch = _make_batch_hook(
-                            name, config.handle_batch, order_col
-                        )
-                        # streamed runner: one Python entry per Arrow
-                        # chunk instead of per (batch_key, chunk) group
-                        # — at millions of keys per micro-batch the
-                        # per-group dispatch tax dominates otherwise.
-                        chunked = apply_per_batch_streamed(
-                            chunked,
-                            ["batch_key", "chunk_id"],
-                            per_batch,
-                            schema=chunked.schema,
-                        )
-                        chunked = chunked.persist()
-                        hook_cache.append(chunked)
-                    if rec is not None:
-                        # batcher stage = grouping/annotation (ends
-                        # here); batch_processor = the sink write,
-                        # where handle_batch actually executes.
-                        rec.emit(
-                            "batcher:stop",
-                            {"duration": time.monotonic() - _t0},
-                            {
-                                "topology_name": config.name,
-                                "batcher_key": name,
-                                "batch_id": batch_id,
-                            },
-                        )
+                        if config.handle_batch is not None:
+                            per_batch = _make_batch_hook(
+                                name, config.handle_batch, order_col
+                            )
+                            # streamed runner: one Python entry per Arrow
+                            # chunk instead of per (batch_key, chunk)
+                            # group — at millions of keys per micro-batch
+                            # the per-group dispatch tax dominates
+                            # otherwise.
+                            chunked = apply_per_batch_streamed(
+                                chunked,
+                                ["batch_key", "chunk_id"],
+                                per_batch,
+                                schema=chunked.schema,
+                            )
+                            chunked = chunked.persist()
+                            hook_cache.append(chunked)
 
                     sink = config.sinks[name]
-                    span_bp = (
-                        rec.span(
-                            "batch_processor",
-                            topology_name=config.name,
-                            batcher_key=name,
-                            batch_id=batch_id,
-                            messages=per_batcher.get(name, 0),
-                        )
-                        if rec is not None
-                        else nullcontext()
-                    )
-                    with span_bp:
+                    with span(
+                        rec,
+                        "batch_processor",
+                        topology_name=config.name,
+                        batcher_key=name,
+                        batch_id=batch_id,
+                        messages=per_batcher.get(name, 0),
+                    ):
                         _write(
                             chunked.drop("chunk_id", "batch_size_", "trigger_"),
                             sink.path,

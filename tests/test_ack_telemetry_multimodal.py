@@ -1,7 +1,5 @@
-"""Tests for ack policies (A3/A4), telemetry (L5), topology
-introspection (L4), and the multimodal featurizer plumbing."""
-
-import time
+"""Tests for ack policies (A3/A4), topology introspection (L4), and the
+multimodal featurizer plumbing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +9,6 @@ from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
 from broadway_spark.message import failed_status
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources import SpoolSource
-from broadway_spark.streaming.telemetry import PipelineTelemetry, observed
 
 from .conftest import EVENTS_DDL, make_events
 
@@ -94,31 +91,6 @@ def test_configure_ack_retry_skips_ack(spark, tmp_dirs):
     retry_ids = {e["event_id"] for e in errors if e["user_id"] % 2 == 0}
     acked_ids = {int(r[0]) for r in failed_acks.select("ack_data").collect()}
     assert retry_ids.isdisjoint(acked_ids)
-
-
-def test_telemetry_listener_and_observe(spark, tmp_dirs):
-    """L5: query lifecycle + per-batch progress events with observed
-    per-stage metrics (the 13-telemetry-span analogue)."""
-    tel = PipelineTelemetry()
-    spark.streams.addListener(tel)
-    try:
-        src = _source(tmp_dirs, n=80)
-        cfg = _cfg(tmp_dirs, handle_message=lambda df: observed(df, "processor"))
-        pipe = Pipeline(cfg, src)
-        pipe.run_to_completion(spark)
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            kinds = {e.kind for e in tel.events}
-            if {"query_started", "query_progress"} <= kinds:
-                break
-            time.sleep(0.5)
-        kinds = {e.kind for e in tel.events}
-        assert "query_started" in kinds
-        assert "query_progress" in kinds
-        progress = [e for e in tel.events if e.kind == "query_progress"]
-        assert any(e.payload.get("num_input_rows", 0) > 0 for e in progress)
-    finally:
-        spark.streams.removeListener(tel)
 
 
 def test_topology_introspection(spark, tmp_dirs):
