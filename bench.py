@@ -312,7 +312,14 @@ def main() -> None:
         time.sleep(probe_interval)
     window_waited_s = round(time.time() - wait_t0, 3)
 
-    plans = {name: plan_fingerprint(fn(spark, sf_dir)) for name, fn in qs.items()}
+    plans: dict[str, str] = {}
+    for name, fn in qs.items():
+        plans[name] = plan_fingerprint(fn(spark, sf_dir))
+        # Release between queries, as the timing pass does, so no plan
+        # reads frames an earlier query cached (graph_pagerank would
+        # otherwise plan over graph_triangles' tri_* caches).
+        matz.release_all()
+        spark.catalog.clearCache()
 
     calib_samples: list[float] = []
     samples: dict[str, list[float]] = {name: [] for name in qs}

@@ -408,61 +408,3 @@ SELECT p.key,
 FROM probes p LEFT JOIN bits b ON p.pos = b.pos
 GROUP BY p.key
 """
-
-
-def streaming_hot_keys(
-    df: DataFrame,
-    key_col: str,
-    event_time_col: str,
-    phi: float,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Streaming φ-heavy hitters per event-time window: every key whose
-    in-window frequency exceeds ``phi`` of the window's total — the
-    trending-keys / hot-partition detector, continuously.
-
-    Two CHAINED windowed aggregations (Spark's supported
-    multiple-stateful-operator shape, same as streaming_near_dedup):
-
-    1. count per (window, key) — state bounded by keys-per-window,
-       expired by the watermark;
-    2. re-aggregate per window: the total plus the per-key counts
-       gathered into one row, then exploded and filtered by the exact
-       threshold. The collect_list is bounded by per-window key
-       cardinality — hot-key detection presumes that is small; for
-       unbounded key spaces run the batch two-pass ``heavy_hitters``
-       over closed windows instead.
-
-    Emits (win_start, key, n, share) in append mode when the watermark
-    closes the window; the result is a pure function of the windowed
-    data — micro-batch boundaries cannot change it.
-    """
-    counts = (
-        df.select(
-            F.col(key_col).cast("string").alias("__k"),
-            F.col(event_time_col).alias("__t"),
-        )
-        .withWatermark("__t", watermark_delay)
-        .groupBy(
-            F.window("__t", window_duration).alias("__w"), F.col("__k")
-        )
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    per_window = counts.groupBy("__w").agg(
-        F.sum("__n").alias("__tot"),
-        F.collect_list(F.struct("__k", "__n")).alias("__ks"),
-    )
-    exploded = per_window.select(
-        F.col("__w.start").alias("win_start"),
-        "__tot",
-        F.explode("__ks").alias("__e"),
-    )
-    return exploded.filter(
-        F.col("__e.__n") > F.lit(phi) * F.col("__tot")
-    ).select(
-        "win_start",
-        F.col("__e.__k").alias("key"),
-        F.col("__e.__n").alias("n"),
-        F.round(F.col("__e.__n") / F.col("__tot"), 6).alias("share"),
-    )

@@ -30,7 +30,15 @@ from broadway_spark.operators.partitioning import (
     partition_by_label,
     resolve_partition_expr,
 )
-from broadway_spark.streaming.router import _write, _write_acks, build_router
+from broadway_spark.streaming.router import (
+    _early_acks,
+    _failed_acks,
+    _late_acks,
+    _write,
+    _write_acks,
+    _write_dlq,
+    build_router,
+)
 from broadway_spark.streaming.stateful_batcher import stateful_batch_stream
 
 
@@ -206,8 +214,10 @@ class Pipeline:
         ``handle_failed`` hook: this path does not call them.
 
         The stateful stage does the chunking; foreachBatch only fans
-        chunks out to sinks and DLQ, then appends the ack log and calls
-        the ack executor exactly as the stateless router does.
+        chunks out to sinks, then writes the DLQ and the acks with the
+        router's own helpers, so both paths write one layout. A
+        checkpoint from before the ``(buffer, deadline_ms)`` state
+        schema cannot be resumed.
         """
         cfg = self.config
         if cfg.checkpoint_dir is None:
@@ -240,8 +250,8 @@ class Pipeline:
             rec = cfg.telemetry
             batch_df = batch_df.persist()
             try:
-                ok = batch_df.filter(F.col("status_ok"))
-                failed = batch_df.filter(~F.col("status_ok"))
+                ok = batch_df.filter(F.col("status.ok"))
+                failed = batch_df.filter(~F.col("status.ok"))
                 if rec is not None:
                     # processor-stage span on the stateful path: the
                     # upstream stages execute inside this first
@@ -252,7 +262,7 @@ class Pipeline:
                         meta.update(
                             batch_df.agg(
                                 F.count(F.lit(1)).alias("messages"),
-                                F.count_if(~F.col("status_ok")).alias("failed"),
+                                F.count_if(~F.col("status.ok")).alias("failed"),
                             )
                             .first()
                             .asDict()
@@ -267,68 +277,22 @@ class Pipeline:
                     ):
                         _write(
                             ok.filter(F.col("batcher") == name).drop(
-                                "chunk_seq", "trigger", "batch_size"
+                                "trigger_", "batch_size_"
                             ),
                             sink.path,
                             sink.format,
                             batch_id,
                             sink.idempotent,
                         )
-                if cfg.dlq is not None:
-                    _write(
-                        failed, cfg.dlq.path, cfg.dlq.format,
-                        batch_id, cfg.dlq.idempotent,
-                    )
-                if cfg.ack_log is not None or cfg.ack_executor is not None:
-                    # A3/A4 on the stateful path, mirroring the
-                    # foreachBatch router (router.py): failed rows with
-                    # on_failure=retry are NOT acked (the source's
-                    # redelivery owns them); early-acked ok rows are
-                    # labelled trigger='early' (their ack conceptually
-                    # happened at the processor stage, message.ex:
-                    # 172-201) and are not terminal-acked again.
-                    has_policy = "ack_policy" in batch_df.columns
-                    ackable = batch_df
-                    trigger_col = F.col("trigger")
-                    if has_policy:
-                        ackable = batch_df.filter(
-                            F.col("status_ok")
-                            | (F.col("ack_policy") != "retry")
-                        )
-                        trigger_col = F.when(
-                            F.col("status_ok")
-                            & (F.col("ack_policy") == "early"),
-                            F.lit("early"),
-                        ).otherwise(F.col("trigger"))
-
-                    def _ack_select(df, outcome_col):
-                        return df.select(
-                            F.lit(batch_id).alias("batch_id"),
-                            F.col("ack_ref"),
-                            F.col("ack_data"),
-                            outcome_col.alias("outcome"),
-                            F.col("status_reason").alias("reason"),
-                            F.col("batcher"),
-                            F.col("batch_key"),
-                            trigger_col.alias("trigger"),
-                            F.col("batch_size"),
-                        )
-
-                    acks = _ack_select(
-                        ackable,
-                        F.when(F.col("status_ok"), "ok").otherwise("failed"),
-                    )
-                    if cfg.ack_executor is not None and has_policy:
-                        acks = acks.unionByName(
-                            _ack_select(
-                                batch_df.filter(
-                                    ~F.col("status_ok")
-                                    & (F.col("ack_policy") == "retry")
-                                ),
-                                F.lit("retry"),
-                            )
-                        )
-                    _write_acks(cfg, acks, batch_id)
+                _write_dlq(cfg, failed.drop("trigger_", "batch_size_"), batch_id)
+                trigger = F.col("trigger_")
+                _write_acks(
+                    cfg,
+                    _early_acks(ok, batch_id)
+                    + [_late_acks(ok, batch_id, trigger)]
+                    + _failed_acks(cfg, failed, batch_id, trigger),
+                    batch_id,
+                )
             finally:
                 batch_df.unpersist()
 

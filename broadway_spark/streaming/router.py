@@ -31,6 +31,7 @@ driver.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -89,16 +90,78 @@ def _ack_rows(
     )
 
 
-def _write_acks(config: TopologyConfig, acks: DataFrame, batch_id: int) -> None:
-    """Append ``acks`` to the ack log and hand them to the ack executor.
+def _early_acks(ok: DataFrame, batch_id: int) -> list[DataFrame]:
+    """A3: early-acked rows get their ack at the processor stage
+    (message.ex:172-201), labelled trigger='early'."""
+    if "ack_policy" not in ok.columns:
+        return []
+    early = ok.filter(F.col("ack_policy") == "early")
+    return [_ack_rows(early, batch_id, "ok", trigger_col=F.lit("early"))]
 
-    ``acks`` carries ``outcome='retry'`` rows only when an executor is
-    set: they are executor-only signals (per-message-ack brokers
-    fast-track redelivery), never acks, so the log leaves them out.
-    Both start paths end each micro-batch here; each builds ``acks`` in
-    ``ACK_LOG_SCHEMA`` from its own row layout.
+
+def _late_acks(ok: DataFrame, batch_id: int, trigger_col=None) -> DataFrame:
+    """Terminal 'ok' acks; early-acked rows already have theirs."""
+    if "ack_policy" in ok.columns:
+        ok = ok.filter(F.col("ack_policy") != "early")
+    return _ack_rows(ok, batch_id, "ok", trigger_col=trigger_col)
+
+
+def _failed_acks(
+    config: TopologyConfig, failed: DataFrame, batch_id: int, trigger_col=None
+) -> list[DataFrame]:
+    """A4: failed rows with on_failure=retry are NOT acked — the
+    source's redelivery owns them (A6: no built-in retries,
+    broadway.ex:332-338). They reach the connector's ack executor as
+    outcome='retry' (never the ack log) so per-message-ack brokers can
+    fast-track redelivery (SQS ChangeMessageVisibility(0))."""
+    if "ack_policy" not in failed.columns:
+        return [_ack_rows(failed, batch_id, "failed", trigger_col)]
+    retry = F.col("ack_policy") == "retry"
+    acks = [_ack_rows(failed.filter(~retry), batch_id, "failed", trigger_col)]
+    if config.ack_executor is not None:
+        acks.append(_ack_rows(failed.filter(retry), batch_id, "retry", trigger_col))
+    return acks
+
+
+def _write_dlq(config: TopologyConfig, failed: DataFrame, batch_id: int) -> None:
+    """Write failed rows to the DLQ, each tagged with its disposition so
+    consumers can tell transient retry failures (the source will
+    redeliver; the row may later succeed) from terminal ones. Without
+    the tag, DLQ counts overstate permanent failures."""
+    dlq = config.dlq
+    if dlq is None:
+        return
+    disposition = (
+        F.when(F.col("ack_policy") == "retry", F.lit("retry")).otherwise(
+            F.lit("terminal")
+        )
+        if "ack_policy" in failed.columns
+        else F.lit("terminal")
+    )
+    _write(
+        failed.withColumn("dlq_disposition", disposition),
+        dlq.path,
+        dlq.format,
+        batch_id,
+        dlq.idempotent,
+    )
+
+
+def _write_acks(
+    config: TopologyConfig, parts: list[DataFrame], batch_id: int
+) -> None:
+    """Append the ack rows in ``parts`` to the ack log and hand them to
+    the ack executor.
+
+    ``parts`` carries ``outcome='retry'`` rows only when an executor is
+    set: they are executor-only signals, never acks, so the log leaves
+    them out. Both start paths end each micro-batch here, with parts
+    built by the helpers above.
     """
     executor = config.ack_executor
+    if config.ack_log is None and executor is None:
+        return
+    acks = reduce(DataFrame.unionByName, parts)
     if executor is not None:
         # two consumers (log + executor): one compute
         acks = acks.persist()
@@ -233,20 +296,9 @@ def build_router(
         # per micro-batch, not once per consumer.
         hook_cache: list[DataFrame] = []
         try:
-            ack_parts: list[DataFrame] = []
-
             failed = batch_df.filter(~F.col("status.ok"))
             ok = batch_df.filter(F.col("status.ok"))
-
-            has_policy = "ack_policy" in batch_df.columns
-            retry_acks = None
-            if has_policy:
-                # A3: early-acked rows get their ack at the processor
-                # stage (message.ex:172-201); terminal ack is a no-op.
-                early = ok.filter(F.col("ack_policy") == "early")
-                ack_parts.append(
-                    _ack_rows(early, batch_id, "ok", trigger_col=F.lit("early"))
-                )
+            ack_parts = _early_acks(ok, batch_id)
 
             # --- failed branch: handle_failed hook → DLQ → ack failed
             if config.handle_failed is not None:
@@ -294,44 +346,12 @@ def build_router(
                         # materialize inside the span so its duration
                         # covers the hook's actual execution
                         failed.count()
-            if config.dlq is not None:
-                # Tag each DLQ row with its disposition so consumers
-                # can tell transient retry failures (the source will
-                # redeliver; the row may later succeed) from
-                # terminal ones. Without the tag, DLQ counts
-                # overstate permanent failures.
-                disposition = (
-                    F.when(
-                        F.col("ack_policy") == "retry", F.lit("retry")
-                    ).otherwise(F.lit("terminal"))
-                    if has_policy
-                    else F.lit("terminal")
-                )
-                _write(
-                    failed.withColumn("dlq_disposition", disposition),
-                    config.dlq.path,
-                    config.dlq.format,
-                    batch_id,
-                    config.dlq.idempotent,
-                )
-            # A4: failed rows with on_failure=retry flow through
-            # handle_failed and the DLQ like any failure (the reference
-            # runs handle_failed for every failed message,
-            # acknowledger.ex:96-150) but are NOT acked — the source's
-            # redelivery owns them (A6: no built-in retries,
-            # broadway.ex:332-338). They are surfaced to the connector's
-            # ack executor as outcome='retry' (never written to the ack
-            # log) so per-message-ack brokers can fast-track redelivery
-            # (SQS ChangeMessageVisibility(0)).
-            ackable_failed = failed
-            if has_policy:
-                retry_acks = _ack_rows(
-                    failed.filter(F.col("ack_policy") == "retry"),
-                    batch_id,
-                    "retry",
-                )
-                ackable_failed = failed.filter(F.col("ack_policy") != "retry")
-            ack_parts.append(_ack_rows(ackable_failed, batch_id, "failed"))
+            # Retry-failed rows flow through handle_failed and the DLQ
+            # like any failure (the reference runs handle_failed for
+            # every failed message, acknowledger.ex:96-150); only their
+            # ack differs.
+            _write_dlq(config, failed, batch_id)
+            ack_parts += _failed_acks(config, failed, batch_id)
 
             if not config.batchers:
                 # Consumer mode (topology.ex:277-281): processors are
@@ -339,10 +359,7 @@ def build_router(
                 sink = config.sinks.get("default")
                 if sink is not None:
                     _write(ok, sink.path, sink.format, batch_id, sink.idempotent)
-                late_ok = (
-                    ok.filter(F.col("ack_policy") != "early") if has_policy else ok
-                )
-                ack_parts.append(_ack_rows(late_ok, batch_id, "ok"))
+                ack_parts.append(_late_acks(ok, batch_id))
             else:
                 order_col = config.order_by
                 for name, bcfg in config.batchers.items():
@@ -395,27 +412,11 @@ def build_router(
                             batch_id,
                             sink.idempotent,
                         )
-                    late_chunked = (
-                        chunked.filter(F.col("ack_policy") != "early")
-                        if has_policy
-                        else chunked
-                    )
                     ack_parts.append(
-                        _ack_rows(
-                            late_chunked,
-                            batch_id,
-                            "ok",
-                            trigger_col=F.col("trigger_"),
-                        )
+                        _late_acks(chunked, batch_id, F.col("trigger_"))
                     )
 
-            if config.ack_log is not None or config.ack_executor is not None:
-                acks = ack_parts[0]
-                for p in ack_parts[1:]:
-                    acks = acks.unionByName(p)
-                if config.ack_executor is not None and retry_acks is not None:
-                    acks = acks.unionByName(retry_acks)
-                _write_acks(config, acks, batch_id)
+            _write_acks(config, ack_parts, batch_id)
         finally:
             for cached in hook_cache:
                 cached.unpersist()

@@ -7,18 +7,40 @@ This is the faithful translation of the reference's batcher stage
 
 - the buffer reaches ``batch_size``            → trigger 'size'
   (batcher_stage.ex:108-176)
-- the per-key timer fires                      → trigger 'timeout'
+- the batch's timer expires                    → trigger 'timeout'
   (batcher_stage.ex:80-89, 240-256; default 1000 ms, options.ex:276-283)
 - a message arrives with batch_mode 'flush'    → trigger 'flush'
   (message.ex:118-133: flush delivers everything buffered immediately)
 
 Implemented with ``applyInPandasWithState`` + ProcessingTimeTimeout:
 one key-group = one task = serial per-key processing, which is exactly
-Broadway's one-batcher-process-per-key guarantee. State (the buffered
-rows) lives in the state store, spills with the checkpoint, and
-survives restarts — at 100 TB the state store shards across executors
-by the same key hash that routes the messages, so there is no hot
-driver path.
+Broadway's one-batcher-process-per-key guarantee. The stage consumes
+and emits the Message envelope unchanged (``status``/``ack`` structs,
+``metadata`` map), plus the router's ``trigger_``/``batch_size_``
+columns, so both start paths write one sink, DLQ and ack-log layout.
+
+State, one row per key: ``(buffer binary, deadline_ms long)``.
+``buffer`` holds the buffered rows as one Arrow IPC stream in the
+stage's input schema, so every envelope and payload type (maps, null
+maps, structs, timestamps, dates, numeric-looking strings) round-trips
+without a codec. It lives in the state store, spills with the
+checkpoint, and survives restarts — at 100 TB the state store shards
+across executors by the same key hash that routes the messages, so
+there is no hot driver path.
+
+Deadline rule (Broadway starts a batch's timer when the batch is
+created and never re-arms it): ``deadline_ms`` is set from the
+trigger's processing time when the buffer goes from empty to
+non-empty, and again for the remainder after a size flush; later
+arrivals do not move it. Every call arms the key's timer at the
+deadline. Rows that arrive at or past the deadline are appended first,
+the size chunks are cut, and the remainder then flushes as 'timeout',
+so a key makes at most one timer flush per micro-batch.
+
+Limit: a ProcessingTimeTimeout is evaluated only when a trigger runs
+(Structured Streaming checks group-state timeouts once per micro-batch),
+so a timed-out batch flushes at the first trigger after its deadline,
+not at the deadline itself.
 
 Failed rows pass through unbuffered (Broadway: failed messages skip
 batchers, ``processor_stage.ex:78-95``).
@@ -26,51 +48,16 @@ batchers, ``processor_stage.ex:78-95``).
 
 from __future__ import annotations
 
-import json
 from typing import Any, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Flattened wire schema for the stateful stage (structs flattened so
-# state round-trips through pandas cleanly).
-BATCH_OUT_SUFFIX = (
-    "chunk_seq long, trigger string, batch_size int"
-)
-
-
-def _flatten(df: DataFrame) -> DataFrame:
-    # metadata MAP → JSON string: a null map round-trips through pandas
-    # as NaN, which Arrow can't convert back to MapType.
-    return df.select(
-        *[c for c in df.columns if c not in ("status", "ack", "metadata")],
-        F.to_json("metadata").alias("metadata_json"),
-        F.col("status.ok").alias("status_ok"),
-        F.col("status.reason").alias("status_reason"),
-        F.col("status.stage").alias("status_stage"),
-        F.col("ack.source").alias("ack_source"),
-        F.col("ack.ack_ref").alias("ack_ref"),
-        F.col("ack.ack_data").alias("ack_data"),
-    )
-
-
-def _buffer_from_json(buffered_json: str | None):
-    if not buffered_json:
-        return None
-    import io
-
-    # dtype=False / convert_*=False: the wire schema is authoritative;
-    # letting read_json re-infer would turn numeric-looking strings
-    # (e.g. ack_data) back into ints and break Arrow conversion.
-    return pd.read_json(
-        io.StringIO(buffered_json),
-        orient="split",
-        dtype=False,
-        convert_axes=False,
-        convert_dates=False,
-    )
+# Columns the stage adds to the envelope: the router's chunk labels.
+BATCH_OUT_SUFFIX = "trigger_ string, batch_size_ int"
 
 
 def stateful_batch_stream(
@@ -85,54 +72,31 @@ def stateful_batch_stream(
 
     ``batch_sizes`` / ``batch_timeouts_ms`` are per-batcher (the group
     key's first element), mirroring per-batcher config
-    (options.ex:200-290). Output = flattened input +
-    (chunk_seq, trigger, batch_size).
+    (options.ex:200-290). Output = input + (trigger_, batch_size_).
     """
-    flat = _flatten(enveloped)
-    in_cols = flat.schema.fieldNames()
     out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in flat.schema)
+        ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in enveloped.schema
+        )
         + ", "
         + BATCH_OUT_SUFFIX
     )
-    state_schema = "buffered string, chunk_seq long"
+    # Timestamps stay naive: the UDF sees session-local wall times.
+    wire = to_arrow_schema(enveloped.schema, timestamp_utc=False)
 
-    # Temporal payload columns need an explicit wire format: pandas
-    # to_json serializes datetimes as epoch ints and read_json(dtype=
-    # False, convert_dates=False) never converts them back, so a buffer
-    # carrying an event-time column would corrupt on Arrow conversion
-    # when the chunk is emitted. Encode as ISO strings, decode by the
-    # authoritative wire schema.
-    ts_cols = [
-        f.name
-        for f in flat.schema
-        if f.dataType.simpleString().startswith("timestamp")
-    ]
-    date_cols = [
-        f.name for f in flat.schema if f.dataType.simpleString() == "date"
-    ]
+    def encode(buffer: pd.DataFrame) -> bytes:
+        table = pa.Table.from_pandas(buffer, schema=wire, preserve_index=False)
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, wire) as writer:
+            writer.write_table(table)
+        return sink.getvalue().to_pybytes()
 
-    def _wire_encode(buf: pd.DataFrame) -> str:
-        if ts_cols or date_cols:
-            buf = buf.copy()
-            for c in ts_cols:
-                buf[c] = buf[c].map(
-                    lambda v: None if pd.isna(v) else pd.Timestamp(v).isoformat()
-                )
-            for c in date_cols:
-                buf[c] = buf[c].map(lambda v: None if pd.isna(v) else str(v))
-        return buf.to_json(orient="split")
+    def decode(raw: bytes) -> pd.DataFrame:
+        table = pa.ipc.open_stream(raw).read_all()
+        return table.to_pandas(maps_as_pydicts="strict")
 
-    def _wire_decode(buffered_json: str | None):
-        buf = _buffer_from_json(buffered_json)
-        if buf is not None:
-            for c in ts_cols:
-                buf[c] = pd.to_datetime(buf[c])
-            for c in date_cols:
-                buf[c] = buf[c].map(
-                    lambda v: None if v in (None, "") else pd.Timestamp(v).date()
-                )
-        return buf
+    def batch(rows: pd.DataFrame, trigger: str, size: int) -> pd.DataFrame:
+        return rows.assign(trigger_=trigger, batch_size_=size)
 
     def assemble(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -140,71 +104,56 @@ def stateful_batch_stream(
         batcher_name = key[0]
         batch_size = batch_sizes.get(batcher_name, default_batch_size)
         batch_timeout_ms = batch_timeouts_ms.get(batcher_name, default_timeout_ms)
-        # --- load buffer from state
+        now = state.getCurrentProcessingTimeMs()
         if state.exists:
-            buffered_json, chunk_seq = state.get
-            buffer = _wire_decode(buffered_json)
+            raw, deadline = state.get
+            buffer = decode(raw)
         else:
-            buffer, chunk_seq = None, 0
+            buffer, deadline = None, now + batch_timeout_ms
 
         if state.hasTimedOut:
             # Timer fired with no new input: flush the partial batch
             # (batcher_stage.ex:80-89).
             state.remove()
-            if buffer is not None and len(buffer):
-                buffer["chunk_seq"] = chunk_seq
-                buffer["trigger"] = "timeout"
-                buffer["batch_size"] = len(buffer)
-                yield buffer[in_cols + ["chunk_seq", "trigger", "batch_size"]]
+            yield batch(buffer, "timeout", len(buffer))
             return
 
         new = pd.concat(list(pdfs), ignore_index=True)
         new = new.sort_values(order_by).reset_index(drop=True)
 
         # Failed rows pass through immediately, never buffered.
-        failed = new[~new["status_ok"]]
+        is_ok = new["status"].map(lambda s: s["ok"]).astype(bool)
+        failed = new[~is_ok]
         if len(failed):
-            failed = failed.copy()
-            failed["chunk_seq"] = -1
-            failed["trigger"] = "flush"
-            failed["batch_size"] = len(failed)
-            yield failed[in_cols + ["chunk_seq", "trigger", "batch_size"]]
-        ok = new[new["status_ok"]]
+            yield batch(failed, "flush", len(failed))
+        ok = new[is_ok]
+        flush_all = (ok["batch_mode"] == "flush").any()
+        expired = now >= deadline
+        if buffer is not None:
+            ok = pd.concat([buffer, ok], ignore_index=True)
 
-        buffer = ok if buffer is None else pd.concat([buffer, ok], ignore_index=True)
-
-        flush_all = bool(len(ok)) and (ok["batch_mode"] == "flush").any()
-
-        # Emit full chunks.
-        while len(buffer) >= batch_size:
-            chunk = buffer.iloc[:batch_size].copy()
-            buffer = buffer.iloc[batch_size:].reset_index(drop=True)
-            chunk["chunk_seq"] = chunk_seq
-            chunk["trigger"] = "size"
-            chunk["batch_size"] = batch_size
-            chunk_seq += 1
-            yield chunk[in_cols + ["chunk_seq", "trigger", "batch_size"]]
-
-        if flush_all and len(buffer):
-            chunk = buffer.copy()
-            buffer = buffer.iloc[0:0]
-            chunk["chunk_seq"] = chunk_seq
-            chunk["trigger"] = "flush"
-            chunk["batch_size"] = len(chunk)
-            chunk_seq += 1
-            yield chunk[in_cols + ["chunk_seq", "trigger", "batch_size"]]
-
-        # --- persist remainder + arm the per-key timer
-        if len(buffer):
-            state.update((_wire_encode(buffer), chunk_seq))
-            state.setTimeoutDuration(batch_timeout_ms)
-        else:
+        cut = 0
+        while len(ok) - cut >= batch_size:
+            yield batch(ok.iloc[cut : cut + batch_size], "size", batch_size)
+            cut += batch_size
+        buffer = ok.iloc[cut:]
+        if cut:
+            # The remainder arrived in this call: its batch starts now.
+            deadline = now + batch_timeout_ms
+        if not len(buffer):
             state.remove()
+        elif flush_all or expired:
+            yield batch(buffer, "flush" if flush_all else "timeout", len(buffer))
+            state.remove()
+        else:
+            # Persist the remainder and arm the timer at its deadline.
+            state.update((encode(buffer), deadline))
+            state.setTimeoutDuration(max(deadline - now, 1))
 
-    return flat.groupBy("batcher", "batch_key").applyInPandasWithState(
+    return enveloped.groupBy("batcher", "batch_key").applyInPandasWithState(
         assemble,
         outputStructType=out_schema,
-        stateStructType=state_schema,
+        stateStructType="buffer binary, deadline_ms long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )

@@ -121,12 +121,14 @@ def test_flush_mode_empties_buffer(spark, tmp_dirs):
 
 
 def test_timestamp_payload_survives_state_roundtrip(spark, tmp_dirs):
-    """A buffered event-time column must survive the v1 state store's
-    JSON round-trip: pandas to_json writes datetimes as epoch ints, so
-    without an explicit wire codec the timer-flushed chunk corrupts on
-    Arrow conversion. 30 rows < batch_size buffer across a trigger and
-    flush by timer; the sink timestamps must equal the input."""
-    ddl = "event_id long, ts timestamp, event_day date, value double"
+    """Buffered rows must survive the state store round-trip exactly:
+    event-time and date columns, a numeric-looking string, and a
+    metadata map whose rows carry different keys or no map at all
+    (schema-less Arrow encoding would turn the map into a struct and
+    add null-valued keys to every row). 30 rows < batch_size buffer
+    across a trigger and flush by timer; the sink must equal the
+    input."""
+    ddl = "event_id long, ts timestamp, event_day date, value double, code string"
     src = SpoolSource(
         name="spool",
         path=tmp_dirs["spool"],
@@ -139,13 +141,34 @@ def test_timestamp_payload_survives_state_roundtrip(spark, tmp_dirs):
             "ts": f"2026-01-02T03:04:{i:02d}",
             "event_day": "2026-01-02",
             "value": i / 10.0,
+            "code": f"{i:03d}",
         }
         for i in range(30)
     ]
     src.push_messages(rows, "000.jsonl")
+
+    def metadata(i):
+        if i == 0:
+            return None
+        return {"parity": "even"} if i % 2 == 0 else {"odd": str(i), "tag": "007"}
+
+    def handle_message(df):
+        eid = F.col("event_id")
+        return df.withColumn(
+            "metadata",
+            F.when(eid == 0, F.lit(None).cast(M.METADATA_TYPE))
+            .when(eid % 2 == 0, F.create_map(F.lit("parity"), F.lit("even")))
+            .otherwise(
+                F.create_map(
+                    F.lit("odd"), eid.cast("string"), F.lit("tag"), F.lit("007")
+                )
+            ),
+        )
+
     cfg = TopologyConfig(
         name="ts_state",
         order_by="event_id",
+        handle_message=handle_message,
         batchers={"default": BatcherConfig(batch_size=50, batch_timeout_ms=1500)},
         sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
         ack_log=SinkConfig(path=tmp_dirs["ack"]),
@@ -167,8 +190,111 @@ def test_timestamp_payload_survives_state_roundtrip(spark, tmp_dirs):
         (i, f"2026-01-02 03:04:{i:02d}", "2026-01-02") for i in range(30)
     }
     assert got == want
+    envelope = {
+        r["event_id"]: (r["code"], r["metadata"], r["ack_data"], r["ok"])
+        for r in out.select(
+            "event_id", "code", "metadata", "ack.ack_data", "status.ok"
+        ).collect()
+    }
+    assert envelope == {
+        i: (f"{i:03d}", metadata(i), str(i), True) for i in range(30)
+    }
     ack = spark.read.parquet(tmp_dirs["ack"])
     assert {r[0] for r in ack.select("trigger").distinct().collect()} == {"timeout"}
+
+
+def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
+    """The batch timer starts when the batch is created and is not
+    re-armed by later arrivals (batcher_stage.ex:80-89, 240-256): one
+    key fed one message per 300 ms trigger with a 1000 ms timeout must
+    flush by 'timeout' while the feed is still running, not only once
+    it stops."""
+    n = 8
+    src = SpoolSource(
+        name="spool",
+        path=tmp_dirs["spool"],
+        schema_ddl=EVENTS_DDL,
+        ack_data_column="event_id",
+        allowed_per_trigger=1,
+    )
+    src.push_messages(make_events(n), "000.jsonl")
+    cfg = TopologyConfig(
+        name="stateful-deadline",
+        order_by="event_id",
+        batchers={"default": BatcherConfig(batch_size=100, batch_timeout_ms=1000)},
+        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
+        ack_log=SinkConfig(path=tmp_dirs["ack"]),
+        checkpoint_dir=tmp_dirs["ckpt"],
+        state_partitions=1,  # one key
+    )
+    q = Pipeline(cfg, src).start_stateful(spark, processing_time="300 milliseconds")
+    try:
+        assert _wait_for_acks(spark, tmp_dirs["ack"], n), "drain incomplete"
+    finally:
+        q.stop()
+
+    ack = spark.read.parquet(tmp_dirs["ack"])
+    assert ack.count() == n
+    assert {r[0] for r in ack.select("trigger").distinct().collect()} == {"timeout"}
+    flushed_in = {
+        int(r["ack_data"]): r["batch_id"]
+        for r in ack.select("ack_data", "batch_id").collect()
+    }
+    # Message 0 times out before the last message is even read (one
+    # message per micro-batch); a timer re-armed on every arrival
+    # would hold all n until the feed stops and flush them together.
+    assert flushed_in[0] < flushed_in[n - 1]
+
+
+def test_both_start_paths_write_one_layout(spark, tmp_path):
+    """start() and start_stateful() run the same config into the same
+    sink and DLQ layouts: the Message envelope plus the DLQ's
+    dlq_disposition, with no stage-private columns."""
+
+    def handle_message(df):
+        fail = F.col("event_type") == "error"
+        return df.withColumn(
+            "status",
+            F.when(fail, M.failed_status(F.lit("boom"), "proc")).otherwise(
+                F.col("status")
+            ),
+        )
+
+    layouts = {}
+    for path in ("start", "start_stateful"):
+        d = {k: str(tmp_path / path / k) for k in ("spool", "sink", "dlq", "ack", "ckpt")}
+        src = SpoolSource(
+            name="spool", path=d["spool"], schema_ddl=EVENTS_DDL,
+            ack_data_column="event_id",
+        )
+        src.push_messages(make_events(20), "000.jsonl")
+        cfg = TopologyConfig(
+            name=f"layout-{path}",
+            order_by="event_id",
+            handle_message=handle_message,
+            batchers={"default": BatcherConfig(batch_size=5, batch_timeout_ms=500)},
+            sinks={"default": SinkConfig(path=d["sink"])},
+            dlq=SinkConfig(path=d["dlq"]),
+            ack_log=SinkConfig(path=d["ack"]),
+            checkpoint_dir=d["ckpt"],
+            state_partitions=2,
+        )
+        pipe = Pipeline(cfg, src)
+        if path == "start":
+            pipe.run_to_completion(spark, timeout_s=120)
+        else:
+            q = pipe.start_stateful(spark, processing_time="300 milliseconds")
+            try:
+                assert _wait_for_acks(spark, d["ack"], 20), "drain incomplete"
+            finally:
+                q.stop()
+        layouts[path] = tuple(
+            set(spark.read.parquet(d[k]).columns) for k in ("sink", "dlq", "ack")
+        )
+
+    sink, dlq, ack = layouts["start"]
+    assert layouts["start_stateful"] == (sink, dlq, ack)
+    assert dlq == sink | {"dlq_disposition"}
 
 
 def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):

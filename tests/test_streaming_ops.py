@@ -724,90 +724,3 @@ def test_stream_stream_interval_join(spark, tmp_dirs):
         ).collect()
     }
     assert got == want and len(got) > 20
-
-
-def test_streaming_hot_keys_matches_batch(spark, tmp_dirs):
-    """Streaming φ-heavy hitters per window equal the batch
-    computation on the same data, and are batch-split independent
-    (data split across three micro-batches)."""
-    from broadway_spark.functions.sketches import streaming_hot_keys
-
-    src = SpoolSource(
-        name="spool",
-        path=tmp_dirs["spool"],
-        schema_ddl=EVENTS_DDL + ", ts timestamp",
-        ack_data_column="event_id",
-    )
-    # window 00:00-01:00: user 3 is hot (60 dedicated + 5 from the
-    # uniform tail = 65 of 100 events);
-    # window 01:00-02:00: uniform — nobody exceeds phi=0.3
-    events = []
-    for i in range(100):
-        uid = 3 if i < 60 else i % 7
-        events.append(
-            {
-                "event_id": i,
-                "user_id": uid,
-                "event_type": "view",
-                "value": 1.0,
-                "props": "{}",
-                "ts": f"2024-01-01 00:{i % 60:02d}:00",
-            }
-        )
-    for i in range(100, 170):
-        events.append(
-            {
-                "event_id": i,
-                "user_id": i % 7,
-                "event_type": "view",
-                "value": 1.0,
-                "props": "{}",
-                "ts": f"2024-01-01 01:{i % 60:02d}:00",
-            }
-        )
-
-    hot = streaming_hot_keys(
-        src.read_stream(spark),
-        "user_id",
-        "ts",
-        phi=0.3,
-        window_duration="1 hour",
-        watermark_delay="30 minutes",
-    )
-
-    def drain():
-        q = (
-            hot.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", tmp_dirs["sink"])
-            .option("checkpointLocation", tmp_dirs["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    for i, chunk in enumerate((events[:50], events[50:120], events[120:])):
-        src.push_messages(chunk, f"{i:03d}.jsonl")
-        drain()
-    for n, ts in ((9000, "2024-01-02 00:00:00"), (9001, "2024-01-03 00:00:00")):
-        src.push_messages(
-            [
-                {
-                    "event_id": n,
-                    "user_id": 0,
-                    "event_type": "view",
-                    "value": 1.0,
-                    "props": "{}",
-                    "ts": ts,
-                }
-            ],
-            f"{n}_sentinel.jsonl",
-        )
-        drain()
-
-    got = {
-        (str(r["win_start"]), r["key"], r["n"], r["share"])
-        for r in spark.read.parquet(tmp_dirs["sink"]).collect()
-        if str(r["win_start"]) < "2024-01-02"
-    }
-    assert got == {("2024-01-01 00:00:00", "3", 65, 0.65)}
