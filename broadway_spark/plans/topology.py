@@ -38,6 +38,7 @@ from broadway_spark.streaming.router import (
     _write_acks,
     _write_dlq,
     build_router,
+    stop_safe,
 )
 from broadway_spark.streaming.stateful_batcher import stateful_batch_stream
 
@@ -298,7 +299,7 @@ class Pipeline:
 
         return self._start_query(
             spark,
-            batched.writeStream.foreachBatch(sink_writer)
+            batched.writeStream.foreachBatch(stop_safe(sink_writer))
             .option("checkpointLocation", cfg.checkpoint_dir)
             .trigger(processingTime=processing_time)
             .queryName(f"{cfg.name}-stateful"),

@@ -80,6 +80,16 @@ def builder(app_name: str = "broadway-spark", cpus: str | int | None = None):
       Arrow batch fits comfortably in executor memory.
     - ``maxPartitionBytes`` kept at 128m so a 100 TB scan fans out to
       ~800k input splits rather than a few giant ones.
+    - Python workers start from ``broadway_spark._worker_daemon``
+      instead of ``pyspark.daemon``. Before every task a worker calls
+      ``importlib.invalidate_caches()``, which on CPython 3.11/3.12
+      re-parses all of ``pyspark.zip``'s directory once per zip
+      importer, about 0.2 s of CPU per task; the daemon entry makes a
+      zip importer re-read only an archive that changed, then runs
+      ``pyspark.daemon`` unchanged. It is a no-op on CPython >= 3.13,
+      which reads zip directories lazily. Python workers must be able
+      to import ``broadway_spark``, as they already must for
+      ``SpoolDataSource`` and the pipelines' UDFs.
     """
     n = cpus if cpus is not None else _DEFAULT_CPUS
     # transformWithState needs google.protobuf in every Python worker;
@@ -98,6 +108,7 @@ def builder(app_name: str = "broadway-spark", cpus: str | int | None = None):
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "broadway_spark._worker_daemon")
         # Codegen class cache: the default 100 entries thrashes on a
         # 100+-query workload (each query compiles several stages), so
         # every resubmission pays full Janino recompilation — measured

@@ -118,9 +118,12 @@ class _RowCountCache:
 
 class _SpoolPartition(InputPartition):
     """A contiguous row range [start, end) over a PLANNED file
-    snapshot. ``files`` is the (file, row-count) list frozen at
-    partition-planning time on the driver; executors read only this
-    snapshot (capped at the planned per-file counts) so concurrent
+    snapshot. ``files`` holds only the (file, row-count) entries of
+    the snapshot frozen at partition-planning time on the driver that
+    overlap the range, and ``first_row`` is the global row index of
+    the first of them: a task pickles and walks the files it reads,
+    not the spool's whole history. Executors read only these files
+    (capped at the planned per-file counts) so concurrent
     pushes/appends between planning and execution can't shift the
     global row indexing."""
 
@@ -129,12 +132,22 @@ class _SpoolPartition(InputPartition):
         path: str,
         start: int,
         end: int,
-        files: list[tuple[str, int]],
+        snap: list[tuple[str, int]],
     ):
         self.path = path
         self.start = start
         self.end = end
-        self.files = files
+        self.first_row = start
+        self.files: list[tuple[str, int]] = []
+        idx = 0
+        for f, n in snap:
+            if idx >= end:
+                break
+            if n and idx + n > start:
+                if not self.files:
+                    self.first_row = idx
+                self.files.append((f, n))
+            idx += n
 
 
 class _SpoolStreamReader(DataSourceStreamReader):
@@ -262,22 +275,22 @@ class _SpoolStreamReader(DataSourceStreamReader):
         # contiguous chunks — one task per chunk. Admission stays global
         # and exact (decided in latestOffset); only the *read* fans out.
         # The file list + per-file counts are SNAPSHOTTED here on the
-        # driver and baked into every partition: executors never
-        # re-list the directory, so a concurrently pushed file that
-        # sorts before existing files (or an append) can't shift row
-        # indices between planning and execution.
-        snap = self._counts.snapshot(self.path)
-        lo, hi = start["row"], end["row"]
+        # driver and each partition keeps the files its range overlaps:
+        # executors never re-list the directory, so a concurrently
+        # pushed file that sorts before existing files (or an append)
+        # can't shift row indices between planning and execution.
+        return self._split(
+            self._counts.snapshot(self.path), start["row"], end["row"]
+        )
+
+    def _split(self, snap: list[tuple[str, int]], lo: int, hi: int):
+        if hi <= lo:
+            return [_SpoolPartition(self.path, lo, hi, snap)]
         n = max(1, min(self.num_partitions, hi - lo))
-        step = (hi - lo + n - 1) // n if hi > lo else 1
-        parts = []
-        while lo < hi:
-            parts.append(
-                _SpoolPartition(self.path, lo, min(lo + step, hi), snap)
-            )
-            lo += step
-        return parts or [
-            _SpoolPartition(self.path, start["row"], end["row"], snap)
+        step = -(-(hi - lo) // n)
+        return [
+            _SpoolPartition(self.path, s, min(s + step, hi), snap)
+            for s in range(lo, hi, step)
         ]
 
     def read(self, partition: _SpoolPartition):
@@ -305,13 +318,8 @@ class _SpoolStreamReader(DataSourceStreamReader):
             )
 
     def _read_rows(self, partition: _SpoolPartition):
-        idx = 0
+        idx = partition.first_row
         for fpath, n_planned in partition.files:
-            if idx >= partition.end:
-                return
-            if idx + n_planned <= partition.start:
-                idx += n_planned  # skip whole file without opening it
-                continue
             taken = 0
             with open(fpath, "r", encoding="utf-8") as fh:
                 for line in fh:
@@ -366,11 +374,7 @@ class _SpoolBatchReader(DataSourceReader):
         # file list every partition reads — planning and execution see
         # the same spool even if files land concurrently.
         snap = _snapshot_files(self.path)
-        total = sum(n for _, n in snap)
-        parts = self._stream.partitions({"row": 0}, {"row": total})
-        for p in parts:
-            p.files = snap
-        return parts
+        return self._stream._split(snap, 0, sum(n for _, n in snap))
 
     def read(self, partition: _SpoolPartition):
         return self._stream.read(partition)

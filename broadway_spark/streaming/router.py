@@ -31,8 +31,9 @@ driver.
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import reduce
+from functools import reduce, wraps
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,6 +50,51 @@ ACK_LOG_SCHEMA = (
     "reason string, batcher string, batch_key string, trigger string, "
     "batch_size int"
 )
+
+
+# The Java exceptions Spark's StreamExecution takes for "interrupted by
+# stop()" (its IO_EXCEPTION_NAMES).
+_INTERRUPTS = (
+    "java.lang.InterruptedException",
+    "java.io.InterruptedIOException",
+    "java.nio.channels.ClosedByInterruptException",
+)
+
+
+class BatchInterrupted(Exception):
+    """A foreachBatch call cut short by ``StreamingQuery.stop()``."""
+
+
+def stop_safe(
+    fn: Callable[[DataFrame, int], None],
+) -> Callable[[DataFrame, int], None]:
+    """Hand Spark a one-line error when ``stop()`` interrupts ``fn``.
+
+    The Py4J error of an interrupted write quotes the whole Java stack.
+    Spark decides whether a foreachBatch error is a stop by running its
+    ``PROXY_ERROR`` regex over the Python traceback, and that regex
+    recurses once per character: on thousands of lines the stream
+    thread dies of ``StackOverflowError``. The interrupt is re-raised
+    as one line the regex still matches, so the stop stays a stop;
+    every other error passes through unchanged.
+    """
+
+    @wraps(fn)
+    def guarded(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            fn(batch_df, batch_id)
+        except Py4JJavaError as e:
+            cause = e.java_exception
+            while cause is not None and cause.getClass().getName() not in _INTERRUPTS:
+                cause = cause.getCause()
+            if cause is None:
+                raise
+            raise BatchInterrupted(
+                f"py4j.protocol.Py4JJavaError: {e.errmsg.strip()} "
+                f"{cause.getClass().getName()}"
+            ) from None
+
+    return guarded
 
 
 def _write(
@@ -422,4 +468,4 @@ def build_router(
                 cached.unpersist()
             batch_df.unpersist()
 
-    return router
+    return stop_safe(router)

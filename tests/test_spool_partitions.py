@@ -221,3 +221,49 @@ def test_schema_evolution_old_files_null_fill(spark, tmp_path):
     by_id = {r[0]: r for r in rows}
     assert by_id[0][-1] is None  # old row: new column null-filled
     assert by_id[12][-1] == "eu"  # new row: value present
+
+
+def test_partitions_carry_only_the_files_they_read(spark, tmp_path):
+    """Each partition holds the planned files its [start, end) range
+    overlaps (and the global index of the first one), not the whole
+    spool history; rows are the same as a full in-order walk of the
+    spool, with blank lines and empty files skipped."""
+    spool = str(tmp_path / "spool")
+    src = SpoolSource(
+        name="s", path=spool, schema_ddl=EVENTS_DDL, ack_data_column="event_id"
+    )
+    sizes = [7, 0, 13, 1, 25, 4, 9, 30, 2, 11]
+    start = 0
+    for i, n in enumerate(sizes):
+        src.push_messages(make_events(n, start=start), f"{i:03d}.jsonl")
+        start += n
+    with open(os.path.join(spool, "004.jsonl"), "a") as fh:
+        fh.write("\n   \n")  # blank lines count as no rows
+    total = sum(sizes)
+    expected = [r["event_id"] for r in make_events(total)]
+
+    schema = spark.createDataFrame([], EVENTS_DDL).schema
+    reader = _SpoolStreamReader(schema, {"path": spool, "num_partitions": "6"})
+    snap = reader._counts.snapshot(spool)
+    assert [n for _, n in snap] == sizes
+    bounds = [0]
+    for n in sizes:
+        bounds.append(bounds[-1] + n)
+    for lo, hi in [(0, total), (5, 90), (20, 21), (88, total), (40, 40)]:
+        parts = reader.partitions({"row": lo}, {"row": hi})
+        seen = []
+        for p in parts:
+            want = [
+                (f, n) for (f, n), b in zip(snap, bounds)
+                if n and b < p.end and b + n > p.start
+            ]
+            assert p.files == want, (p.start, p.end)
+            if want:
+                assert p.first_row == bounds[snap.index(want[0])]
+            rows = [r[0] for r in iter_spool_rows(reader, p)]
+            assert rows == expected[p.start:p.end]
+            seen.extend(rows)
+        assert seen == expected[lo:hi]
+
+    batch = src.read_batch(spark).collect()
+    assert sorted(r.event_id for r in batch) == expected

@@ -389,3 +389,87 @@ def test_start_stateful_rejects_hooks_it_does_not_call(spark, tmp_dirs, hook):
     with pytest.raises(ConfigError, match=hook):
         Pipeline(cfg, src).start_stateful(spark)
     assert "stateful-hooks-stateful" not in {q.name for q in spark.streams.active}
+
+
+def test_stop_mid_micro_batch_then_restart_acks_each_message_once(
+    spark, tmp_dirs
+):
+    """Stopping the query while a trigger is active is a clean stop
+    (no query exception), and a restart on the same checkpoint acks
+    every message exactly once."""
+    src = SpoolSource(
+        name="spool",
+        path=tmp_dirs["spool"],
+        schema_ddl=EVENTS_DDL,
+        ack_data_column="event_id",
+        allowed_per_trigger=50,
+    )
+    src.push_messages(make_events(200), "000.jsonl")
+    cfg = TopologyConfig(
+        name="stop-mid-batch",
+        order_by="event_id",
+        batchers={"default": BatcherConfig(batch_size=50, batch_timeout_ms=500)},
+        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
+        ack_log=SinkConfig(path=tmp_dirs["ack"]),
+        checkpoint_dir=tmp_dirs["ckpt"],
+    )
+    q = Pipeline(cfg, src).start_stateful(spark, processing_time="200 milliseconds")
+    try:
+        assert _wait_for_acks(spark, tmp_dirs["ack"], 1), "no batch committed"
+        deadline = time.time() + 120
+        while not (q.status["isTriggerActive"] and q.status["isDataAvailable"]):
+            assert time.time() < deadline, "no active trigger"
+            time.sleep(0.01)
+        time.sleep(0.3)  # into the micro-batch's sink and ack writes
+    finally:
+        q.stop()
+    assert q.exception() is None
+
+    q = Pipeline(cfg, src).start_stateful(spark, processing_time="200 milliseconds")
+    try:
+        assert _wait_for_acks(spark, tmp_dirs["ack"], 200), "drain incomplete"
+    finally:
+        q.stop()
+    ack = spark.read.parquet(tmp_dirs["ack"])
+    assert ack.count() == 200
+    assert ack.select("ack_data").distinct().count() == 200
+
+
+def test_interrupted_sink_write_reads_as_a_stop_to_spark(spark):
+    """The error a stop-interrupted foreachBatch hands Spark is short,
+    and Spark's own classifier (``StreamExecution``'s PROXY_ERROR
+    match) takes it for a stop."""
+    import traceback
+
+    from py4j.protocol import Py4JJavaError
+
+    from broadway_spark.streaming.router import BatchInterrupted, stop_safe
+
+    jvm = spark._jvm
+
+    def interrupted_write(batch_df, batch_id):
+        raise Py4JJavaError(
+            "An error occurred while calling o1.save.\n",
+            jvm.java.lang.RuntimeException(jvm.java.lang.InterruptedException()),
+        )
+
+    def failing_write(batch_df, batch_id):
+        raise Py4JJavaError(
+            "An error occurred while calling o1.save.\n",
+            jvm.java.lang.IllegalStateException("boom"),
+        )
+
+    with pytest.raises(Py4JJavaError):
+        stop_safe(failing_write)(None, 0)
+    try:
+        stop_safe(interrupted_write)(None, 0)
+    except BatchInterrupted:
+        text = traceback.format_exc()
+    assert len(text) < 2000
+    proxy_error = jvm.py4j.Py4JException(
+        "An exception was raised by the Python Proxy. Return Message: " + text
+    )
+    stream_execution = jvm.org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+    assert stream_execution.isInterruptionException(
+        proxy_error, spark.sparkContext._jsc.sc()
+    )
