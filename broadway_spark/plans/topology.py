@@ -6,40 +6,33 @@ The reference builds a supervision tree of GenStage processes
 
     source.read_stream() → transformer → envelope-normalize →
     handle_message (status capture) → route_by/batch_key annotation →
-    [partition_by repartition] → writeStream.foreachBatch(router)
+    [partition_by repartition] → [stateful batcher] →
+    writeStream.foreachBatch(router)
 
 Front half is declarative DataFrame work (Catalyst prunes/pushes down
 through it); the router (``streaming/router.py``) is the batcher +
-batch-processor + ack back half. The checkpoint replaces per-message
-acknowledgement for source progress (SURVEY §1.2: ack ≈ offset commit);
-the ack-log sink replaces ``CallerAcknowledger`` messages.
+batch-processor + ack back half on both start paths. The checkpoint
+replaces per-message acknowledgement for source progress (SURVEY §1.2:
+ack ≈ offset commit); the ack-log sink replaces ``CallerAcknowledger``
+messages.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 
 from broadway_spark import message as M
 from broadway_spark.config import ConfigError, TopologyConfig
-from broadway_spark.observe import span
 from broadway_spark.operators.partitioning import (
     partition_by_label,
     resolve_partition_expr,
 )
-from broadway_spark.streaming.router import (
-    _early_acks,
-    _failed_acks,
-    _late_acks,
-    _write,
-    _write_acks,
-    _write_dlq,
-    build_router,
-    stop_safe,
-)
+from broadway_spark.streaming.router import build_router
 from broadway_spark.streaming.stateful_batcher import stateful_batch_stream
 
 
@@ -107,7 +100,7 @@ class Pipeline:
             df = df.withColumn("batch_key", cfg.batch_key_by.cast("string"))
         if cfg.partition_by is not None:
             # No count: the shuffle runs at the query's width,
-            # state_partitions, which _start_query pins.
+            # state_partitions, which _start pins.
             df = df.repartition(resolve_partition_expr(cfg.partition_by, df))
         return df
 
@@ -152,21 +145,41 @@ class Pipeline:
                 {"config": self.topology()},
             )
 
-    def _start_query(
-        self, spark: SparkSession, writer: DataStreamWriter
+    def _start(
+        self,
+        spark: SparkSession,
+        name: str,
+        stage: Callable[[DataFrame], DataFrame] | None = None,
+        **trigger,
     ) -> StreamingQuery:
-        """Start ``writer`` with ``spark.sql.shuffle.partitions`` pinned
-        to ``state_partitions``, then restore the session value.
+        """Start the query both start paths run: the front half, then
+        ``stage`` if given, then the router as its foreachBatch.
 
-        The query clones the session conf when it starts, and its
-        checkpoint records the width at the first batch. Every shuffle
-        in the query runs at that width: the router's chunk windows and
-        ``handle_batch`` pass read it from ``batch_df.sparkSession``,
-        and the stateful batcher shards its state store by it.
+        ``spark.sql.shuffle.partitions`` is pinned to
+        ``state_partitions`` while the query starts, then the session
+        value is restored. The query clones the session conf when it
+        starts, and its checkpoint records the width at the first
+        batch. Every shuffle in the query runs at that width: the
+        router's chunk windows and ``handle_batch`` pass read it from
+        ``batch_df.sparkSession``, and the stateful batcher shards its
+        state store by it.
         """
+        cfg = self.config
+        if cfg.checkpoint_dir is None:
+            raise ConfigError("checkpoint_dir is required to start a pipeline")
+        self._emit_topology_init()
+        stream = self.build_stream(spark)
+        if stage is not None:
+            stream = stage(stream)
+        writer = (
+            stream.writeStream.foreachBatch(build_router(cfg))
+            .option("checkpointLocation", cfg.checkpoint_dir)
+            .trigger(**trigger)
+            .queryName(name)
+        )
         key = "spark.sql.shuffle.partitions"
         prev = spark.conf.get(key)  # effective value
-        spark.conf.set(key, str(self.config.state_partitions))
+        spark.conf.set(key, str(cfg.state_partitions))
         try:
             return writer.start()
         finally:
@@ -187,21 +200,15 @@ class Pipeline:
         batch; a restart from an existing checkpoint keeps the recorded
         width whatever the config says now.
         """
-        cfg = self.config
-        if cfg.checkpoint_dir is None:
-            raise ConfigError("checkpoint_dir is required to start a pipeline")
-        self._emit_topology_init()
-        stream = self.build_stream(spark)
-        writer = stream.writeStream.foreachBatch(build_router(cfg)).option(
-            "checkpointLocation", cfg.checkpoint_dir
-        )
         if trigger == "availableNow":
-            writer = writer.trigger(availableNow=True)
-        elif trigger == "processingTime":
-            writer = writer.trigger(processingTime=processing_time or "0 seconds")
-        else:
-            raise ConfigError(f"unknown trigger {trigger!r}")
-        return self._start_query(spark, writer.queryName(cfg.name))
+            return self._start(spark, self.config.name, availableNow=True)
+        if trigger == "processingTime":
+            return self._start(
+                spark,
+                self.config.name,
+                processingTime=processing_time or "0 seconds",
+            )
+        raise ConfigError(f"unknown trigger {trigger!r}")
 
     def start_stateful(
         self,
@@ -211,98 +218,41 @@ class Pipeline:
         """Run with the *stateful* batcher: cross-micro-batch buffers +
         per-key timeout timers (``streaming/stateful_batcher.py``,
         ``applyInPandasWithState``) — the faithful B2/B3 semantics.
-        Requires integer batch sizes, and no ``handle_batch`` or
-        ``handle_failed`` hook: this path does not call them.
 
-        The stateful stage does the chunking; foreachBatch only fans
-        chunks out to sinks, then writes the DLQ and the acks with the
-        router's own helpers, so both paths write one layout. A
-        checkpoint from before the ``(buffer, deadline_ms)`` state
-        schema cannot be resumed.
+        The stateful stage cuts the ok rows into batches; its output
+        then runs through the same router as ``start()``, which sees
+        the ``trigger_``/``batch_size_`` labels and does not re-cut.
+        So ``handle_failed``, the DLQ, the sinks, the ack log and the
+        spans are the same on both paths. Requires integer batch sizes
+        and no ``handle_batch``: the stage emits no chunk ids for it to
+        group by. A checkpoint from before the ``(buffer, deadline_ms)``
+        state schema cannot be resumed.
         """
         cfg = self.config
-        if cfg.checkpoint_dir is None:
-            raise ConfigError("checkpoint_dir is required to start a pipeline")
-        self._emit_topology_init()
         for name, b in cfg.batchers.items():
             if not isinstance(b.batch_size, int):
                 raise ConfigError(
                     f"stateful batching requires integer batch_size "
                     f"(batcher {name!r})"
                 )
-        for hook in ("handle_batch", "handle_failed"):
-            if getattr(cfg, hook) is not None:
-                raise ConfigError(
-                    f"stateful batching does not call {hook}; unset it or "
-                    f"use start()"
-                )
+        if cfg.handle_batch is not None:
+            raise ConfigError(
+                "stateful batching does not call handle_batch; unset it "
+                "or use start()"
+            )
 
-        stream = self.build_stream(spark)
-        batched = stateful_batch_stream(
-            stream,
-            batch_sizes={n: b.batch_size for n, b in cfg.batchers.items()},
-            batch_timeouts_ms={
-                n: b.batch_timeout_ms for n, b in cfg.batchers.items()
-            },
-            order_by=cfg.order_by,
-        )
+        def stage(stream: DataFrame) -> DataFrame:
+            return stateful_batch_stream(
+                stream,
+                batch_sizes={n: b.batch_size for n, b in cfg.batchers.items()},
+                batch_timeouts_ms={
+                    n: b.batch_timeout_ms for n, b in cfg.batchers.items()
+                },
+                order_by=cfg.order_by,
+            )
 
-        def sink_writer(batch_df: DataFrame, batch_id: int) -> None:
-            rec = cfg.telemetry
-            batch_df = batch_df.persist()
-            try:
-                ok = batch_df.filter(F.col("status.ok"))
-                failed = batch_df.filter(~F.col("status.ok"))
-                if rec is not None:
-                    # processor-stage span on the stateful path: the
-                    # upstream stages execute inside this first
-                    # materialization of the persisted batch.
-                    with rec.span(
-                        "processor", topology_name=cfg.name, batch_id=batch_id
-                    ) as meta:
-                        meta.update(
-                            batch_df.agg(
-                                F.count(F.lit(1)).alias("messages"),
-                                F.count_if(~F.col("status.ok")).alias("failed"),
-                            )
-                            .first()
-                            .asDict()
-                        )
-                for name, sink in cfg.sinks.items():
-                    with span(
-                        rec,
-                        "batch_processor",
-                        topology_name=cfg.name,
-                        batcher_key=name,
-                        batch_id=batch_id,
-                    ):
-                        _write(
-                            ok.filter(F.col("batcher") == name).drop(
-                                "trigger_", "batch_size_"
-                            ),
-                            sink.path,
-                            sink.format,
-                            batch_id,
-                            sink.idempotent,
-                        )
-                _write_dlq(cfg, failed.drop("trigger_", "batch_size_"), batch_id)
-                trigger = F.col("trigger_")
-                _write_acks(
-                    cfg,
-                    _early_acks(ok, batch_id)
-                    + [_late_acks(ok, batch_id, trigger)]
-                    + _failed_acks(cfg, failed, batch_id, trigger),
-                    batch_id,
-                )
-            finally:
-                batch_df.unpersist()
-
-        return self._start_query(
-            spark,
-            batched.writeStream.foreachBatch(stop_safe(sink_writer))
-            .option("checkpointLocation", cfg.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .queryName(f"{cfg.name}-stateful"),
+        return self._start(
+            spark, f"{cfg.name}-stateful", stage, processingTime=processing_time
         )
 
     def run_to_completion(self, spark: SparkSession, timeout_s: int = 300) -> None:

@@ -2,25 +2,33 @@
 the pipeline.
 
 This is the Spark translation of Broadway's batcher + batch-processor +
-acknowledger stages (SURVEY §3.2 steps 4-6). Per micro-batch:
+acknowledger stages (SURVEY §3.2 steps 4-6). Both start paths end
+here: ``Pipeline.start`` feeds it the processed messages, and
+``Pipeline.start_stateful`` feeds it the stateful batcher's output,
+whose ok rows are already cut into batches. Per micro-batch:
 
 1. persist the batch (it feeds the failed branch, every batcher branch,
    and the ack log — one compute, many consumers)
-2. failed rows → ``handle_failed`` hook → DLQ sink → acked as failed
+2. failed rows → ``handle_failed`` hook → DLQ sink
    (reference ``acknowledger.ex:96-150``)
 3. ok rows, per batcher: chunk per batch_key by size or weight budget
-   (``batcher_stage.ex:108-221``), run ``handle_batch`` as
-   ``applyInPandas`` over (batch_key, chunk) groups
-   (``batch_processor_stage.ex:52-127``), write the batcher's sink
-4. append the ack log — the bulk-ack analogue of
-   ``acknowledger.ex:63-85``'s one-ack-call-per-source-handle, keyed by
-   (batch_id, ack_ref) so at-least-once reruns are deduplicatable
+   (``batcher_stage.ex:108-221``) unless the rows already carry the
+   stateful batcher's ``trigger_``/``batch_size_`` labels, run
+   ``handle_batch`` as ``applyInPandas`` over (batch_key, chunk) groups
+   (``batch_processor_stage.ex:52-127``), write the rows it left ok to
+   the batcher's sink
+4. project each written frame (the failed one, each batcher's) to one
+   ack row per message and append them to the ack log — the bulk-ack
+   analogue of ``acknowledger.ex:63-85``'s
+   one-ack-call-per-source-handle, keyed by (batch_id, ack_ref) so
+   at-least-once reruns are deduplicatable
 
 Trigger labels on ack rows mirror ``BatchInfo.trigger``
-(``batch_info.ex:40-41``): full chunks are 'size', the trailing partial
-chunk of a micro-batch is 'timeout' (the micro-batch boundary plays the
-role of the batch-timeout timer), and 'flush' when the row's
-batch_mode is 'flush'.
+(``batch_info.ex:40-41``). Here full chunks are 'size', the trailing
+partial chunk of a micro-batch is 'timeout' (the micro-batch boundary
+plays the role of the batch-timeout timer), and 'flush' when the row's
+batch_mode is 'flush'; the stateful batcher sets its own labels from
+its per-key timers.
 
 Scale notes: the only shuffle is the per-batcher chunking window keyed
 by batch_key; consumer-mode pipelines (no batchers) are shuffle-free.
@@ -37,6 +45,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from broadway_spark import message as M
 from broadway_spark.config import TopologyConfig
 from broadway_spark.observe import span
 from broadway_spark.operators.batching import (
@@ -51,6 +60,9 @@ ACK_LOG_SCHEMA = (
     "batch_size int"
 )
 
+
+# The chunk labels the batchers add; no sink or DLQ row carries them.
+_STAGE_COLS = ("chunk_id", "trigger_", "batch_size_")
 
 # The Java exceptions Spark's StreamExecution takes for "interrupted by
 # stop()" (its IO_EXCEPTION_NAMES).
@@ -117,56 +129,36 @@ def _write(
         df.write.format(fmt).mode("append").save(path)
 
 
-def _ack_rows(
-    df: DataFrame, batch_id: int, outcome: str, trigger_col=None
-) -> DataFrame:
-    trig = trigger_col if trigger_col is not None else F.lit(None).cast("string")
+def _acks(df: DataFrame, batch_id: int) -> DataFrame:
+    """The ack rows of one written frame, one per message.
+
+    - ``outcome``: 'ok' for ok rows. A failed row is 'retry' under
+      ``on_failure=retry`` (A4: not acked, the source's redelivery owns
+      it, A6 / broadway.ex:332-338), else 'failed'.
+    - ``trigger``/``batch_size``: the row's chunk labels
+      (``BatchInfo``, batch_info.ex:40-41) where the frame carries
+      them, else null. An early-acked ok row (A3, message.ex:172-201)
+      was acked at the processor stage: trigger 'early', no size.
+    """
+    ok = F.col("status.ok")
+    early = ok & (F.col("ack_policy") == M.ACK_EARLY)
+    cut = "trigger_" in df.columns
+    trigger = F.col("trigger_") if cut else F.lit(None).cast("string")
+    size = F.col("batch_size_") if cut else F.lit(None).cast("int")
     return df.select(
         F.lit(batch_id).alias("batch_id"),
         F.col("ack.ack_ref").alias("ack_ref"),
         F.col("ack.ack_data").alias("ack_data"),
-        F.lit(outcome).alias("outcome"),
+        F.when(ok, F.lit("ok"))
+        .when(F.col("ack_policy") == M.ACK_RETRY_ON_FAILURE, F.lit("retry"))
+        .otherwise(F.lit("failed"))
+        .alias("outcome"),
         F.col("status.reason").alias("reason"),
-        F.col("batcher").alias("batcher"),
-        F.col("batch_key").alias("batch_key"),
-        trig.alias("trigger"),
-        F.col("batch_size_").alias("batch_size")
-        if "batch_size_" in df.columns
-        else F.lit(None).cast("int").alias("batch_size"),
+        "batcher",
+        "batch_key",
+        F.when(early, F.lit("early")).otherwise(trigger).alias("trigger"),
+        F.when(early, F.lit(None).cast("int")).otherwise(size).alias("batch_size"),
     )
-
-
-def _early_acks(ok: DataFrame, batch_id: int) -> list[DataFrame]:
-    """A3: early-acked rows get their ack at the processor stage
-    (message.ex:172-201), labelled trigger='early'."""
-    if "ack_policy" not in ok.columns:
-        return []
-    early = ok.filter(F.col("ack_policy") == "early")
-    return [_ack_rows(early, batch_id, "ok", trigger_col=F.lit("early"))]
-
-
-def _late_acks(ok: DataFrame, batch_id: int, trigger_col=None) -> DataFrame:
-    """Terminal 'ok' acks; early-acked rows already have theirs."""
-    if "ack_policy" in ok.columns:
-        ok = ok.filter(F.col("ack_policy") != "early")
-    return _ack_rows(ok, batch_id, "ok", trigger_col=trigger_col)
-
-
-def _failed_acks(
-    config: TopologyConfig, failed: DataFrame, batch_id: int, trigger_col=None
-) -> list[DataFrame]:
-    """A4: failed rows with on_failure=retry are NOT acked — the
-    source's redelivery owns them (A6: no built-in retries,
-    broadway.ex:332-338). They reach the connector's ack executor as
-    outcome='retry' (never the ack log) so per-message-ack brokers can
-    fast-track redelivery (SQS ChangeMessageVisibility(0))."""
-    if "ack_policy" not in failed.columns:
-        return [_ack_rows(failed, batch_id, "failed", trigger_col)]
-    retry = F.col("ack_policy") == "retry"
-    acks = [_ack_rows(failed.filter(~retry), batch_id, "failed", trigger_col)]
-    if config.ack_executor is not None:
-        acks.append(_ack_rows(failed.filter(retry), batch_id, "retry", trigger_col))
-    return acks
 
 
 def _write_dlq(config: TopologyConfig, failed: DataFrame, batch_id: int) -> None:
@@ -177,15 +169,11 @@ def _write_dlq(config: TopologyConfig, failed: DataFrame, batch_id: int) -> None
     dlq = config.dlq
     if dlq is None:
         return
-    disposition = (
-        F.when(F.col("ack_policy") == "retry", F.lit("retry")).otherwise(
-            F.lit("terminal")
-        )
-        if "ack_policy" in failed.columns
-        else F.lit("terminal")
-    )
+    disposition = F.when(
+        F.col("ack_policy") == M.ACK_RETRY_ON_FAILURE, F.lit("retry")
+    ).otherwise(F.lit("terminal"))
     _write(
-        failed.withColumn("dlq_disposition", disposition),
+        failed.drop(*_STAGE_COLS).withColumn("dlq_disposition", disposition),
         dlq.path,
         dlq.format,
         batch_id,
@@ -199,10 +187,9 @@ def _write_acks(
     """Append the ack rows in ``parts`` to the ack log and hand them to
     the ack executor.
 
-    ``parts`` carries ``outcome='retry'`` rows only when an executor is
-    set: they are executor-only signals, never acks, so the log leaves
-    them out. Both start paths end each micro-batch here, with parts
-    built by the helpers above.
+    'retry' rows are executor-only signals, never acks: the log leaves
+    them out, and the executor gets every row so per-message-ack
+    brokers can fast-track redelivery (SQS ChangeMessageVisibility(0)).
     """
     executor = config.ack_executor
     if config.ack_log is None and executor is None:
@@ -213,13 +200,8 @@ def _write_acks(
         acks = acks.persist()
     try:
         if config.ack_log is not None:
-            logged = (
-                acks.filter(F.col("outcome") != "retry")
-                if executor is not None
-                else acks
-            )
             _write(
-                logged,
+                acks.filter(F.col("outcome") != "retry"),
                 config.ack_log.path,
                 config.ack_log.format,
                 batch_id,
@@ -344,7 +326,6 @@ def build_router(
         try:
             failed = batch_df.filter(~F.col("status.ok"))
             ok = batch_df.filter(F.col("status.ok"))
-            ack_parts = _early_acks(ok, batch_id)
 
             # --- failed branch: handle_failed hook → DLQ → ack failed
             if config.handle_failed is not None:
@@ -397,17 +378,25 @@ def build_router(
             # every failed message, acknowledger.ex:96-150); only their
             # ack differs.
             _write_dlq(config, failed, batch_id)
-            ack_parts += _failed_acks(config, failed, batch_id)
+            ack_parts = [_acks(failed, batch_id)]
 
             if not config.batchers:
                 # Consumer mode (topology.ex:277-281): processors are
                 # terminal; ack in place, optional default sink.
                 sink = config.sinks.get("default")
                 if sink is not None:
-                    _write(ok, sink.path, sink.format, batch_id, sink.idempotent)
-                ack_parts.append(_late_acks(ok, batch_id))
+                    _write(
+                        ok.drop(*_STAGE_COLS),
+                        sink.path,
+                        sink.format,
+                        batch_id,
+                        sink.idempotent,
+                    )
+                ack_parts.append(_acks(ok, batch_id))
             else:
                 order_col = config.order_by
+                # Rows from the stateful batcher arrive already cut.
+                cut = "trigger_" in batch_df.columns
                 for name, bcfg in config.batchers.items():
                     # batcher stage = grouping/annotation; batch_processor
                     # = the sink write, where handle_batch executes.
@@ -419,11 +408,9 @@ def build_router(
                         batch_id=batch_id,
                         messages=per_batcher.get(name, 0),
                     ):
-                        chunked = _chunk(
-                            ok.filter(F.col("batcher") == name),
-                            bcfg.batch_size,
-                            order_col,
-                        )
+                        chunked = ok.filter(F.col("batcher") == name)
+                        if not cut:
+                            chunked = _chunk(chunked, bcfg.batch_size, order_col)
                         if config.handle_batch is not None:
                             per_batch = _make_batch_hook(
                                 name, config.handle_batch, order_col
@@ -451,16 +438,16 @@ def build_router(
                         batch_id=batch_id,
                         messages=per_batcher.get(name, 0),
                     ):
+                        # Rows handle_batch failed are acked, not
+                        # written (batch_processor_stage.ex:52-127).
                         _write(
-                            chunked.drop("chunk_id", "batch_size_", "trigger_"),
+                            chunked.filter(F.col("status.ok")).drop(*_STAGE_COLS),
                             sink.path,
                             sink.format,
                             batch_id,
                             sink.idempotent,
                         )
-                    ack_parts.append(
-                        _late_acks(chunked, batch_id, F.col("trigger_"))
-                    )
+                    ack_parts.append(_acks(chunked, batch_id))
 
             _write_acks(config, ack_parts, batch_id)
         finally:

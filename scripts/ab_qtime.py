@@ -20,11 +20,13 @@ from __future__ import annotations
 
 import argparse
 import importlib
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:

@@ -22,11 +22,13 @@ Usage: python scripts/boundary_audit.py [sf_dir]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -11,10 +11,12 @@ Usage: python scripts/drain_decompose.py [--sf DIR] [--reps N] q...
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 EVENTS: list[tuple[float, str]] = []
 

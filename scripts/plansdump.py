@@ -6,9 +6,11 @@ artifact. Regenerate with: python scripts/plansdump.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from broadway_spark import get_spark  # noqa: E402
@@ -271,7 +273,7 @@ def main() -> None:
         out.append("```")
         out.append(plan.strip()[:4000])
         out.append("```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
 

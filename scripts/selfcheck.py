@@ -10,12 +10,14 @@ Usage: python scripts/selfcheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

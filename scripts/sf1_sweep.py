@@ -30,14 +30,16 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
 import threading
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 from selfcheck import TABLES, canon  # noqa: E402
 

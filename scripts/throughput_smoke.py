@@ -30,7 +30,8 @@ import tempfile
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -1,8 +1,12 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout this suite belongs to; first on sys.path, so its
+# broadway_spark and __spark_entry__ are the ones under test.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from broadway_spark import get_spark  # noqa: E402
 

@@ -6,11 +6,7 @@ centroid seeds are fixed, so these are regression tests, not flaky
 statistical ones).
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.01"
 

@@ -3,14 +3,10 @@ against plain-Python reference implementations on controlled inputs
 (the oracle gate proves engine-vs-engine equality; these prove the
 SEMANTICS are the intended ones)."""
 
-import sys
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 _DOC = st.lists(
     st.sampled_from("a b c d".split()), min_size=1, max_size=25

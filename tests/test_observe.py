@@ -146,14 +146,21 @@ def test_handle_failed_exception_span(spark, tmp_dirs):
 
 
 def test_stateful_path_emits_processor_and_batch_processor_spans(spark, tmp_dirs):
-    """start_stateful: the stateful batcher does the chunking, so the
-    span surface there is processor (+counts) and batch_processor per
-    sink write — asserted over a drained run."""
+    """start_stateful runs the stateful batcher's output through the
+    router, so its span surface is the router's: processor (+counts),
+    processor:message with its exception variant, and batcher and
+    batch_processor per batcher — asserted over a drained run."""
     rec = Recorder()
     src = _source(tmp_dirs, n=40)
     cfg = TopologyConfig(
         name="spans-stateful",
         order_by="event_id",
+        handle_message=lambda df: df.withColumn(
+            "status",
+            F.when(
+                F.col("event_type") == "error", M.failed_status(F.lit("boom"), "proc")
+            ).otherwise(F.col("status")),
+        ),
         batchers={"default": BatcherConfig(batch_size=20, batch_timeout_ms=800)},
         sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
         ack_log=SinkConfig(path=tmp_dirs["ack"]),
@@ -177,6 +184,9 @@ def test_stateful_path_emits_processor_and_batch_processor_spans(spark, tmp_dirs
     assert "topology:init" in kinds
     assert "processor:start" in kinds and "processor:stop" in kinds
     assert "batch_processor:start" in kinds and "batch_processor:stop" in kinds
+    assert "batcher:start" in kinds and "batcher:stop" in kinds
+    assert "processor:message:start" in kinds and "processor:message:stop" in kinds
+    assert "processor:message:exception" in kinds
     total = sum(
         s.metadata.get("messages", 0) for s in rec.events("processor:stop")
     )

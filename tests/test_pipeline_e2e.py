@@ -140,6 +140,37 @@ def test_handle_batch_runs_per_group(spark, tmp_dirs):
     assert all(t.startswith("batch:billing:") for t in tags)
 
 
+def test_rows_handle_batch_fails_are_acked_failed_not_written(spark, tmp_dirs):
+    """handle_batch's output splits by status (batch_processor_stage.ex
+    :52-127): the rows it fails are acked 'failed' with its reason and
+    stay out of the batcher's sink."""
+
+    def hook(name, pdf):
+        status = [
+            {"ok": False, "reason": "batch-reject", "stage": "batch"}
+            if i % 10 == 2
+            else s
+            for i, s in zip(pdf["event_id"], pdf["status"])
+        ]
+        return pdf.assign(status=status)
+
+    src = _mk_source(tmp_dirs, n=200)
+    pipe = Pipeline(_routed_config(tmp_dirs, handle_batch=hook), src)
+    pipe.run_to_completion(spark)
+
+    # purchases (billing) are ids 2, 7, 12, ...: the hook fails 2, 12, ...
+    rejected = set(range(2, 200, 10))
+    ack = spark.read.parquet(tmp_dirs["ack"])
+    assert ack.count() == 200
+    failed = ack.filter(F.col("reason") == "batch-reject")
+    assert {int(r["ack_data"]) for r in failed.collect()} == rejected
+    assert {(r["outcome"], r["batcher"]) for r in failed.collect()} == {
+        ("failed", "billing")
+    }
+    billing = {r[0] for r in spark.read.parquet(tmp_dirs["sink"]).select("event_id").collect()}
+    assert billing == set(range(7, 200, 10))
+
+
 def test_unknown_batcher_diverted(spark, tmp_dirs):
     """Routing to an undeclared batcher fails the row instead of
     crashing (processor_stage.ex:213-220, as data)."""

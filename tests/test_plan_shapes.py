@@ -7,13 +7,9 @@ is a 100× slowdown at cluster scale that no correctness test would
 catch.
 """
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 

@@ -4,14 +4,23 @@ correctness gate consumes — a query missing its oracle twin silently
 downgrades to a weaker rows-only check, and a FIXTURES omission keeps
 it out of the declared gate entirely."""
 
+import os
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
+import __spark_entry__ as entry
 
-import __spark_entry__ as entry  # noqa: E402
+from .conftest import ROOT
 
-FIXTURES = "/root/repo/FIXTURES.md"
+FIXTURES = os.path.join(ROOT, "FIXTURES.md")
+
+
+def test_suite_imports_the_checkout_it_lives_in():
+    """The engine and the registry under test are this checkout's, not
+    another copy that happens to be on ``sys.path``."""
+    import broadway_spark
+
+    for mod in (broadway_spark, entry):
+        assert os.path.commonpath([ROOT, os.path.abspath(mod.__file__)]) == ROOT
 
 
 def test_every_query_has_an_oracle_twin():

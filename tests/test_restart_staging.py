@@ -4,11 +4,8 @@ of events with file_idx baked into the rows — the property both the
 drains' chunk structure and the s14 oracle's ntile twin key on."""
 
 import os
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 

@@ -16,14 +16,17 @@ ulp. Such ratios must be published as exact integer ppm
 """
 
 import importlib.util
+import os
 import re
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import ROOT
+
 spec = importlib.util.spec_from_file_location(
-    "entry", "/root/repo/__spark_entry__.py"
+    "entry", os.path.join(ROOT, "__spark_entry__.py")
 )
 entry = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(entry)
@@ -273,7 +276,7 @@ def test_ivfpq_index_merge_self_batch_zero_drift(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "e", "/root/repo/__spark_entry__.py"
+        "e", os.path.join(ROOT, "__spark_entry__.py")
     )
     e = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(e)

@@ -5,14 +5,17 @@ policy-sweep markers.
 """
 
 import importlib.util
+import os
 import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import ROOT
+
 spec = importlib.util.spec_from_file_location(
-    "entry13", "/root/repo/__spark_entry__.py"
+    "entry13", os.path.join(ROOT, "__spark_entry__.py")
 )
 entry = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(entry)
@@ -91,7 +94,7 @@ def test_sf1_sweep_separates_no_oracle_from_spark_only():
     counted under n_no_oracle, not n_spark_only (r12 ADVICE)."""
     import pathlib
 
-    src = pathlib.Path("/root/repo/scripts/sf1_sweep.py").read_text()
+    src = pathlib.Path(ROOT, "scripts", "sf1_sweep.py").read_text()
     assert "n_no_oracle" in src
     assert 'entry["oracle"] == "no_oracle"' in src
     # bounded slice always cleaned up
@@ -107,8 +110,8 @@ def test_operator_and_oracle_thresholds_share_ppm_helper():
     import re
 
     for p in (
-        "/root/repo/broadway_spark/operators/dedup.py",
-        "/root/repo/__spark_entry__.py",
+        os.path.join(ROOT, "broadway_spark", "operators", "dedup.py"),
+        os.path.join(ROOT, "__spark_entry__.py"),
     ):
         src = pathlib.Path(p).read_text()
         bad = re.findall(

@@ -6,15 +6,12 @@ joins for the fat wedge/rank joins, no cartesian anywhere).
 
 import os
 import shutil
-import sys
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 

@@ -3,15 +3,11 @@ no-Exchange plan property, the interval join's count-once exactness
 vs brute force, BFS vs brute-force shortest paths, and the PIT join's
 no-future-leakage contract."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
-from broadway_spark.operators import layout as LY  # noqa: E402
+import __spark_entry__ as entry
+from broadway_spark.operators import layout as LY
 
 SF = "/root/testdata/sf0.001"
 

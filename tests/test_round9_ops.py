@@ -8,14 +8,10 @@
    guard on the distinct-price frontier input.
 """
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 
 def _write_gini_fixture(spark, root):

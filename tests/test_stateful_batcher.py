@@ -249,18 +249,26 @@ def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
 def test_both_start_paths_write_one_layout(spark, tmp_path):
     """start() and start_stateful() run the same config into the same
     sink and DLQ layouts: the Message envelope plus the DLQ's
-    dlq_disposition, with no stage-private columns."""
+    dlq_disposition, with no stage-private columns. Both log the same
+    (batcher, outcome) counts, leave the retry slice out of the log, and
+    ack the early slice with trigger='early' and no batch size."""
 
     def handle_message(df):
         fail = F.col("event_type") == "error"
-        return df.withColumn(
+        df = df.withColumn(
             "status",
             F.when(fail, M.failed_status(F.lit("boom"), "proc")).otherwise(
                 F.col("status")
             ),
         )
+        df = M.configure_ack(
+            df, M.ACK_RETRY_ON_FAILURE, when=fail & (F.col("user_id") % 2 == 0)
+        )
+        return M.ack_immediately(df, when=F.col("event_type") == "click")
 
-    layouts = {}
+    # 20 events: 4 errors (ids 3, 8, 13, 18), 2 of them retry-owned
+    # (user_id 6 and 4), and 4 early-acked clicks.
+    layouts, outcomes, early = {}, {}, {}
     for path in ("start", "start_stateful"):
         d = {k: str(tmp_path / path / k) for k in ("spool", "sink", "dlq", "ack", "ckpt")}
         src = SpoolSource(
@@ -285,16 +293,30 @@ def test_both_start_paths_write_one_layout(spark, tmp_path):
         else:
             q = pipe.start_stateful(spark, processing_time="300 milliseconds")
             try:
-                assert _wait_for_acks(spark, d["ack"], 20), "drain incomplete"
+                assert _wait_for_acks(spark, d["ack"], 18), "drain incomplete"
+                time.sleep(2)  # settle: no further acks may appear
             finally:
                 q.stop()
         layouts[path] = tuple(
             set(spark.read.parquet(d[k]).columns) for k in ("sink", "dlq", "ack")
         )
+        acks = spark.read.parquet(d["ack"])
+        outcomes[path] = {
+            (r["batcher"], r["outcome"]): r["count"]
+            for r in acks.groupBy("batcher", "outcome").count().collect()
+        }
+        early[path] = {
+            (int(r["ack_data"]), r["batch_size"])
+            for r in acks.filter(F.col("trigger") == "early").collect()
+        }
 
     sink, dlq, ack = layouts["start"]
     assert layouts["start_stateful"] == (sink, dlq, ack)
     assert dlq == sink | {"dlq_disposition"}
+    assert outcomes["start"] == {("default", "ok"): 16, ("default", "failed"): 2}
+    assert outcomes["start_stateful"] == outcomes["start"]
+    assert early["start"] == {(i, None) for i in (1, 6, 11, 16)}
+    assert early["start_stateful"] == early["start"]
 
 
 def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):
@@ -367,18 +389,17 @@ def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):
     assert spark.conf.get(provider_key) == provider_before
 
 
-@pytest.mark.parametrize("hook", ["handle_batch", "handle_failed"])
+@pytest.mark.parametrize("hook", ["handle_batch"])
 def test_start_stateful_rejects_hooks_it_does_not_call(spark, tmp_dirs, hook):
-    """start_stateful's sink writer never calls handle_batch or
-    handle_failed, so setting either is a config error, not a silent
+    """The stateful stage emits no chunk ids, so start_stateful cannot
+    call handle_batch: setting it is a config error, not a silent
     no-op."""
-    fn = (lambda name, pdf: pdf) if hook == "handle_batch" else (lambda pdf: pdf)
     cfg = TopologyConfig(
         name="stateful-hooks",
         batchers={"default": BatcherConfig(batch_size=5)},
         sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
         checkpoint_dir=tmp_dirs["ckpt"],
-        **{hook: fn},
+        **{hook: lambda name, pdf: pdf},
     )
     src = SpoolSource(
         name="spool",
@@ -389,6 +410,57 @@ def test_start_stateful_rejects_hooks_it_does_not_call(spark, tmp_dirs, hook):
     with pytest.raises(ConfigError, match=hook):
         Pipeline(cfg, src).start_stateful(spark)
     assert "stateful-hooks-stateful" not in {q.name for q in spark.streams.active}
+
+
+def test_start_stateful_runs_handle_failed_before_the_dlq(spark, tmp_dirs):
+    """start_stateful runs the router's failed branch: the DLQ and the
+    failed acks carry the reason handle_failed wrote."""
+
+    def handle_message(df):
+        return df.withColumn(
+            "status",
+            F.when(
+                F.col("event_type") == "error",
+                M.failed_status(F.lit("boom"), "proc"),
+            ).otherwise(F.col("status")),
+        )
+
+    def handle_failed(pdf):
+        status = [
+            {"ok": s["ok"], "reason": f"handled:{s['reason']}", "stage": s["stage"]}
+            for s in pdf["status"]
+        ]
+        return pdf.assign(status=status)
+
+    src = SpoolSource(
+        name="spool",
+        path=tmp_dirs["spool"],
+        schema_ddl=EVENTS_DDL,
+        ack_data_column="event_id",
+    )
+    src.push_messages(make_events(20), "000.jsonl")
+    cfg = TopologyConfig(
+        name="stateful-handle-failed",
+        order_by="event_id",
+        handle_message=handle_message,
+        handle_failed=handle_failed,
+        batchers={"default": BatcherConfig(batch_size=5, batch_timeout_ms=500)},
+        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
+        dlq=SinkConfig(path=tmp_dirs["dlq"]),
+        ack_log=SinkConfig(path=tmp_dirs["ack"]),
+        checkpoint_dir=tmp_dirs["ckpt"],
+    )
+    q = Pipeline(cfg, src).start_stateful(spark, processing_time="300 milliseconds")
+    try:
+        assert _wait_for_acks(spark, tmp_dirs["ack"], 20), "drain incomplete"
+    finally:
+        q.stop()
+
+    dlq = spark.read.parquet(tmp_dirs["dlq"])
+    assert dlq.count() == 4
+    assert {r[0] for r in dlq.select("status.reason").collect()} == {"handled:boom"}
+    failed = spark.read.parquet(tmp_dirs["ack"]).filter(F.col("outcome") == "failed")
+    assert {r[0] for r in failed.select("reason").collect()} == {"handled:boom"}
 
 
 def test_stop_mid_micro_batch_then_restart_acks_each_message_once(
