@@ -31,7 +31,14 @@ emits ``query:start``, ``query:progress`` and ``query:stop``, each with
 the query name in its metadata. ``query:progress`` carries the
 micro-batch's ``batch_id``, input row count, phase durations and
 ``DataFrame.observe`` metrics (see ``observed``), so it joins with the
-router's spans on ``batch_id``.
+router's spans on ``batch_id``. Its measurement also holds each state
+operator's row counts, memory and commit time (``state_operators``)
+and ``codegen_compiles``: how many classes Spark's code generator
+compiled since the previous progress event. That count is JVM-wide,
+so it covers every query and job of the session (and any other
+session in the same JVM), not only this micro-batch; a micro-batch
+whose plan is the same as the previous one's compiles nothing, so a
+steady non-zero value names a per-batch recompile.
 
 The recorder keeps its events in memory in the process that starts
 the queries, optionally mirrored to one JSONL file (one line per
@@ -49,6 +56,7 @@ import time
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import StreamingQueryListener
@@ -98,6 +106,7 @@ class Recorder(StreamingQueryListener):
         self._lock = threading.Lock()
         self._jsonl_path = jsonl_path
         self._queries: dict[str, tuple[str, float]] = {}  # id → (name, t0)
+        self._compiles: int | None = None  # codegen count at the last event
 
     def emit(self, event: str, measurement: dict, metadata: dict) -> None:
         # Copies: a caller that keeps mutating its dicts (span() yields
@@ -138,10 +147,20 @@ class Recorder(StreamingQueryListener):
 
     # -- StreamingQueryListener callbacks ------------------------------
 
+    def _codegen_compiles(self) -> int | None:
+        """Classes compiled by Spark's code generator since the last
+        call, JVM-wide (``CodegenMetrics``); None on the first call."""
+        metrics = SparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        count = metrics.METRIC_COMPILATION_TIME().getCount()
+        with self._lock:
+            prev, self._compiles = self._compiles, count
+        return None if prev is None else count - prev
+
     def onQueryStarted(self, event) -> None:
         name = event.name or str(event.id)
         with self._lock:
             self._queries[str(event.id)] = (name, time.monotonic())
+        self._codegen_compiles()
         self.emit("query:start", {"system_time": time.time()}, {"query": name})
 
     def onQueryProgress(self, event) -> None:
@@ -151,6 +170,17 @@ class Recorder(StreamingQueryListener):
             {
                 "num_input_rows": p.numInputRows,
                 "duration_ms": dict(p.durationMs or {}),
+                "state_operators": [
+                    {
+                        "operator": op.operatorName,
+                        "num_rows_total": op.numRowsTotal,
+                        "num_rows_updated": op.numRowsUpdated,
+                        "memory_used_bytes": op.memoryUsedBytes,
+                        "commit_time_ms": op.commitTimeMs,
+                    }
+                    for op in p.stateOperators or ()
+                ],
+                "codegen_compiles": self._codegen_compiles(),
             },
             {
                 "query": p.name or str(p.id),

@@ -9,19 +9,29 @@ whose ok rows are already cut into batches. Per micro-batch:
 
 1. persist the batch (it feeds the failed branch, every batcher branch,
    and the ack log — one compute, many consumers)
-2. failed rows → ``handle_failed`` hook → DLQ sink
-   (reference ``acknowledger.ex:96-150``)
+2. failed rows → ``handle_failed`` hook (reference
+   ``acknowledger.ex:96-150``)
 3. ok rows, per batcher: chunk per batch_key by size or weight budget
    (``batcher_stage.ex:108-221``) unless the rows already carry the
    stateful batcher's ``trigger_``/``batch_size_`` labels, run
    ``handle_batch`` as ``applyInPandas`` over (batch_key, chunk) groups
-   (``batch_processor_stage.ex:52-127``), write the rows it left ok to
-   the batcher's sink
-4. project each written frame (the failed one, each batcher's) to one
+   (``batch_processor_stage.ex:52-127``), and in the same task run
+   ``handle_failed`` on the rows it failed; write the rows it left ok
+   to the batcher's sink
+4. write the failed rows of steps 2 and 3 to the DLQ in one write
+5. project each written frame (the failed one, each batcher's) to one
    ack row per message and append them to the ack log — the bulk-ack
    analogue of ``acknowledger.ex:63-85``'s
    one-ack-call-per-source-handle, keyed by (batch_id, ack_ref) so
-   at-least-once reruns are deduplicatable
+   at-least-once reruns are deduplicatable. ``batch_id`` comes from a
+   one-row relation joined onto the ack rows, not from a literal:
+   Spark inlines a literal into the generated Java, so each
+   micro-batch's ack stages would be new source text, miss the codegen
+   cache and be compiled (and JIT-compiled) again. The DLQ and the ack
+   log are each written at the query's width
+   (``spark.sql.shuffle.partitions``, which ``Pipeline`` pins to
+   ``state_partitions``): at most that many tasks and files per
+   micro-batch, whatever the number of branches.
 
 Trigger labels on ack rows mirror ``BatchInfo.trigger``
 (``batch_info.ex:40-41``). Here full chunks are 'size', the trailing
@@ -41,6 +51,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from functools import reduce, wraps
 
+import pandas as pd
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -53,12 +64,14 @@ from broadway_spark.operators.batching import (
     chunk_by_budget,
     chunk_by_size,
 )
+from broadway_spark.operators.materialize import shuffle_partitions
 
 ACK_LOG_SCHEMA = (
     "batch_id long, ack_ref string, ack_data string, outcome string, "
     "reason string, batcher string, batch_key string, trigger string, "
     "batch_size int"
 )
+ACK_COLS = tuple(f.split()[0] for f in ACK_LOG_SCHEMA.split(", "))
 
 
 # The chunk labels the batchers add; no sink or DLQ row carries them.
@@ -129,8 +142,9 @@ def _write(
         df.write.format(fmt).mode("append").save(path)
 
 
-def _acks(df: DataFrame, batch_id: int) -> DataFrame:
-    """The ack rows of one written frame, one per message.
+def _acks(df: DataFrame) -> DataFrame:
+    """The ack rows of one written frame, one per message, without
+    their ``batch_id`` (``_write_acks`` adds it, see there).
 
     - ``outcome``: 'ok' for ok rows. A failed row is 'retry' under
       ``on_failure=retry`` (A4: not acked, the source's redelivery owns
@@ -146,7 +160,6 @@ def _acks(df: DataFrame, batch_id: int) -> DataFrame:
     trigger = F.col("trigger_") if cut else F.lit(None).cast("string")
     size = F.col("batch_size_") if cut else F.lit(None).cast("int")
     return df.select(
-        F.lit(batch_id).alias("batch_id"),
         F.col("ack.ack_ref").alias("ack_ref"),
         F.col("ack.ack_data").alias("ack_data"),
         F.when(ok, F.lit("ok"))
@@ -161,19 +174,33 @@ def _acks(df: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _write_dlq(config: TopologyConfig, failed: DataFrame, batch_id: int) -> None:
-    """Write failed rows to the DLQ, each tagged with its disposition so
-    consumers can tell transient retry failures (the source will
-    redeliver; the row may later succeed) from terminal ones. Without
-    the tag, DLQ counts overstate permanent failures."""
+def _union(parts: list[DataFrame]) -> DataFrame:
+    """The parts as one frame of at most the query's width
+    (``spark.sql.shuffle.partitions`` of the batch's session)
+    partitions, so its write runs that many tasks and files however
+    many branches feed it."""
+    df = reduce(DataFrame.unionByName, parts)
+    return df.coalesce(shuffle_partitions(df.sparkSession))
+
+
+def _write_dlq(
+    config: TopologyConfig, parts: list[DataFrame], batch_id: int
+) -> None:
+    """Write the failed rows in ``parts`` to the DLQ in one write (the
+    idempotent mode overwrites the micro-batch's partition), each
+    tagged with its disposition so consumers can tell transient retry
+    failures (the source will redeliver; the row may later succeed)
+    from terminal ones. Without the tag, DLQ counts overstate
+    permanent failures."""
     dlq = config.dlq
     if dlq is None:
         return
     disposition = F.when(
         F.col("ack_policy") == M.ACK_RETRY_ON_FAILURE, F.lit("retry")
     ).otherwise(F.lit("terminal"))
+    failed = _union([p.drop(*_STAGE_COLS) for p in parts])
     _write(
-        failed.drop(*_STAGE_COLS).withColumn("dlq_disposition", disposition),
+        failed.withColumn("dlq_disposition", disposition),
         dlq.path,
         dlq.format,
         batch_id,
@@ -187,6 +214,19 @@ def _write_acks(
     """Append the ack rows in ``parts`` to the ack log and hand them to
     the ack executor.
 
+    ``batch_id`` comes from a one-row ``VALUES`` relation joined onto
+    the union, not from ``F.lit``: Spark inlines a literal into the
+    generated Java, and its codegen cache is keyed on that source
+    text, so a literal made every micro-batch compile its ack stages
+    anew (three whole-stage classes through Janino, then the JIT). A
+    literal added once over the union does not help either: Catalyst
+    pushes the projection into each branch. The relation's value is
+    data, so the code is the same for every micro-batch. The join is a
+    cartesian product (``shuffle_replicate_nl``): the relation is one
+    row in one partition, which each task reads locally, where a
+    broadcast join adds a job per micro-batch to ship it. The union is
+    written at the query's width (``_union``).
+
     'retry' rows are executor-only signals, never acks: the log leaves
     them out, and the executor gets every row so per-message-ack
     brokers can fast-track redelivery (SQS ChangeMessageVisibility(0)).
@@ -194,7 +234,11 @@ def _write_acks(
     executor = config.ack_executor
     if config.ack_log is None and executor is None:
         return
-    acks = reduce(DataFrame.unionByName, parts)
+    acks = _union(parts)
+    # Unsuffixed, the value is typed as F.lit typed it (int below 2**31,
+    # bigint above), so the ack log's on-disk type does not change.
+    batch = acks.sparkSession.sql(f"VALUES ({int(batch_id)}) AS t(batch_id)")
+    acks = acks.crossJoin(batch.hint("shuffle_replicate_nl")).select(*ACK_COLS)
     if executor is not None:
         # two consumers (log + executor): one compute
         acks = acks.persist()
@@ -217,11 +261,28 @@ def _write_acks(
             acks.unpersist()
 
 
-def _make_batch_hook(batcher_name: str, hook, order_col: str):
+def _check_failed(out, want: int) -> None:
+    """All-messages contract: the reference raises if handle_failed
+    returns a different message set than it received
+    (acknowledger.ex:126-141 count check) — a hook that drops rows
+    would silently lose DLQ entries and their failed-acks."""
+    got = 0 if out is None else len(out)
+    if got != want:
+        raise RuntimeError(
+            "handle_failed must return exactly the messages it "
+            f"received: got {got}, want {want}"
+        )
+
+
+def _make_batch_hook(batcher_name: str, hook, order_col: str, handle_failed):
     """Wrap the user's handle_batch for applyInPandas (single-arg),
     presenting rows in processing order (Broadway delivers batches in
     arrival order per key) and enforcing the all-messages contract
-    (batch_processor_stage.ex:78-84)."""
+    (batch_processor_stage.ex:78-84). The rows the hook fails go
+    through ``handle_failed`` here, in the same task (Broadway runs it
+    inside the batch processor, batch_processor_stage.ex:52-127): a
+    separate pass would start a Python task per partition, empty ones
+    too."""
 
     def per_batch(pdf):
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
@@ -231,7 +292,14 @@ def _make_batch_hook(batcher_name: str, hook, order_col: str):
                 "handle_batch must return exactly the messages it "
                 f"received: got {len(out)}, want {len(pdf)}"
             )
-        return out
+        if handle_failed is None:
+            return out
+        failed = ~out["status"].map(lambda st: bool(st["ok"])).astype(bool)
+        if not failed.any():
+            return out
+        dead = handle_failed(out[failed].reset_index(drop=True))
+        _check_failed(dead, int(failed.sum()))
+        return pd.concat([out[~failed], dead], ignore_index=True)
 
     return per_batch
 
@@ -327,7 +395,7 @@ def build_router(
             failed = batch_df.filter(~F.col("status.ok"))
             ok = batch_df.filter(F.col("status.ok"))
 
-            # --- failed branch: handle_failed hook → DLQ → ack failed
+            # --- failed branch: handle_failed hook → DLQ + ack failed
             if config.handle_failed is not None:
                 with span(
                     rec,
@@ -345,19 +413,7 @@ def build_router(
                                 yield pdf
                                 continue
                             out = _hook(pdf)
-                            # All-messages contract: the reference
-                            # raises if handle_failed returns a
-                            # different message set than it received
-                            # (acknowledger.ex:126-141 count check) —
-                            # a hook that drops rows would silently
-                            # lose DLQ entries and their failed-acks.
-                            if out is None or len(out) != len(pdf):
-                                got = 0 if out is None else len(out)
-                                raise RuntimeError(
-                                    "handle_failed must return exactly "
-                                    "the messages it received: got "
-                                    f"{got}, want {len(pdf)}"
-                                )
+                            _check_failed(out, len(pdf))
                             yield out
 
                     # Arrow-batched, distributed — the hook never sees
@@ -377,8 +433,8 @@ def build_router(
             # like any failure (the reference runs handle_failed for
             # every failed message, acknowledger.ex:96-150); only their
             # ack differs.
-            _write_dlq(config, failed, batch_id)
-            ack_parts = [_acks(failed, batch_id)]
+            dlq_parts = [failed]
+            ack_parts = [_acks(failed)]
 
             if not config.batchers:
                 # Consumer mode (topology.ex:277-281): processors are
@@ -392,7 +448,7 @@ def build_router(
                         batch_id,
                         sink.idempotent,
                     )
-                ack_parts.append(_acks(ok, batch_id))
+                ack_parts.append(_acks(ok))
             else:
                 order_col = config.order_by
                 # Rows from the stateful batcher arrive already cut.
@@ -413,7 +469,10 @@ def build_router(
                             chunked = _chunk(chunked, bcfg.batch_size, order_col)
                         if config.handle_batch is not None:
                             per_batch = _make_batch_hook(
-                                name, config.handle_batch, order_col
+                                name,
+                                config.handle_batch,
+                                order_col,
+                                config.handle_failed,
                             )
                             # streamed runner: one Python entry per Arrow
                             # chunk instead of per (batch_key, chunk)
@@ -428,6 +487,7 @@ def build_router(
                             )
                             chunked = chunked.persist()
                             hook_cache.append(chunked)
+                            dlq_parts.append(chunked.filter(~F.col("status.ok")))
 
                     sink = config.sinks[name]
                     with span(
@@ -438,8 +498,9 @@ def build_router(
                         batch_id=batch_id,
                         messages=per_batcher.get(name, 0),
                     ):
-                        # Rows handle_batch failed are acked, not
-                        # written (batch_processor_stage.ex:52-127).
+                        # Rows handle_batch failed are acked and
+                        # dead-lettered, not written
+                        # (batch_processor_stage.ex:52-127).
                         _write(
                             chunked.filter(F.col("status.ok")).drop(*_STAGE_COLS),
                             sink.path,
@@ -447,8 +508,9 @@ def build_router(
                             batch_id,
                             sink.idempotent,
                         )
-                    ack_parts.append(_acks(chunked, batch_id))
+                    ack_parts.append(_acks(chunked))
 
+            _write_dlq(config, dlq_parts, batch_id)
             _write_acks(config, ack_parts, batch_id)
         finally:
             for cached in hook_cache:

@@ -8,15 +8,17 @@ vectorization contract.
 """
 
 import json
+import os
 import time
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from broadway_spark import message as M
 from broadway_spark.config import BatcherConfig, SinkConfig, TopologyConfig
 from broadway_spark.observe import Recorder, observed
 from broadway_spark.plans import Pipeline
-from broadway_spark.sources import SpoolSource
+from broadway_spark.sources import FileStreamSource, SpoolSource
 
 from .conftest import EVENTS_DDL, make_events
 
@@ -36,6 +38,22 @@ def _line(s):
     """The JSONL line ``Recorder`` writes for span ``s``, parsed."""
     record = {"event": s.event, **s.measurement, "metadata": s.metadata}
     return json.loads(json.dumps(record, default=str))
+
+
+def await_progress(rec, query, last_batch, timeout_s=60):
+    """``{batch_id: measurement}`` of ``query``'s progress events, once
+    one for ``last_batch`` or later arrived (they reach listeners
+    asynchronously) or ``timeout_s`` ran out."""
+    deadline = time.time() + timeout_s
+    while True:
+        got = {
+            e.metadata["batch_id"]: e.measurement
+            for e in rec.events("query:progress")
+            if e.metadata["query"] == query
+        }
+        if max(got, default=-1) >= last_batch or time.time() > deadline:
+            return got
+        time.sleep(0.2)
 
 
 def test_full_span_catalogue_emitted(spark, tmp_dirs):
@@ -335,3 +353,65 @@ def test_concurrent_emit_loses_nothing(tmp_path):
     assert len(got) == len(want) and set(got) == want
     lines = [json.loads(x) for x in path.read_text().splitlines()]
     assert lines == [_line(s) for s in rec.events()]
+
+
+def test_steady_micro_batches_compile_no_code(spark, tmp_dirs, tmp_path):
+    """Every micro-batch of ``start`` runs the same generated code: from
+    the third on, Spark's code generator compiles nothing. A batch_id
+    literal in the ack projection made each micro-batch compile its ack
+    stages again (about 6 classes per micro-batch)."""
+    inp = tmp_path / "input"
+    inp.mkdir()
+    for i in range(5):
+        path = inp / f"part-{i}.parquet"
+        pd.DataFrame(make_events(60, 60 * i)).to_parquet(path, index=False)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+
+    def handle_message(df):
+        return df.withColumn(
+            "status",
+            F.when(
+                F.col("event_type") == "error",
+                M.failed_status(F.lit("boom"), "proc"),
+            ).otherwise(F.col("status")),
+        )
+
+    rec = Recorder()
+    spark.streams.addListener(rec)
+    try:
+        cfg = TopologyConfig(
+            name="codegen-steady",
+            handle_message=handle_message,
+            route_by=F.when(F.col("event_type") == "purchase", F.lit("billing")),
+            batch_key_by=F.col("user_id"),
+            order_by="event_id",
+            batchers={
+                "billing": BatcherConfig(batch_size=7),
+                "default": BatcherConfig(batch_size=16),
+            },
+            sinks={
+                "billing": SinkConfig(path=tmp_dirs["sink"]),
+                "default": SinkConfig(path=tmp_dirs["sink2"]),
+            },
+            dlq=SinkConfig(path=tmp_dirs["dlq"]),
+            ack_log=SinkConfig(path=tmp_dirs["ack"]),
+            checkpoint_dir=tmp_dirs["ckpt"],
+            handle_batch=lambda name, pdf: pdf,
+            handle_failed=lambda pdf: pdf,
+            telemetry=rec,
+            state_partitions=2,
+        )
+        src = FileStreamSource("events", str(inp), EVENTS_DDL, max_files_per_trigger=1)
+        Pipeline(cfg, src).run_to_completion(spark)
+        progress = await_progress(rec, "codegen-steady", 4)
+    finally:
+        spark.streams.removeListener(rec)
+
+    assert sorted(progress) == [0, 1, 2, 3, 4]
+    assert {b: m["codegen_compiles"] for b, m in progress.items() if b >= 2} == {
+        2: 0,
+        3: 0,
+        4: 0,
+    }
+    assert all(m["state_operators"] == [] for m in progress.values())
+    assert spark.read.parquet(tmp_dirs["ack"]).count() == 300

@@ -142,8 +142,9 @@ def test_handle_batch_runs_per_group(spark, tmp_dirs):
 
 def test_rows_handle_batch_fails_are_acked_failed_not_written(spark, tmp_dirs):
     """handle_batch's output splits by status (batch_processor_stage.ex
-    :52-127): the rows it fails are acked 'failed' with its reason and
-    stay out of the batcher's sink."""
+    :52-127): the rows it fails go through handle_failed in the batch
+    processor, then to the DLQ, and are acked 'failed' with the reason
+    handle_failed left; they stay out of the batcher's sink."""
 
     def hook(name, pdf):
         status = [
@@ -154,21 +155,39 @@ def test_rows_handle_batch_fails_are_acked_failed_not_written(spark, tmp_dirs):
         ]
         return pdf.assign(status=status)
 
+    def dead_letter(pdf):
+        status = [
+            {"ok": s["ok"], "reason": f"dead:{s['reason']}", "stage": s["stage"]}
+            for s in pdf["status"]
+        ]
+        return pdf.assign(status=status)
+
     src = _mk_source(tmp_dirs, n=200)
-    pipe = Pipeline(_routed_config(tmp_dirs, handle_batch=hook), src)
-    pipe.run_to_completion(spark)
+    cfg = _routed_config(tmp_dirs, handle_batch=hook, handle_failed=dead_letter)
+    Pipeline(cfg, src).run_to_completion(spark)
 
     # purchases (billing) are ids 2, 7, 12, ...: the hook fails 2, 12, ...
     rejected = set(range(2, 200, 10))
     ack = spark.read.parquet(tmp_dirs["ack"])
     assert ack.count() == 200
-    failed = ack.filter(F.col("reason") == "batch-reject")
+    failed = ack.filter(F.col("reason") == "dead:batch-reject")
     assert {int(r["ack_data"]) for r in failed.collect()} == rejected
     assert {(r["outcome"], r["batcher"]) for r in failed.collect()} == {
         ("failed", "billing")
     }
     billing = {r[0] for r in spark.read.parquet(tmp_dirs["sink"]).select("event_id").collect()}
     assert billing == set(range(7, 200, 10))
+    dlq = spark.read.parquet(tmp_dirs["dlq"])
+    rows = dlq.select("event_id", "status.reason", "dlq_disposition").collect()
+    in_dlq = {r["event_id"]: (r["reason"], r["dlq_disposition"]) for r in rows}
+    assert len(in_dlq) == len(rows)  # one DLQ row per message
+    assert {i: in_dlq[i] for i in rejected} == {
+        i: ("dead:batch-reject", "terminal") for i in rejected
+    }
+    # the processor's failures (error events) share the one DLQ write
+    poison = set(range(3, 200, 5))
+    assert set(in_dlq) == rejected | poison
+    assert {in_dlq[i] for i in poison} == {("dead:poison:error-event", "terminal")}
 
 
 def test_unknown_batcher_diverted(spark, tmp_dirs):

@@ -2,6 +2,7 @@
 pipeline's query on both start paths, and results do not depend on it.
 """
 
+import glob
 import json
 import os
 import re
@@ -150,7 +151,9 @@ def _two_file_drain(spark, tmp_path, width: int) -> dict:
         df = spark.read.parquet(path)
         return df.columns, sorted((tuple(r) for r in df.collect()), key=repr)
 
-    return {k: rows(d[k]) for k in ("ack", "billing", "default", "dlq")}
+    out = {k: rows(d[k]) for k in ("ack", "billing", "default", "dlq")}
+    out["ack_files"] = len(glob.glob(os.path.join(d["ack"], "**", "part-*"), recursive=True))
+    return out
 
 
 def test_results_do_not_depend_on_width(spark, tmp_path):
@@ -166,6 +169,11 @@ def test_results_do_not_depend_on_width(spark, tmp_path):
     for k in ("billing", "default", "dlq"):
         assert narrow[k] == wide[k], k
     assert len(narrow["dlq"][1]) == 90
+    # the ack log is written at the query's width: at most one file per
+    # task, and at most `width` tasks per micro-batch, however many
+    # branches (failed, billing, default) the ack union has
+    assert 0 < narrow["ack_files"] <= 2 * 1
+    assert 0 < wide["ack_files"] <= 2 * 7
 
 
 def test_partition_by_shuffle_runs_at_state_partitions(spark, tmp_dirs):

@@ -14,6 +14,7 @@ from broadway_spark.config import (
     SinkConfig,
     TopologyConfig,
 )
+from broadway_spark.observe import Recorder
 from broadway_spark.plans import Pipeline
 from broadway_spark.sources import SpoolSource
 
@@ -208,7 +209,11 @@ def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
     re-armed by later arrivals (batcher_stage.ex:80-89, 240-256): one
     key fed one message per 300 ms trigger with a 1000 ms timeout must
     flush by 'timeout' while the feed is still running, not only once
-    it stops."""
+    it stops. Its micro-batches run the same generated code: from the
+    third on, Spark's code generator compiles nothing, and each progress
+    event reports the batcher's state operator."""
+    from .test_observe import await_progress
+
     n = 8
     src = SpoolSource(
         name="spool",
@@ -218,6 +223,7 @@ def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
         allowed_per_trigger=1,
     )
     src.push_messages(make_events(n), "000.jsonl")
+    rec = Recorder()
     cfg = TopologyConfig(
         name="stateful-deadline",
         order_by="event_id",
@@ -226,12 +232,31 @@ def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
         ack_log=SinkConfig(path=tmp_dirs["ack"]),
         checkpoint_dir=tmp_dirs["ckpt"],
         state_partitions=1,  # one key
+        telemetry=rec,
     )
-    q = Pipeline(cfg, src).start_stateful(spark, processing_time="300 milliseconds")
+    spark.streams.addListener(rec)
     try:
-        assert _wait_for_acks(spark, tmp_dirs["ack"], n), "drain incomplete"
+        q = Pipeline(cfg, src).start_stateful(spark, processing_time="300 milliseconds")
+        try:
+            # Wait on the recorder, not by reading the ack log: a read
+            # would compile code in the same JVM while batches run.
+            deadline = time.time() + 240
+            while time.time() < deadline:
+                stops = rec.events("processor:stop")
+                if sum(s.metadata["messages"] for s in stops) >= n:
+                    break
+                time.sleep(0.3)
+            last = max(
+                (s.metadata["batch_id"] for s in stops if s.metadata["messages"]),
+                default=None,
+            )
+            assert last is not None, "drain incomplete"
+            # the progress event follows the batch's ack write
+            progress = await_progress(rec, "stateful-deadline-stateful", max(last, 4))
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        spark.streams.removeListener(rec)
 
     ack = spark.read.parquet(tmp_dirs["ack"])
     assert ack.count() == n
@@ -244,6 +269,24 @@ def test_timer_starts_at_first_buffered_message(spark, tmp_dirs):
     # message per micro-batch); a timer re-armed on every arrival
     # would hold all n until the feed stops and flush them together.
     assert flushed_in[0] < flushed_in[n - 1]
+
+    # Batches 0..n-1 each read one message. The first batch with no new
+    # input plans an empty relation in place of the source scan and so
+    # compiles its own classes, once; listener callbacks run
+    # asynchronously, so that count can land on the event before it.
+    compiles = {
+        b: m["codegen_compiles"] for b, m in progress.items() if 2 <= b <= n - 2
+    }
+    assert compiles == dict.fromkeys(range(2, n - 1), 0), compiles
+    ops = [m["state_operators"] for m in progress.values()]
+    assert all(len(o) == 1 for o in ops)
+    assert set(ops[-1][0]) == {
+        "operator",
+        "num_rows_total",
+        "num_rows_updated",
+        "memory_used_bytes",
+        "commit_time_ms",
+    }
 
 
 def test_both_start_paths_write_one_layout(spark, tmp_path):
