@@ -219,14 +219,16 @@ class Pipeline:
         per-key timeout timers (``streaming/stateful_batcher.py``,
         ``applyInPandasWithState``) — the faithful B2/B3 semantics.
 
-        The stateful stage cuts the ok rows into batches; its output
-        then runs through the same router as ``start()``, which sees
-        the ``trigger_``/``batch_size_`` labels and does not re-cut.
-        So ``handle_failed``, the DLQ, the sinks, the ack log and the
-        spans are the same on both paths. Requires integer batch sizes
-        and no ``handle_batch``: the stage emits no chunk ids for it to
-        group by. A checkpoint from before the ``(buffer, deadline_ms)``
-        state schema cannot be resumed.
+        The stateful stage cuts the ok rows into batches and labels
+        each with its ``chunk_id``, ``trigger_`` and ``batch_size_``;
+        its output then runs through the same router as ``start()``,
+        which does not re-cut and runs ``handle_batch`` once per
+        emitted batch. With no batchers (consumer mode) there is no
+        stage and the router acks in place, as on ``start()``. So the
+        hooks, the DLQ, the sinks, the ack log and the spans are the
+        same on both paths; only the batch timer differs. Requires
+        integer batch sizes. A checkpoint from before the
+        ``(buffer, deadline_ms)`` state schema cannot be resumed.
         """
         cfg = self.config
         for name, b in cfg.batchers.items():
@@ -235,11 +237,6 @@ class Pipeline:
                     f"stateful batching requires integer batch_size "
                     f"(batcher {name!r})"
                 )
-        if cfg.handle_batch is not None:
-            raise ConfigError(
-                "stateful batching does not call handle_batch; unset it "
-                "or use start()"
-            )
 
         def stage(stream: DataFrame) -> DataFrame:
             return stateful_batch_stream(
@@ -252,16 +249,25 @@ class Pipeline:
             )
 
         return self._start(
-            spark, f"{cfg.name}-stateful", stage, processingTime=processing_time
+            spark,
+            f"{cfg.name}-stateful",
+            stage if cfg.batchers else None,
+            processingTime=processing_time,
         )
 
     def run_to_completion(self, spark: SparkSession, timeout_s: int = 300) -> None:
         """Drain everything currently available, then stop — the
         graceful-drain analogue (``terminator.ex:41-59``): every
-        in-flight message is processed and acked before return."""
+        in-flight message is processed and acked before return. A
+        drain still running after ``timeout_s`` is stopped and raises
+        ``TimeoutError``: its acks are partial."""
         q = self.start(spark, trigger="availableNow")
         try:
-            q.awaitTermination(timeout_s)
+            done = q.awaitTermination(timeout_s)
         finally:
             if q.isActive:
                 q.stop()
+        if not done:
+            raise TimeoutError(
+                f"pipeline {self.config.name!r} did not drain in {timeout_s} s"
+            )

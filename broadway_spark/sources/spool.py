@@ -58,17 +58,20 @@ def _data_files(path: str) -> list[str]:
     return [os.path.join(path, f) for f in names]
 
 
-def _snapshot_files(path: str) -> list[tuple[str, int]]:
-    """Point-in-time (file, non-blank-row-count) snapshot of the spool.
-    Planning embeds this snapshot into every partition so executors
-    never re-list the directory: a file pushed concurrently whose name
-    sorts before existing files (or an append to an existing file)
-    cannot shift global row indices between planning and execution."""
-    snap = []
-    for f in _data_files(path):
-        with open(f, "rb") as fh:
-            snap.append((f, sum(1 for line in fh if line.strip())))
-    return snap
+def _rate_limit(path: str, fallback: int | None) -> int | None:
+    """The admission cap in the spool's rate-control file (F3:
+    Broadway.update_rate_limiting/2, broadway.ex:1447-1523), the one
+    parser behind both the reader's admission and
+    ``SpoolSource.get_rate_limiting``. An explicit null means
+    unlimited. A missing, torn (despite the atomic rename) or invalid
+    file (non-integer; non-positive, since the reference types the cap
+    as pos_integer) yields ``fallback``, the constructor rate."""
+    try:
+        with open(os.path.join(path, RATE_CONTROL_FILE)) as fh:
+            v = json.load(fh).get("allowed_per_trigger")
+        return _parse_pos_int(v, "allowed_per_trigger")
+    except (FileNotFoundError, ValueError, TypeError, json.JSONDecodeError):
+        return fallback
 
 
 class _RowCountCache:
@@ -162,20 +165,16 @@ class _SpoolStreamReader(DataSourceStreamReader):
         self.num_partitions = int(options.get("num_partitions", 4))
         self.fields = [f.name for f in schema.fields]
         self.schema = schema
-        # Arrow fast path (r10 verdict item 5 — the 0.7 s/micro-batch
-        # Python-source floor): read() may yield pyarrow RecordBatches
-        # instead of per-row tuples, replacing per-row pickle+convert
-        # with one Arrow IPC block per chunk. Gated to schemas of
+        # Arrow fast path: read() yields pyarrow RecordBatches instead
+        # of per-row tuples, replacing per-row pickle+convert with one
+        # Arrow IPC block per chunk. Gated to schemas of
         # exact-representation primitives — timestamp/date keep the
         # row path (naive-datetime↔tz-aware Arrow conversion is the
-        # one place the two paths could disagree), and `arrow=false`
-        # forces rows for A/B measurement.
+        # one place the two paths could disagree).
         _SAFE_ARROW = {"long", "bigint", "int", "integer", "smallint",
                        "tinyint", "double", "float", "string", "boolean"}
         self._arrow_schema = None
-        if str(options.get("arrow", "true")).lower() != "false" and all(
-            f.dataType.simpleString() in _SAFE_ARROW for f in schema.fields
-        ):
+        if all(f.dataType.simpleString() in _SAFE_ARROW for f in schema.fields):
             try:
                 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -230,7 +229,7 @@ class _SpoolStreamReader(DataSourceStreamReader):
             skip_to = total - self.max_backlog
             self._record_discard(prev, skip_to)
             prev = skip_to
-        allowed = self._current_allowed()
+        allowed = _rate_limit(self.path, self.allowed)
         nxt = min(total, prev + allowed) if allowed else total
         self._last_end = nxt
         return {"row": nxt}
@@ -254,21 +253,6 @@ class _SpoolStreamReader(DataSourceStreamReader):
             from_row,
             to_row,
         )
-
-    def _current_allowed(self) -> int | None:
-        # Error handling mirrors get_rate_limiting exactly: any
-        # unreadable/invalid control file (missing, torn despite the
-        # atomic rename, non-integer, non-positive) falls back to the
-        # constructor rate. An explicit null means unlimited; 0 is
-        # INVALID (reference pos_integer) and update_rate_limiting
-        # refuses to write it.
-        ctrl = os.path.join(self.path, RATE_CONTROL_FILE)
-        try:
-            with open(ctrl) as fh:
-                v = json.load(fh).get("allowed_per_trigger")
-            return _parse_pos_int(v, "allowed_per_trigger")
-        except (FileNotFoundError, ValueError, TypeError, json.JSONDecodeError):
-            return self.allowed
 
     def partitions(self, start: dict, end: dict):
         # S4 (producer concurrency): split the admitted row range into
@@ -373,7 +357,7 @@ class _SpoolBatchReader(DataSourceReader):
         # One snapshot defines BOTH the total row count and the exact
         # file list every partition reads — planning and execution see
         # the same spool even if files land concurrently.
-        snap = _snapshot_files(self.path)
+        snap = _RowCountCache().snapshot(self.path)
         return self._stream._split(snap, 0, sum(n for _, n in snap))
 
     def read(self, partition: _SpoolPartition):
@@ -390,7 +374,7 @@ class _SpoolSimpleStreamReader(SimpleDataSourceStreamReader):
     - SimpleDataSourceStreamReader floor, same source: ~0.35-0.40
       s/batch — the read happens ON THE DRIVER during planning, so
       the executor task round disappears;
-    - Arrow-batch emission from read() (kept, gated by ``arrow``):
+    - Arrow-batch emission from read() (kept, gated by the schema):
       ≤10% at gate batch sizes — the floor is micro-batch MACHINERY,
       not row serialization (measured up to 200k rows/batch where
       JSON decode dominates both paths equally).
@@ -539,16 +523,10 @@ class SpoolSource:
         os.rename(tmp, target)
 
     def get_rate_limiting(self) -> int | None:
-        """F3: Broadway.get_rate_limiting/1. Error handling matches the
-        reader's ``_current_allowed`` exactly — a missing, torn, or
-        invalid (non-integer / non-positive) control file reports the
-        constructor rate, the same value the reader would admit at."""
-        try:
-            with open(os.path.join(self.path, RATE_CONTROL_FILE)) as fh:
-                v = json.load(fh).get("allowed_per_trigger")
-            return _parse_pos_int(v, "allowed_per_trigger")
-        except (FileNotFoundError, ValueError, TypeError, json.JSONDecodeError):
-            return self.allowed_per_trigger
+        """F3: Broadway.get_rate_limiting/1 — the rate the reader
+        admits at, read by the reader's own parser: a missing, torn or
+        invalid control file reports the constructor rate."""
+        return _rate_limit(self.path, self.allowed_per_trigger)
 
     def push_messages(self, records: list[dict], filename: str) -> None:
         """Broadway.push_messages/2 — append out-of-band messages."""

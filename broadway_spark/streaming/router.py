@@ -13,11 +13,12 @@ whose ok rows are already cut into batches. Per micro-batch:
    ``acknowledger.ex:96-150``)
 3. ok rows, per batcher: chunk per batch_key by size or weight budget
    (``batcher_stage.ex:108-221``) unless the rows already carry the
-   stateful batcher's ``trigger_``/``batch_size_`` labels, run
-   ``handle_batch`` as ``applyInPandas`` over (batch_key, chunk) groups
-   (``batch_processor_stage.ex:52-127``), and in the same task run
-   ``handle_failed`` on the rows it failed; write the rows it left ok
-   to the batcher's sink
+   stateful batcher's ``chunk_id``/``trigger_``/``batch_size_``
+   labels, then, on both paths alike, run ``handle_batch`` as
+   ``applyInPandas`` over (batch_key, chunk_id) groups, one call per
+   batch whichever stage cut it (``batch_processor_stage.ex:52-127``),
+   and in the same task run ``handle_failed`` on the rows it failed;
+   write the rows it left ok to the batcher's sink
 4. write the failed rows of steps 2 and 3 to the DLQ in one write
 5. project each written frame (the failed one, each batcher's) to one
    ack row per message and append them to the ack log — the bulk-ack
@@ -451,8 +452,9 @@ def build_router(
                 ack_parts.append(_acks(ok))
             else:
                 order_col = config.order_by
-                # Rows from the stateful batcher arrive already cut.
-                cut = "trigger_" in batch_df.columns
+                # Rows from the stateful batcher arrive already cut,
+                # with the same chunk labels _chunk adds.
+                cut = "chunk_id" in batch_df.columns
                 for name, bcfg in config.batchers.items():
                     # batcher stage = grouping/annotation; batch_processor
                     # = the sink write, where handle_batch executes.

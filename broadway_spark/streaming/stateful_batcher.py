@@ -16,8 +16,13 @@ Implemented with ``applyInPandasWithState`` + ProcessingTimeTimeout:
 one key-group = one task = serial per-key processing, which is exactly
 Broadway's one-batcher-process-per-key guarantee. The stage consumes
 and emits the Message envelope unchanged (``status``/``ack`` structs,
-``metadata`` map), plus the router's ``trigger_``/``batch_size_``
-columns, so both start paths write one sink, DLQ and ack-log layout.
+``metadata`` map), plus the router's chunk labels ``trigger_``,
+``batch_size_`` and ``chunk_id``: the batch's index among those its
+key emits in one call. A key gets one call per micro-batch, so
+``(batcher, batch_key, chunk_id)`` names one batch and the router runs
+``handle_batch`` on it as on a chunk it cut itself. Both start paths
+thus write one layout and call the same hooks. Consumer mode (no
+batchers) runs no stage (``topology.ex:277-281``).
 
 State, one row per key: ``(buffer binary, deadline_ms long)``.
 ``buffer`` holds the buffered rows as one Arrow IPC stream in the
@@ -48,6 +53,7 @@ batchers, ``processor_stage.ex:78-95``).
 
 from __future__ import annotations
 
+from itertools import count
 from typing import Any, Iterator
 
 import pandas as pd
@@ -57,7 +63,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # Columns the stage adds to the envelope: the router's chunk labels.
-BATCH_OUT_SUFFIX = "trigger_ string, batch_size_ int"
+BATCH_OUT_SUFFIX = "chunk_id long, trigger_ string, batch_size_ int"
 
 
 def stateful_batch_stream(
@@ -65,14 +71,13 @@ def stateful_batch_stream(
     batch_sizes: dict[str, int],
     batch_timeouts_ms: dict[str, int],
     order_by: str,
-    default_batch_size: int = 100,
-    default_timeout_ms: int = 1000,
 ) -> DataFrame:
     """enveloped (streaming) → stream of batch-annotated rows.
 
     ``batch_sizes`` / ``batch_timeouts_ms`` are per-batcher (the group
     key's first element), mirroring per-batcher config
-    (options.ex:200-290). Output = input + (trigger_, batch_size_).
+    (options.ex:200-290). Output = input + (chunk_id, trigger_,
+    batch_size_).
     """
     out_schema = (
         ", ".join(
@@ -95,25 +100,21 @@ def stateful_batch_stream(
         table = pa.ipc.open_stream(raw).read_all()
         return table.to_pandas(maps_as_pydicts="strict")
 
-    def batch(rows: pd.DataFrame, trigger: str, size: int) -> pd.DataFrame:
-        return rows.assign(trigger_=trigger, batch_size_=size)
-
     def assemble(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        batcher_name = key[0]
-        batch_size = batch_sizes.get(batcher_name, default_batch_size)
-        batch_timeout_ms = batch_timeouts_ms.get(batcher_name, default_timeout_ms)
-        now = state.getCurrentProcessingTimeMs()
-        if state.exists:
-            raw, deadline = state.get
-            buffer = decode(raw)
-        else:
-            buffer, deadline = None, now + batch_timeout_ms
+        chunk_ids = count()
 
+        def batch(rows: pd.DataFrame, trigger: str, size: int) -> pd.DataFrame:
+            return rows.assign(
+                chunk_id=next(chunk_ids), trigger_=trigger, batch_size_=size
+            )
+
+        now = state.getCurrentProcessingTimeMs()
         if state.hasTimedOut:
             # Timer fired with no new input: flush the partial batch
             # (batcher_stage.ex:80-89).
+            buffer = decode(state.get[0])
             state.remove()
             yield batch(buffer, "timeout", len(buffer))
             return
@@ -121,16 +122,24 @@ def stateful_batch_stream(
         new = pd.concat(list(pdfs), ignore_index=True)
         new = new.sort_values(order_by).reset_index(drop=True)
 
-        # Failed rows pass through immediately, never buffered.
+        # Failed rows pass through immediately, never buffered. A key
+        # of an unknown batcher ('invalid') carries only these.
         is_ok = new["status"].map(lambda s: s["ok"]).astype(bool)
         failed = new[~is_ok]
         if len(failed):
             yield batch(failed, "flush", len(failed))
         ok = new[is_ok]
+        if not len(ok) and not state.exists:
+            return
+        batch_size = batch_sizes[key[0]]
+        batch_timeout_ms = batch_timeouts_ms[key[0]]
         flush_all = (ok["batch_mode"] == "flush").any()
+        if state.exists:
+            raw, deadline = state.get
+            ok = pd.concat([decode(raw), ok], ignore_index=True)
+        else:
+            deadline = now + batch_timeout_ms
         expired = now >= deadline
-        if buffer is not None:
-            ok = pd.concat([buffer, ok], ignore_index=True)
 
         cut = 0
         while len(ok) - cut >= batch_size:

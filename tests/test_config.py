@@ -176,3 +176,55 @@ def test_every_config_field_is_read_outside_validation():
         if (c, name) not in read
     )
     assert not unread, f"config fields no code path reads: {unread}"
+
+
+def test_every_reader_option_is_set_by_a_handle():
+    """No reader option silently does nothing: every key a data source
+    reader under ``broadway_spark/sources/`` reads from its options
+    (``options[k]`` / ``options.get(k)``) is passed by library code,
+    as a literal ``.option("k", ...)`` or as a ``stream_options``
+    entry of a source handle."""
+    import ast
+    import pathlib
+
+    import broadway_spark
+
+    def options_recv(node):
+        return (isinstance(node, ast.Name) and node.id == "options") or (
+            isinstance(node, ast.Attribute) and node.attr == "options"
+        )
+
+    def literal(node):
+        return node.value if isinstance(node, ast.Constant) else None
+
+    root = pathlib.Path(broadway_spark.__file__).parent
+    read, passed = set(), set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        in_sources = path.parent.name == "sources"
+        for n in ast.walk(tree):
+            if in_sources and isinstance(n, ast.Subscript) and options_recv(n.value):
+                read.add((literal(n.slice), path.name))
+            elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                if (
+                    in_sources
+                    and n.func.attr == "get"
+                    and options_recv(n.func.value)
+                    and n.args
+                ):
+                    read.add((literal(n.args[0]), path.name))
+                elif n.func.attr == "option" and n.args:
+                    passed.add(literal(n.args[0]))
+            elif isinstance(n, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "stream_options"
+                for t in n.targets
+            ):
+                passed.update(literal(e) for e in n.value.elts)
+
+    # A key built at run time (``.option(k, v)``) names no option.
+    passed.discard(None)
+    assert {"path", "schema_ddl", "max_backlog"} <= {k for k, _ in read}
+    unset = sorted(
+        f"{where}: {key!r}" for key, where in read if key not in passed
+    )
+    assert not unset, f"reader options no handle sets: {unset}"

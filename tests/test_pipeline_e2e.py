@@ -265,6 +265,23 @@ def test_consumer_mode_no_batchers(spark, tmp_dirs):
     assert ok_sink.count() == 96  # 24 poison diverted
 
 
+def test_run_to_completion_raises_when_the_drain_times_out(spark, tmp_dirs):
+    """A drain that outlasts ``timeout_s`` is stopped and raises
+    ``TimeoutError``: returning normally would hand back partial acks
+    as a completed drain."""
+    import time
+
+    def slow(name, pdf):
+        time.sleep(5)
+        return pdf
+
+    src = _mk_source(tmp_dirs, n=20)
+    cfg = _routed_config(tmp_dirs, name="e2e-timeout", handle_batch=slow)
+    with pytest.raises(TimeoutError, match="e2e-timeout"):
+        Pipeline(cfg, src).run_to_completion(spark, timeout_s=1)
+    assert not [q for q in spark.streams.active if q.name == "e2e-timeout"]
+
+
 def test_streaming_equals_batch(spark, tmp_dirs):
     """SURVEY §5(c): the streamed result must equal the batch run of the
     same transforms on the same data."""

@@ -5,9 +5,9 @@
    partition planning and executor read must not shift, duplicate,
    or drop rows of the planned batch.
 2. Rate-limit plumbing: 0 is rejected everywhere (reference
-   pos_integer), and get_rate_limiting's error handling matches the
-   reader's _current_allowed (corrupt/invalid file → constructor
-   rate).
+   pos_integer), and get_rate_limiting and the reader's admission read
+   the control file through one parser (corrupt/invalid file →
+   constructor rate).
 3. publish_bucketed_pair garbage-collects the superseded manifest
    version after a successful publish (catalog + data paths), and
    never before the atomic rename.
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from broadway_spark.operators import layout as LY
 from broadway_spark.sources import SpoolSource
 from broadway_spark.sources.spool import (
+    _rate_limit,
     _SpoolBatchReader,
     _SpoolStreamReader,
 )
@@ -95,7 +96,9 @@ def test_rate_limit_zero_rejected_and_fallbacks_aligned(spark, tmp_path):
     constructed with allowed_per_trigger=0 raises, and BOTH readers of
     the control file fall back to the constructor rate on a corrupt or
     non-positive on-disk value (previously get_rate_limiting crashed on
-    corrupt JSON while _current_allowed silently fell back)."""
+    corrupt JSON while the reader silently fell back). Both read it
+    through ``_rate_limit``, the reader with its own constructor
+    rate."""
     spool = str(tmp_path / "spool")
     src = SpoolSource(
         name="s",
@@ -122,16 +125,16 @@ def test_rate_limit_zero_rejected_and_fallbacks_aligned(spark, tmp_path):
     for bad in ['{"allowed_per_trigger": 0}', "{torn", '{"allowed_per_trigger": "x"}']:
         with open(ctrl, "w") as fh:
             fh.write(bad)
-        assert reader._current_allowed() == 10, bad
+        assert _rate_limit(spool, reader.allowed) == 10, bad
         assert src.get_rate_limiting() == 10, bad
 
     # a valid update still round-trips; explicit null means unlimited
     src.update_rate_limiting(25)
     assert src.get_rate_limiting() == 25
-    assert reader._current_allowed() == 25
+    assert _rate_limit(spool, reader.allowed) == 25
     src.update_rate_limiting(None)
     assert src.get_rate_limiting() is None
-    assert reader._current_allowed() is None
+    assert _rate_limit(spool, reader.allowed) is None
 
 
 def test_publish_bucketed_pair_gcs_previous_version(spark, tmp_path):

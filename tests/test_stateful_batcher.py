@@ -2,6 +2,8 @@
 timers (reference ``batcher_stage.ex`` semantics; SURVEY §2.4 B1-B4).
 """
 
+import json
+import os
 import time
 
 import pytest
@@ -10,7 +12,6 @@ from pyspark.sql import functions as F
 from broadway_spark import message as M
 from broadway_spark.config import (
     BatcherConfig,
-    ConfigError,
     SinkConfig,
     TopologyConfig,
 )
@@ -31,6 +32,21 @@ def _wait_for_acks(spark, path, want, timeout_s=240):
             pass
         time.sleep(1)
     return False
+
+
+def _drain(spark, pipe, path, ack_path, want):
+    """Drain ``pipe`` on start path ``path``: ``start`` runs to
+    completion; ``start_stateful`` runs until ``want`` acks are logged,
+    then settles so that no further ack may appear unseen."""
+    if path == "start":
+        pipe.run_to_completion(spark, timeout_s=120)
+        return
+    q = pipe.start_stateful(spark, processing_time="300 milliseconds")
+    try:
+        assert _wait_for_acks(spark, ack_path, want), "drain incomplete"
+        time.sleep(2)
+    finally:
+        q.stop()
 
 
 def test_cross_batch_assembly_and_timeout(spark, tmp_dirs):
@@ -330,16 +346,7 @@ def test_both_start_paths_write_one_layout(spark, tmp_path):
             checkpoint_dir=d["ckpt"],
             state_partitions=2,
         )
-        pipe = Pipeline(cfg, src)
-        if path == "start":
-            pipe.run_to_completion(spark, timeout_s=120)
-        else:
-            q = pipe.start_stateful(spark, processing_time="300 milliseconds")
-            try:
-                assert _wait_for_acks(spark, d["ack"], 18), "drain incomplete"
-                time.sleep(2)  # settle: no further acks may appear
-            finally:
-                q.stop()
+        _drain(spark, Pipeline(cfg, src), path, d["ack"], 18)
         layouts[path] = tuple(
             set(spark.read.parquet(d[k]).columns) for k in ("sink", "dlq", "ack")
         )
@@ -432,27 +439,147 @@ def test_ack_executor_gets_retry_rows_the_ack_log_leaves_out(spark, tmp_dirs):
     assert spark.conf.get(provider_key) == provider_before
 
 
-@pytest.mark.parametrize("hook", ["handle_batch"])
-def test_start_stateful_rejects_hooks_it_does_not_call(spark, tmp_dirs, hook):
-    """The stateful stage emits no chunk ids, so start_stateful cannot
-    call handle_batch: setting it is a config error, not a silent
-    no-op."""
-    cfg = TopologyConfig(
-        name="stateful-hooks",
-        batchers={"default": BatcherConfig(batch_size=5)},
-        sinks={"default": SinkConfig(path=tmp_dirs["sink"])},
-        checkpoint_dir=tmp_dirs["ckpt"],
-        **{hook: lambda name, pdf: pdf},
+def test_both_start_paths_run_handle_batch_alike(spark, tmp_path):
+    """Both start paths call handle_batch once per batch and give its
+    failures the same handling (batch_processor_stage.ex:52-127): the
+    same sink ids, DLQ (id, reason) rows and (batcher, outcome, reason)
+    ack counts, with handle_failed rewriting the reasons of the rows
+    the hook fails and of the rows routed to an unknown batcher. On
+    start_stateful each hook call holds exactly one batch the stateful
+    stage emitted: one trigger, as many rows as its batch size, and no
+    message in two calls."""
+
+    def recording(calls_dir):
+        """A handle_batch that fails the multiples of 7 and records
+        each call's messages, triggers and batch sizes in
+        ``calls_dir``, one file per call."""
+
+        def handle_batch(name, pdf):
+            import json
+            import uuid
+
+            record = {
+                "ids": sorted(a["ack_data"] for a in pdf["ack"]),
+                "triggers": sorted(set(pdf["trigger_"])),
+                "sizes": sorted({int(n) for n in pdf["batch_size_"]}),
+            }
+            with open(f"{calls_dir}/{uuid.uuid4().hex}.json", "w") as fh:
+                json.dump(record, fh)
+            status = [
+                {"ok": False, "reason": "rejected", "stage": "batch"}
+                if i % 7 == 0
+                else s
+                for i, s in zip(pdf["event_id"], pdf["status"])
+            ]
+            return pdf.assign(status=status)
+
+        return handle_batch
+
+    def handle_failed(pdf):
+        status = [
+            {"ok": s["ok"], "reason": f"handled:{s['reason']}", "stage": s["stage"]}
+            for s in pdf["status"]
+        ]
+        return pdf.assign(status=status)
+
+    # 40 events: ids ending in 9 route to an unknown batcher (4 rows),
+    # the hook fails the multiples of 7 (6 rows), 30 stay ok.
+    sink_ids, dlq_rows, outcomes, calls = {}, {}, {}, {}
+    for path in ("start", "start_stateful"):
+        d = {
+            k: str(tmp_path / path / k)
+            for k in ("spool", "sink", "dlq", "ack", "ckpt", "calls")
+        }
+        os.makedirs(d["calls"])
+        src = SpoolSource(
+            name="spool", path=d["spool"], schema_ddl=EVENTS_DDL,
+            ack_data_column="event_id",
+        )
+        src.push_messages(make_events(40), "000.jsonl")
+        cfg = TopologyConfig(
+            name=f"hooks-{path}",
+            order_by="event_id",
+            route_by=F.when(F.col("event_id") % 10 == 9, F.lit("nowhere")),
+            handle_batch=recording(d["calls"]),
+            handle_failed=handle_failed,
+            batchers={"default": BatcherConfig(batch_size=5, batch_timeout_ms=500)},
+            sinks={"default": SinkConfig(path=d["sink"])},
+            dlq=SinkConfig(path=d["dlq"]),
+            ack_log=SinkConfig(path=d["ack"]),
+            checkpoint_dir=d["ckpt"],
+            state_partitions=2,
+        )
+        _drain(spark, Pipeline(cfg, src), path, d["ack"], 40)
+        sink_ids[path] = sorted(
+            r[0] for r in spark.read.parquet(d["sink"]).select("event_id").collect()
+        )
+        dlq_rows[path] = sorted(
+            tuple(r)
+            for r in spark.read.parquet(d["dlq"])
+            .select("event_id", "status.reason")
+            .collect()
+        )
+        outcomes[path] = {
+            (r["batcher"], r["outcome"], r["reason"]): r["count"]
+            for r in spark.read.parquet(d["ack"])
+            .groupBy("batcher", "outcome", "reason")
+            .count()
+            .collect()
+        }
+        calls[path] = [
+            json.loads(open(os.path.join(d["calls"], f)).read())
+            for f in os.listdir(d["calls"])
+        ]
+
+    rejected = list(range(0, 40, 7))
+    unrouted = [9, 19, 29, 39]
+    assert sink_ids["start"] == sorted(set(range(40)) - set(rejected) - set(unrouted))
+    assert sink_ids["start_stateful"] == sink_ids["start"]
+    assert dlq_rows["start"] == sorted(
+        [(i, "handled:rejected") for i in rejected]
+        + [(i, "handled:unknown batcher: nowhere") for i in unrouted]
     )
-    src = SpoolSource(
-        name="spool",
-        path=tmp_dirs["spool"],
-        schema_ddl=EVENTS_DDL,
-        ack_data_column="event_id",
-    )
-    with pytest.raises(ConfigError, match=hook):
-        Pipeline(cfg, src).start_stateful(spark)
-    assert "stateful-hooks-stateful" not in {q.name for q in spark.streams.active}
+    assert dlq_rows["start_stateful"] == dlq_rows["start"]
+    assert outcomes["start"] == {
+        ("default", "ok", None): 30,
+        ("default", "failed", "handled:rejected"): 6,
+        ("invalid", "failed", "handled:unknown batcher: nowhere"): 4,
+    }
+    assert outcomes["start_stateful"] == outcomes["start"]
+
+    stateful = calls["start_stateful"]
+    seen = [i for c in stateful for i in c["ids"]]
+    assert len(seen) == len(set(seen)) == 36
+    assert all(len(c["triggers"]) == 1 for c in stateful), stateful
+    assert all(c["sizes"] == [len(c["ids"])] for c in stateful), stateful
+
+
+def test_consumer_mode_acks_in_place_on_both_paths(spark, tmp_path):
+    """With no batchers the processor is terminal (topology.ex:
+    277-281): both start paths run no batcher and ack every message in
+    place, with no trigger and no batch size."""
+    acks = {}
+    for path in ("start", "start_stateful"):
+        d = {k: str(tmp_path / path / k) for k in ("spool", "sink", "ack", "ckpt")}
+        src = SpoolSource(
+            name="spool", path=d["spool"], schema_ddl=EVENTS_DDL,
+            ack_data_column="event_id",
+        )
+        src.push_messages(make_events(20), "000.jsonl")
+        cfg = TopologyConfig(
+            name=f"consumer-{path}",
+            order_by="event_id",
+            sinks={"default": SinkConfig(path=d["sink"])},
+            ack_log=SinkConfig(path=d["ack"]),
+            checkpoint_dir=d["ckpt"],
+        )
+        _drain(spark, Pipeline(cfg, src), path, d["ack"], 20)
+        acks[path] = sorted(
+            (int(r["ack_data"]), r["outcome"], r["trigger"], r["batch_size"])
+            for r in spark.read.parquet(d["ack"]).collect()
+        )
+    assert acks["start"] == [(i, "ok", None, None) for i in range(20)]
+    assert acks["start_stateful"] == acks["start"]
 
 
 def test_start_stateful_runs_handle_failed_before_the_dlq(spark, tmp_dirs):
